@@ -76,7 +76,9 @@ object BlockBuilder {
     c
   }
 
-  /** Consume the token stream into classified-ready blocks. */
+  /** Consume the token stream into classified-ready blocks. The
+    * reference for [[buildStreaming]], which production runs.
+    */
   def build(toks: Iterator[Html.Tok]): Vector[Block] = {
     val out = Vector.newBuilder[Block]
     val stack = ArrayBuffer.empty[String]
@@ -195,9 +197,10 @@ object BlockBuilder {
       }
     }
 
-    def startTag(name: String, selfClosing: Boolean): Unit = {
+    def startTag(tag: Html.Tag): Unit = {
+      val name = tag.name
       if (blockTags.contains(name)) flush()
-      if (!voidTags.contains(name) && !selfClosing) {
+      if (!voidTags.contains(name) && !tag.selfClosing) {
         stack += name
         pathLens += pathSb.length
         if (pathSb.length > 0) pathSb.append('/')
@@ -208,7 +211,8 @@ object BlockBuilder {
       }
     }
 
-    def endTag(name: String): Unit = {
+    override def endTag(tag: Html.Tag): Unit = {
+      val name = tag.name
       if (blockTags.contains(name)) flush()
       val idx = stack.lastIndexOf(name)
       if (idx >= 0) {
@@ -224,7 +228,7 @@ object BlockBuilder {
       }
     }
 
-    def text(s: String, from: Int, to: Int): Unit = {
+    override def text(s: String, from: Int, to: Int): Unit = {
       val b0 = buf.length
       Html.appendDecoded(buf, s, from, to)
       val b1 = buf.length

@@ -75,8 +75,4 @@ object Canonicalizer {
 
   /** Canonical block: NFC + collapse. */
   def block(s: String): String = collapse(nfc(s))
-
-  /** Join already-canonical blocks into the final document text. */
-  def joinBlocks(blocks: Seq[String]): String =
-    blocks.filter(_.nonEmpty).mkString("\n")
 }

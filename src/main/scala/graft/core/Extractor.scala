@@ -220,7 +220,4 @@ object Extractors {
   }
 
   def forType(contentType: String): Option[Extractor] = all.get(contentType)
-
-  /** Discovery surface as rows, for the `engines` metadata DataFrame. */
-  def describeAll: Seq[Map[String, String]] = all.values.map(_.describe).toSeq
 }

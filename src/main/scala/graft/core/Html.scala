@@ -16,12 +16,11 @@ import java.util.Locale
   */
 object Html {
 
-  sealed trait Tok
-  /** Attributes are scanned for tag-end correctness but not materialized:
-    * no downstream consumer reads them, and skipping the per-attribute
-    * tuple/list/entity-decode allocations measurably lifts 32-thread
-    * throughput (the kernel is allocation-bound at high core counts).
+  /** Tokens of the reference tokenizer [[tokenize]]. A start tag carries
+    * no attributes: the block builder reads none. Scanners that read
+    * attributes run on [[parse]], whose [[Tag]] view scans them lazily.
     */
+  sealed trait Tok
   final case class StartTag(name: String, selfClosing: Boolean) extends Tok
   final case class EndTag(name: String) extends Tok
   final case class Text(s: String) extends Tok
@@ -140,13 +139,10 @@ object Html {
     "agrave" -> "à", "ccedil" -> "ç", "ntilde" -> "ñ",
   )
 
-  /** Decode character references in a text run. Unknown entities pass
-    * through verbatim (tolerant, like browsers).
-    */
   /** Case-insensitive indexOf — raw-text close tags match ASCII
     * case-insensitively in browsers (`</SCRIPT>` closes `<script>`);
-    * shared by all scanners (tokenizer, Links, Meta) so the rule can
-    * never diverge between them.
+    * shared by [[Tag.bodyEnd]] and the reference tokenizer so the rule
+    * cannot diverge between them.
     */
   private[core] def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
     var i = math.max(0, from)
@@ -158,6 +154,9 @@ object Html {
     -1
   }
 
+  /** Decode character references in a text run. Unknown entities pass
+    * through verbatim (tolerant, like browsers).
+    */
   def decodeEntities(s: String): String = {
     if (s.indexOf('&') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
@@ -216,7 +215,9 @@ object Html {
 
   /** Tokenize decoded HTML. Emits StartTag/EndTag/Text; script, style,
     * comment, CDATA and doctype content never reach Text. Throws
-    * TimeoutException when the deadline expires.
+    * TimeoutException when the deadline expires. The independent
+    * reference for [[parse]]: no production code calls it, and
+    * KernelSpec and FuzzSpec pin the two equal.
     */
   def tokenize(html: String, deadline: Deadline = Deadline.unlimited): Iterator[Tok] =
     new Iterator[Tok] {
@@ -299,7 +300,9 @@ object Html {
                   val vend = s.indexOf(q, k + 1)
                   k = if (vend < 0) n else vend + 1
                 } else {
-                  while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>' && s.charAt(k) != '/') k += 1
+                  // unquoted value: '/' is an ordinary value character
+                  // (HTML5), so <a href=/docs/> opens an anchor
+                  while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>') k += 1
                 }
                 j = k
               }
@@ -360,38 +363,159 @@ object Html {
 
   // ------------------------------------------------------------- streaming
 
-  /** SAX-style event sink for [[parse]]. Text arrives as (s, from, to)
-    * index ranges into the decoded document — no per-run substring — with
-    * entities NOT yet decoded (route through [[appendDecoded]]).
+  /** One start or end tag as [[parse]] reports it: a view the parser
+    * reuses for the whole document, so reporting a tag allocates nothing
+    * beyond its lowercase name. `start` is the offset of the tag's '<',
+    * `end` the offset just past its '>' (the document length when the
+    * tag runs to EOF). Attributes are not materialized: [[attr]] rescans
+    * the recorded attribute range only when a sink asks, so the text
+    * kernel, which never asks, pays nothing for them.
     */
-  trait Sink {
-    def startTag(name: String, selfClosing: Boolean): Unit
-    def endTag(name: String): Unit
-    def text(s: String, from: Int, to: Int): Unit
+  final class Tag private[Html] (s: String) {
+    private var nm: String = null
+    private var sc = false
+    private var st = 0
+    private var en = 0
+    private var attrFrom = -1 // just past the name; -1 for an end tag
+    private var vFrom = 0     // value range of the attribute scanAttrs
+    private var vTo = 0       // stopped at; vFrom < 0 = valueless
+
+    def name: String = nm
+    def selfClosing: Boolean = sc
+    def start: Int = st
+    def end: Int = en
+    private[Html] def isEnd: Boolean = attrFrom < 0
+
+    /** First occurrence of attribute `name` (lowercase; matched ASCII
+      * case-insensitively), entity-decoded; "" if it has no value, null
+      * if absent (always null on an end tag).
+      */
+    def attr(name: String): String =
+      if (isEnd || scanAttrs(name) >= 0) null
+      else if (vFrom < 0) ""
+      else decodeEntities(s.substring(vFrom, vTo))
+
+    /** Where this element's body would end if its content were raw text:
+      * the first `</name` at or after [[end]] (ASCII case-insensitive),
+      * or the document length when there is none. [[parse]] skips
+      * script/style/textarea/noscript bodies by this rule; a sink may
+      * apply it to any element (Meta reads `<title>` as RCDATA).
+      */
+    def bodyEnd: Int = {
+      val k = indexOfIgnoreCase(s, "</" + nm, en)
+      if (k < 0) s.length else k
+    }
+
+    /** Offset just past the close tag that starts at `bodyEnd`. */
+    def closeEnd(bodyEnd: Int): Int = {
+      val gt = s.indexOf('>', bodyEnd + 2 + nm.length)
+      if (gt < 0) s.length else gt + 1
+    }
+
+    private[Html] def load(name: String, lt: Int, nameEnd: Int, closing: Boolean): Unit = {
+      nm = name
+      st = lt
+      sc = false
+      if (closing) {
+        attrFrom = -1
+        val gt = s.indexOf('>', nameEnd)
+        en = if (gt < 0) s.length else gt + 1
+      } else {
+        attrFrom = nameEnd
+        en = scanAttrs(null)
+      }
+    }
+
+    /** The close tag the parser consumed after a raw-text body. */
+    private[Html] def loadClose(bodyEnd: Int): Unit = {
+      en = closeEnd(bodyEnd)
+      st = bodyEnd
+      sc = false
+      attrFrom = -1
+    }
+
+    /** The one attribute state machine. Scans from `attrFrom`; returns
+      * the offset past the tag's end ('>', "/>" or EOF), setting
+      * selfClosing when `want` is null, or -1 at the first attribute
+      * named `want` with its value range in vFrom/vTo. Quoted values run
+      * to the matching quote; unquoted values end at whitespace or '>'
+      * ('/' is an ordinary value character, as in HTML5); any other
+      * character that cannot start a name is skipped.
+      */
+    private def scanAttrs(want: String): Int = {
+      val n = s.length
+      var j = attrFrom
+      while (true) {
+        while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
+        if (j >= n) return n
+        val ch = s.charAt(j)
+        if (ch == '>') return j + 1
+        if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') {
+          if (want == null) sc = true
+          return j + 2
+        }
+        if (isNameStart(ch)) {
+          val a = j
+          while (j < n && isNameChar(s.charAt(j))) j += 1
+          val hit = want != null && j - a == want.length &&
+            s.regionMatches(true, a, want, 0, want.length)
+          var k = j
+          while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
+          if (k < n && s.charAt(k) == '=') {
+            k += 1
+            while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
+            if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
+              val q = s.indexOf(s.charAt(k), k + 1)
+              vFrom = k + 1
+              vTo = if (q < 0) n else q
+              j = if (q < 0) n else q + 1
+            } else {
+              vFrom = k
+              while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>') k += 1
+              vTo = k
+              j = k
+            }
+          } else vFrom = -1
+          if (hit) return -1
+        } else j += 1
+      }
+      n // unreachable
+    }
   }
 
-  /** Streaming equivalent of [[tokenize]]: same token boundaries, same
-    * raw-text-element skipping, but zero per-token allocation (no Tok
-    * objects, no text substrings). [[tokenize]] remains the reference
-    * implementation; KernelSpec pins their equivalence. The kernel is
-    * allocation/bandwidth-bound at 32 threads, and tokenizer garbage was
-    * the largest remaining per-document source.
+  /** SAX-style event sink for [[parse]]. Tags arrive as the parser's
+    * reused [[Tag]] view (read it inside the callback only). Text arrives
+    * as (s, from, to) index ranges into the decoded document — no per-run
+    * substring — with entities NOT yet decoded (route through
+    * [[appendDecoded]]).
+    */
+  trait Sink {
+    def startTag(tag: Tag): Unit
+    def endTag(tag: Tag): Unit = ()
+    def text(s: String, from: Int, to: Int): Unit = ()
+  }
+
+  /** The HTML tag grammar every scanner in `core` runs on: same token
+    * boundaries and raw-text-element skipping as [[tokenize]], but zero
+    * per-token allocation (no Tok objects, no text substrings).
+    * [[tokenize]] remains the independent reference; KernelSpec and
+    * FuzzSpec pin their equivalence. The kernel is allocation/bandwidth-
+    * bound at 32 threads, and tokenizer garbage was the largest
+    * remaining per-document source.
     */
   def parse(html: String, sink: Sink, deadline: Deadline = Deadline.unlimited): Unit = {
     val s = html
     val n = s.length
+    val tag = new Tag(s)
     var i = 0
-    var tagName: String = null   // null = no tag at this position
-    var tagClosing = false
-    var tagSelfClosing = false
+    var isTag = false
 
-    // Scan one tag starting at '<'; set tagName/tagClosing/tagSelfClosing;
-    // return the position after the tag. Mirrors the Iterator tokenizer's
-    // parseTag exactly (KernelSpec pins the equivalence).
+    // Scan the construct at '<' and return the position after it. A
+    // start or end tag is loaded into `tag` and sets isTag; a comment,
+    // CDATA section, declaration or PI does not, nor does a '<' that
+    // opens nothing (which returns lt + 1).
     def parseTag(lt: Int): Int = {
-      tagName = null
-      tagClosing = false
-      tagSelfClosing = false
+      isTag = false
       var j = lt + 1
       if (j >= n) return lt + 1
       val c = s.charAt(j)
@@ -416,71 +540,33 @@ object Html {
       if (j >= n || !isNameStart(s.charAt(j))) return lt + 1 // literal '<'
       val nameStart = j
       while (j < n && isNameChar(s.charAt(j))) j += 1
-      val name = s.substring(nameStart, j).toLowerCase(Locale.ROOT)
-      if (closing) {
-        val end = s.indexOf('>', j)
-        tagName = name
-        tagClosing = true
-        return if (end < 0) n else end + 1
-      }
-      var selfClosing = false
-      var done = false
-      while (!done) {
-        while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-        if (j >= n) { done = true }
-        else {
-          val ch = s.charAt(j)
-          if (ch == '>') { j += 1; done = true }
-          else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') { selfClosing = true; j += 2; done = true }
-          else if (isNameStart(ch)) {
-            while (j < n && isNameChar(s.charAt(j))) j += 1
-            var k = j
-            while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-            if (k < n && s.charAt(k) == '=') {
-              k += 1
-              while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-              if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
-                val q = s.charAt(k)
-                val vend = s.indexOf(q, k + 1)
-                k = if (vend < 0) n else vend + 1
-              } else {
-                while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>' && s.charAt(k) != '/') k += 1
-              }
-              j = k
-            }
-          } else j += 1
-        }
-      }
-      tagName = name
-      tagSelfClosing = selfClosing
-      j
+      tag.load(s.substring(nameStart, j).toLowerCase(Locale.ROOT), lt, j, closing)
+      isTag = true
+      tag.end
     }
 
     while (i < n) {
       if (deadline.expired()) throw new TimeoutException
       if (s.charAt(i) == '<') {
         val next = parseTag(i)
-        if (tagName == null) {
+        if (!isTag) {
           if (next == i + 1) sink.text(s, i, i + 1) // literal '<'
           // else: comment/doctype/PI — consumed silently
           i = next
         } else {
           i = next
-          if (tagClosing) sink.endTag(tagName)
-          else if (!tagSelfClosing &&
-            (tagName == "script" || tagName == "style" || tagName == "textarea" || tagName == "noscript")) {
-            // raw-text element: emit start, skip content, emit end
-            val name = tagName
-            sink.startTag(name, selfClosing = false)
-            val close = "</" + name
-            val k = Html.indexOfIgnoreCase(s, close, i)
-            if (k < 0) i = n
-            else {
-              val gt = s.indexOf('>', k + close.length)
-              i = if (gt < 0) n else gt + 1
+          if (tag.isEnd) sink.endTag(tag)
+          else {
+            sink.startTag(tag)
+            val name = tag.name
+            if (!tag.selfClosing &&
+              (name == "script" || name == "style" || name == "textarea" || name == "noscript")) {
+              // raw-text element: skip the body, report its close tag
+              tag.loadClose(tag.bodyEnd)
+              i = tag.end
+              sink.endTag(tag)
             }
-            sink.endTag(name)
-          } else sink.startTag(tagName, tagSelfClosing)
+          }
         }
       } else {
         val lt = s.indexOf('<', i)

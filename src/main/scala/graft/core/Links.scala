@@ -5,14 +5,11 @@ package graft.core
   * in document order. Feeds host-graph analytics (link-based curation,
   * host ranking) the way the text kernel feeds the corpus.
   *
-  * A dedicated scanner rather than a mode of [[Html.parse]]: the text
-  * kernel deliberately never materializes attributes (Html.scala:20-24 —
-  * it is allocation-bound at 32 threads), and outlink extraction is the
-  * one consumer that needs them. Structural rules mirror the tokenizer
-  * exactly (comments/CDATA/doctype/PI consumed silently, raw-text elements
-  * skipped wholesale, a '<' that opens no tag is literal text, quote-aware
-  * attribute scanning), so both views of a document agree on what is
-  * markup.
+  * A sink on [[Html.parse]], the grammar the text kernel runs on, so both
+  * views of a document agree on what is markup (comments/CDATA/doctype/
+  * PI consumed silently, raw-text elements skipped wholesale, a '<' that
+  * opens no tag is literal text). Only `<a>` and `<img>` tags pay for
+  * attribute scanning, through [[Html.Tag.attr]].
   *
   * Anchor semantics: text runs between `<a href=...>` and `</a>`
   * (entity-decoded, [[Canonicalizer.block]]-canonicalized); a new `<a>`
@@ -28,12 +25,17 @@ object Links {
     outlinksOf(Html.decode(html), deadline)
 
   def outlinksOf(s: String, deadline: Html.Deadline = Html.Deadline.unlimited): Vector[Link] = {
-    val n = s.length
+    val sink = new OutlinkSink
+    Html.parse(s, sink, deadline)
+    sink.emit() // EOF closes an open anchor
+    sink.out.result()
+  }
+
+  private final class OutlinkSink extends Html.Sink {
     val out = Vector.newBuilder[Link]
-    val anchor = new java.lang.StringBuilder(64)
-    var inA = false
-    var href: String = null
-    var i = 0
+    private val anchor = new java.lang.StringBuilder(64)
+    private var inA = false
+    private var href: String = null
 
     def emit(): Unit = {
       if (inA && href != null && href.nonEmpty)
@@ -43,128 +45,17 @@ object Links {
       anchor.setLength(0)
     }
 
-    def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-    def isNameChar(c: Char) =
-      isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':' || c == '_'
-
-    // Parse one start tag's attributes from position j (just past the tag
-    // name); if capture, record the href value (entity-decoded). Returns
-    // the position after '>' and sets lastHref/lastSelfClosing.
-    var lastHref: String = null
-    var lastSelfClosing = false
-    def parseAttrs(j0: Int, capture: Boolean): Int = {
-      lastHref = null
-      lastSelfClosing = false
-      var j = j0
-      var done = false
-      while (!done) {
-        while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-        if (j >= n) { done = true }
-        else {
-          val ch = s.charAt(j)
-          if (ch == '>') { j += 1; done = true }
-          else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') { lastSelfClosing = true; j += 2; done = true }
-          else if (isNameStart(ch)) {
-            val aStart = j
-            while (j < n && isNameChar(s.charAt(j))) j += 1
-            val aName = s.substring(aStart, j).toLowerCase(java.util.Locale.ROOT)
-            var k = j
-            while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-            if (k < n && s.charAt(k) == '=') {
-              k += 1
-              while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-              var vStart = k
-              var vEnd = k
-              if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
-                val q = s.charAt(k)
-                vStart = k + 1
-                val close = s.indexOf(q, k + 1)
-                vEnd = if (close < 0) n else close
-                k = if (close < 0) n else close + 1
-              } else {
-                // unquoted value: '/' is an ordinary value character here
-                // (HTML5 unquoted-attribute-value state) — href=/path is
-                // common; only whitespace or '>' ends the value
-                while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>') k += 1
-                vEnd = k
-              }
-              if (capture && aName == "href" && lastHref == null)
-                lastHref = Html.decodeEntities(s.substring(vStart, vEnd))
-              j = k
-            }
-          } else j += 1
-        }
-      }
-      j
+    def startTag(t: Html.Tag): Unit = if (t.name == "a") {
+      emit() // implicit close of any open anchor
+      val h = t.attr("href")
+      if (!t.selfClosing) { inA = true; href = h }
+      else if (h != null && h.nonEmpty) out += Link(h, "") // <a href=... /> has no text
     }
 
-    while (i < n) {
-      if (deadline.expired()) throw new Html.TimeoutException
-      if (s.charAt(i) == '<') {
-        var j = i + 1
-        if (j >= n) { if (inA) anchor.append('<'); i = n }
-        else {
-          val c = s.charAt(j)
-          if (c == '!') {
-            if (s.startsWith("<!--", i)) {
-              val end = s.indexOf("-->", i + 4)
-              i = if (end < 0) n else end + 3
-            } else if (s.regionMatches(true, i, "<![CDATA[", 0, 9)) {
-              val end = s.indexOf("]]>", i + 9)
-              i = if (end < 0) n else end + 3
-            } else {
-              val end = s.indexOf('>', i + 1)
-              i = if (end < 0) n else end + 1
-            }
-          } else if (c == '?') {
-            val end = s.indexOf('>', i + 1)
-            i = if (end < 0) n else end + 1
-          } else {
-            val closing = c == '/'
-            if (closing) j += 1
-            if (j >= n || !isNameStart(s.charAt(j))) {
-              // literal '<' — text
-              if (inA) anchor.append('<')
-              i = i + 1
-            } else {
-              val nameStart = j
-              while (j < n && isNameChar(s.charAt(j))) j += 1
-              val name = s.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
-              if (closing) {
-                val end = s.indexOf('>', j)
-                if (name == "a") emit()
-                i = if (end < 0) n else end + 1
-              } else {
-                val after = parseAttrs(j, capture = name == "a")
-                i = after
-                if (name == "a") {
-                  emit() // implicit close of any open anchor
-                  if (!lastSelfClosing) { inA = true; href = lastHref }
-                  else if (lastHref != null && lastHref.nonEmpty)
-                    out += Link(lastHref, "") // <a href=... /> has no text
-                } else if (!lastSelfClosing &&
-                  (name == "script" || name == "style" || name == "textarea" || name == "noscript")) {
-                  val close = "</" + name
-                  val k = Html.indexOfIgnoreCase(s, close, i)
-                  if (k < 0) i = n
-                  else {
-                    val gt = s.indexOf('>', k + close.length)
-                    i = if (gt < 0) n else gt + 1
-                  }
-                }
-              }
-            }
-          }
-        }
-      } else {
-        val lt = s.indexOf('<', i)
-        val end = if (lt < 0) n else lt
-        if (inA && end > i) Html.appendDecoded(anchor, s, i, end)
-        i = end
-      }
-    }
-    emit()
-    out.result()
+    override def endTag(t: Html.Tag): Unit = if (t.name == "a") emit()
+
+    override def text(s: String, from: Int, to: Int): Unit =
+      if (inA) Html.appendDecoded(anchor, s, from, to)
   }
 
   /** One harvested `<img>`: src, the alt VALUE, and whether alt was
@@ -179,118 +70,25 @@ object Links {
     imagesOf(Html.decode(html), deadline)
 
   /** `<img>` harvest — the caption-mining scanner (alt text is the
-    * cheapest image-caption pair source on the web) sharing
-    * [[outlinksOf]]'s tag discipline: comments/CDATA skipped whole,
-    * script/style/textarea/noscript bodies are RAWTEXT (an `<img` inside
-    * a script string is NOT an image — pinned), attribute values quoted
-    * or unquoted, names ASCII-case-insensitive, entities decoded,
-    * first-wins per attribute. `img` is a void element, so self-closing
-    * and plain forms are identical.
+    * cheapest image-caption pair source on the web) on [[outlinksOf]]'s
+    * grammar: comments/CDATA skipped whole, script/style/textarea/
+    * noscript bodies are RAWTEXT (an `<img` inside a script string is
+    * NOT an image — pinned), end tags never emit (a stray `</img>` is
+    * not a phantom image), attribute values quoted or unquoted, names
+    * ASCII-case-insensitive, entities decoded, first-wins per
+    * attribute. `img` is a void element, so self-closing and plain
+    * forms are identical.
     */
   def imagesOf(s: String,
       deadline: Html.Deadline = Html.Deadline.unlimited): Vector[Img] = {
-    val n = s.length
     val out = Vector.newBuilder[Img]
-    var i = 0
-    def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-    def isNameChar(c: Char) =
-      isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':' || c == '_'
-    while (i < n) {
-      if (deadline.expired()) throw new Html.TimeoutException
-      val lt = s.indexOf('<', i)
-      if (lt < 0) i = n
-      else {
-        i = lt
-        var j = i + 1
-        if (j >= n) i = n
-        else if (s.charAt(j) == '!') {
-          if (s.startsWith("<!--", i)) {
-            val end = s.indexOf("-->", i + 4); i = if (end < 0) n else end + 3
-          } else if (s.regionMatches(true, i, "<![CDATA[", 0, 9)) {
-            val end = s.indexOf("]]>", i + 9); i = if (end < 0) n else end + 3
-          } else {
-            val end = s.indexOf('>', i + 1); i = if (end < 0) n else end + 1
-          }
-        } else if (s.charAt(j) == '?') {
-          val end = s.indexOf('>', i + 1); i = if (end < 0) n else end + 1
-        } else {
-          // end tags (</x>) share outlinksOf's discipline: skip to '>',
-          // never emit an Img, never enter rawtext mode — a stray
-          // `</img>` or `</script>` in crawled HTML must not fabricate a
-          // phantom image or swallow everything to the next closer.
-          val closing = s.charAt(j) == '/'
-          if (closing) j += 1
-          if (j >= n || !isNameStart(s.charAt(j))) i = j
-          else if (closing) {
-            val end = s.indexOf('>', j)
-            i = if (end < 0) n else end + 1
-          } else {
-            val nameStart = j
-            while (j < n && isNameChar(s.charAt(j))) j += 1
-            val name = s.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
-            // parse attrs (capture src/alt when this is an img)
-            var src: String = null; var alt: String = null; var hasAlt = false
-            var selfClosed = false
-            var done = false
-            while (!done) {
-              while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-              if (j >= n) done = true
-              else {
-                val ch = s.charAt(j)
-                if (ch == '>') { j += 1; done = true }
-                else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') {
-                  j += 2; done = true; selfClosed = true
-                } else if (isNameStart(ch)) {
-                  val aStart = j
-                  while (j < n && isNameChar(s.charAt(j))) j += 1
-                  val aName = s.substring(aStart, j)
-                    .toLowerCase(java.util.Locale.ROOT)
-                  var k = j
-                  while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-                  var vStart = -1; var vEnd = -1
-                  if (k < n && s.charAt(k) == '=') {
-                    k += 1
-                    while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-                    if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
-                      val q = s.charAt(k); vStart = k + 1
-                      val close = s.indexOf(q, k + 1)
-                      vEnd = if (close < 0) n else close
-                      k = if (close < 0) n else close + 1
-                    } else {
-                      vStart = k
-                      while (k < n && !Character.isWhitespace(s.charAt(k)) &&
-                        s.charAt(k) != '>') k += 1
-                      vEnd = k
-                    }
-                  } else vStart = -2 // attribute without a value
-                  if (name == "img") {
-                    val v = if (vStart >= 0)
-                      Html.decodeEntities(s.substring(vStart, vEnd)) else ""
-                    if (aName == "src" && src == null) src = v
-                    else if (aName == "alt" && !hasAlt) { hasAlt = true; alt = v }
-                  }
-                  j = k
-                } else j += 1
-              }
-            }
-            i = j
-            if (name == "img")
-              out += Img(if (src == null) "" else src,
-                if (alt == null) "" else alt, hasAlt)
-            else if (!selfClosed && (name == "script" || name == "style" ||
-              name == "textarea" || name == "noscript")) {
-              val close = "</" + name
-              val k = Html.indexOfIgnoreCase(s, close, i)
-              if (k < 0) i = n
-              else {
-                val gt = s.indexOf('>', k + close.length)
-                i = if (gt < 0) n else gt + 1
-              }
-            }
-          }
-        }
+    Html.parse(s, new Html.Sink {
+      def startTag(t: Html.Tag): Unit = if (t.name == "img") {
+        val src = t.attr("src")
+        val alt = t.attr("alt")
+        out += Img(if (src == null) "" else src, if (alt == null) "" else alt, alt != null)
       }
-    }
+    }, deadline)
     out.result()
   }
 }

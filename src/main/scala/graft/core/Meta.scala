@@ -8,14 +8,15 @@ package graft.core
   * page title carries document identity (`src/models/responses.py:60-69`);
   * here the fields are first-class columns.
   *
-  * Structural rules mirror [[Links.outlinksOf]] exactly: comments,
-  * CDATA, doctype and PIs are consumed silently; script/style/textarea/
-  * noscript bodies never leak; a `<` that opens no tag is literal text;
-  * nested inline markup inside `<h1>` contributes its text runs only.
-  * `<title>` is RCDATA per the HTML spec — nothing inside it opens a
-  * tag, everything up to the first `</title` is (entity-decoded) text.
-  * Both fields are [[Canonicalizer]]-canonicalized like every other
-  * text surface of the kernel. First occurrence wins for both.
+  * A sink on [[Html.parse]], so its markup rules are the kernel's:
+  * comments, CDATA, doctype and PIs are consumed silently; script/style/
+  * textarea/noscript bodies never leak; a `<` that opens no tag is
+  * literal text; nested inline markup inside `<h1>` contributes its text
+  * runs only. `<title>` is RCDATA per the HTML spec — nothing inside it
+  * opens a tag, everything up to the first `</title` is (entity-decoded)
+  * text ([[Html.Tag.bodyEnd]]). Both fields are
+  * [[Canonicalizer]]-canonicalized like every other text surface of the
+  * kernel. First occurrence wins for both.
   */
 object Meta {
 
@@ -25,122 +26,50 @@ object Meta {
     scan(Html.decode(html), deadline)
 
   def scan(s: String, deadline: Html.Deadline = Html.Deadline.unlimited): DocMeta = {
-    val n = s.length
-    var title: String = null
-    var h1: String = null
-    val buf = new java.lang.StringBuilder(64)
-    var inH1 = false
-    var i = 0
+    val sink = new MetaSink(s)
+    Html.parse(s, sink, deadline)
+    sink.result()
+  }
 
-    def closeH1(): Unit = {
+  private final class MetaSink(s: String) extends Html.Sink {
+    private var title: String = null
+    private var h1: String = null
+    private val buf = new java.lang.StringBuilder(64)
+    private var inH1 = false
+    // events starting before this offset lie inside a <title> element
+    // (its RCDATA body or close tag) and are text, not markup
+    private var titleEnd = 0
+
+    private def closeH1(): Unit = {
       if (inH1 && h1 == null) h1 = Canonicalizer.blockOf(buf)
       inH1 = false
       buf.setLength(0)
     }
 
-    def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-    def isNameChar(c: Char) =
-      isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':' || c == '_'
-
-    // Skip a start tag's attribute soup; returns position after '>' and
-    // whether the tag self-closed.
-    var lastSelfClosing = false
-    def skipAttrs(j0: Int): Int = {
-      lastSelfClosing = false
-      var j = j0
-      var done = false
-      while (!done) {
-        if (j >= n) { done = true }
-        else {
-          val ch = s.charAt(j)
-          if (ch == '>') { j += 1; done = true }
-          else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') { lastSelfClosing = true; j += 2; done = true }
-          else if (ch == '"' || ch == '\'') {
-            val close = s.indexOf(ch, j + 1)
-            j = if (close < 0) n else close + 1
-          } else j += 1
+    def startTag(t: Html.Tag): Unit = if (t.start >= titleEnd) {
+      if (t.name == "title" && !t.selfClosing) {
+        val k = t.bodyEnd
+        if (title == null) {
+          val tb = new java.lang.StringBuilder(k - t.end)
+          Html.appendDecoded(tb, s, t.end, k)
+          title = Canonicalizer.blockOf(tb)
         }
-      }
-      j
-    }
-
-    while (i < n) {
-      if (deadline.expired()) throw new Html.TimeoutException
-      if (s.charAt(i) == '<') {
-        var j = i + 1
-        if (j >= n) { if (inH1) buf.append('<'); i = n }
-        else {
-          val c = s.charAt(j)
-          if (c == '!') {
-            if (s.startsWith("<!--", i)) {
-              val end = s.indexOf("-->", i + 4)
-              i = if (end < 0) n else end + 3
-            } else if (s.regionMatches(true, i, "<![CDATA[", 0, 9)) {
-              val end = s.indexOf("]]>", i + 9)
-              i = if (end < 0) n else end + 3
-            } else {
-              val end = s.indexOf('>', i + 1)
-              i = if (end < 0) n else end + 1
-            }
-          } else if (c == '?') {
-            val end = s.indexOf('>', i + 1)
-            i = if (end < 0) n else end + 1
-          } else {
-            val closing = c == '/'
-            if (closing) j += 1
-            if (j >= n || !isNameStart(s.charAt(j))) {
-              if (inH1) buf.append('<')
-              i = i + 1
-            } else {
-              val nameStart = j
-              while (j < n && isNameChar(s.charAt(j))) j += 1
-              val name = s.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
-              if (closing) {
-                val end = s.indexOf('>', j)
-                if (name == "h1") closeH1()
-                i = if (end < 0) n else end + 1
-              } else {
-                val after = skipAttrs(j)
-                i = after
-                if (name == "title" && !lastSelfClosing) {
-                  // RCDATA: everything to the first </title is text
-                  val k = Html.indexOfIgnoreCase(s, "</title", i)
-                  val end = if (k < 0) n else k
-                  if (title == null) {
-                    val tb = new java.lang.StringBuilder(end - i)
-                    Html.appendDecoded(tb, s, i, end)
-                    title = Canonicalizer.blockOf(tb)
-                  }
-                  if (k < 0) i = n
-                  else {
-                    val gt = s.indexOf('>', k + 7)
-                    i = if (gt < 0) n else gt + 1
-                  }
-                } else if (name == "h1") {
-                  closeH1() // implicit close (browser: headings never nest)
-                  if (!lastSelfClosing) inH1 = true
-                } else if (!lastSelfClosing &&
-                  (name == "script" || name == "style" || name == "textarea" || name == "noscript")) {
-                  val close = "</" + name
-                  val k = Html.indexOfIgnoreCase(s, close, i)
-                  if (k < 0) i = n
-                  else {
-                    val gt = s.indexOf('>', k + close.length)
-                    i = if (gt < 0) n else gt + 1
-                  }
-                }
-              }
-            }
-          }
-        }
-      } else {
-        val lt = s.indexOf('<', i)
-        val end = if (lt < 0) n else lt
-        if (inH1 && end > i) Html.appendDecoded(buf, s, i, end)
-        i = end
+        titleEnd = t.closeEnd(k)
+      } else if (t.name == "h1") {
+        closeH1() // implicit close (browser: headings never nest)
+        if (!t.selfClosing) inH1 = true
       }
     }
-    closeH1() // EOF closes an open h1 (tolerant)
-    DocMeta(if (title == null) "" else title, if (h1 == null) "" else h1)
+
+    override def endTag(t: Html.Tag): Unit =
+      if (t.start >= titleEnd && t.name == "h1") closeH1()
+
+    override def text(s: String, from: Int, to: Int): Unit =
+      if (inH1 && from >= titleEnd) Html.appendDecoded(buf, s, from, to)
+
+    def result(): DocMeta = {
+      closeH1() // EOF closes an open h1 (tolerant)
+      DocMeta(if (title == null) "" else title, if (h1 == null) "" else h1)
+    }
   }
 }

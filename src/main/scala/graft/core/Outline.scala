@@ -27,9 +27,9 @@ import scala.collection.mutable.ArrayBuffer
   *     accumulating closes it implicitly (omitted-closer leniency,
   *     the [[Tables]] rule).
   *
-  * Title and body text are entity-decoded by the tokenizer and
-  * whitespace-normalized here; body text inside nested non-heading
-  * markup (b/a/span...) contributes its text, tags vanish.
+  * A sink on [[Html.parse]]. Title and body text are entity-decoded and
+  * whitespace-normalized; body text inside nested non-heading markup
+  * (b/a/span...) contributes its text, tags vanish.
   */
 object Outline {
 
@@ -102,24 +102,27 @@ object Outline {
       curPath = crumbs.reverse.map(_._2).mkString(" > ")
       openHeading = 0
     }
-    try {
-      Html.tokenize(html, deadline).foreach {
-        case Html.StartTag(n, false) if headingLevel(n) > 0 =>
-          closeHeading() // a heading inside a heading closes it implicitly
-          if (sawSection || body.length > 0) emitCurrent()
-          sawSection = true
-          openHeading = headingLevel(n)
-        case Html.EndTag(n) if headingLevel(n) > 0 && openHeading > 0 =>
-          closeHeading()
-        case Html.Text(s) =>
-          if (openHeading > 0) titleBuf.append(s) else body.append(s)
-        case Html.StartTag(n, _) if blockTags(n) =>
-          if (openHeading > 0) titleBuf.append(' ') else body.append(' ')
-        case Html.EndTag(n) if blockTags(n) =>
-          if (openHeading > 0) titleBuf.append(' ') else body.append(' ')
-        case _ => ()
+    def target = if (openHeading > 0) titleBuf else body
+    val sink = new Html.Sink {
+      def startTag(t: Html.Tag): Unit = {
+        val level = headingLevel(t.name)
+        if (level > 0) {
+          if (!t.selfClosing) {
+            closeHeading() // a heading inside a heading closes it implicitly
+            if (sawSection || body.length > 0) emitCurrent()
+            sawSection = true
+            openHeading = level
+          }
+        } else if (blockTags(t.name)) target.append(' ')
       }
-    } catch { case _: Html.TimeoutException => () } // partial outline is data
+      override def endTag(t: Html.Tag): Unit =
+        if (headingLevel(t.name) > 0) { if (openHeading > 0) closeHeading() }
+        else if (blockTags(t.name)) target.append(' ')
+      override def text(s: String, from: Int, to: Int): Unit =
+        Html.appendDecoded(target, s, from, to)
+    }
+    try Html.parse(html, sink, deadline)
+    catch { case _: Html.TimeoutException => () } // partial outline is data
     closeHeading() // unclosed heading at EOF keeps its title
     emitCurrent()
     out.toSeq

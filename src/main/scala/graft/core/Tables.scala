@@ -9,8 +9,8 @@ import scala.collection.mutable.ArrayBuffer
   * deliberately (markdown-ize, drop, or caption them) instead of
   * letting cell fragments smear into the prose stream.
   *
-  * Built on the same [[Html.tokenize]] stream as the kernel (one
-  * tokenizer, two consumers), with the leniency real tables demand:
+  * A sink on [[Html.parse]], the kernel's own grammar, with the
+  * leniency real tables demand:
   *
   *   - omitted `</td>` / `</tr>` close tags are LEGAL HTML — a new
   *     `<td>`/`<th>`/`<tr>` implicitly closes the open cell/row
@@ -25,12 +25,10 @@ import scala.collection.mutable.ArrayBuffer
   *   - text outside any open cell (directly inside `tr`/`table`) is
   *     dropped, as browsers foster it out of the table.
   *
-  * Cell text is entity-decoded by the tokenizer and whitespace-
-  * normalized here (trim + collapse runs) so the cell value is the
-  * rendered string, not the markup bytes. `colIdx` is the CELL ORDINAL
-  * within its row — colspan grid resolution would need attribute
-  * capture, which the shared tokenizer deliberately skips
-  * (Html.scala:20-24); documented drop.
+  * Cell text is entity-decoded and whitespace-normalized (trim +
+  * collapse runs) so the cell value is the rendered string, not the
+  * markup bytes. `colIdx` is the CELL ORDINAL within its row — colspan
+  * is not read, so there is no grid resolution; documented drop.
   *
   * Reference analog: hOCR/layout structure recovery
   * (/root/reference/src/services/ocr/dynamic_routes.py:188-251 returns
@@ -83,35 +81,39 @@ object Tables {
         c.inCell = false
       case _ => ()
     }
-    try {
-      Html.tokenize(html, deadline).foreach {
-        case Html.StartTag("table", false) =>
+    val sink = new Html.Sink {
+      def startTag(t: Html.Tag): Unit = if (!t.selfClosing) t.name match {
+        case "table" =>
           // an open outer cell pauses; the new context owns all text
           stack = new Ctx(nextTable) :: stack
           nextTable += 1
-        case Html.EndTag("table") if stack.nonEmpty =>
-          flushCell()
-          stack = stack.tail
-        case Html.StartTag("tr", false) if stack.nonEmpty =>
+        case "tr" if stack.nonEmpty =>
           flushCell()
           val c = stack.head
           c.row += 1; c.col = -1
-        case Html.StartTag(n @ ("td" | "th"), false) if stack.nonEmpty =>
+        case n @ ("td" | "th") if stack.nonEmpty =>
           flushCell()
           val c = stack.head
           if (c.row < 0) c.row = 0 // td with no tr: implicit first row
           c.col += 1
           c.inCell = true
           c.header = n == "th"
-        case Html.EndTag("td" | "th" | "tr") => flushCell()
-        case Html.Text(s) =>
-          stack match {
-            case c :: _ if c.inCell => c.sb.append(s)
-            case _ => () // fostered text: outside any cell, dropped
-          }
         case _ => ()
       }
-    } catch { case _: Html.TimeoutException => () } // partial grid is data
+      override def endTag(t: Html.Tag): Unit = t.name match {
+        case "table" if stack.nonEmpty =>
+          flushCell()
+          stack = stack.tail
+        case "td" | "th" | "tr" => flushCell()
+        case _ => ()
+      }
+      override def text(s: String, from: Int, to: Int): Unit = stack match {
+        case c :: _ if c.inCell => Html.appendDecoded(c.sb, s, from, to)
+        case _ => () // fostered text: outside any cell, dropped
+      }
+    }
+    try Html.parse(html, sink, deadline)
+    catch { case _: Html.TimeoutException => () } // partial grid is data
     while (stack.nonEmpty) { flushCell(); stack = stack.tail } // EOF leniency
     out.toSeq
   }

@@ -37,7 +37,8 @@ class FuzzSpec extends AnyFunSuite {
     tagNames.map(t => s"</$t>"),
     tagNames.map(t => s"<$t class='x' data-k=\"v\">"),
     tagNames.map(t => s"<$t/>"),
-    Gen.oneOf("<p attr=unquoted>", "<div =junk>", "<a href='un closed>", "<b q=\"no-close>"),
+    Gen.oneOf("<p attr=unquoted>", "<div =junk>", "<a href='un closed>", "<b q=\"no-close>",
+      "<a href=/d/>", "<h1 title=it's>", "<p x=a/b=\"c>d\">"),
     Gen.oneOf("éß€", "中文", "é", "﻿"),
   )
 
@@ -183,7 +184,8 @@ class FuzzSpec extends AnyFunSuite {
   private val attrFragment: Gen[String] = Gen.oneOf(
     fragment,
     Gen.oneOf("<a href='x'>", "<a href=\"/y z\">lnk</a>", "<a href=un>", "<a>",
-      "</a>", "<A HREF='UP'>", "<a href='' rel=nofollow>", "<a href='#f'"),
+      "</a>", "<A HREF='UP'>", "<a href='' rel=nofollow>", "<a href='#f'",
+      "<a href=/d/>", "<h1 title=it's>", "<p x=a/b=\"c>d\">"),
     Gen.oneOf("<img src='i.png'>", "<img src=j alt='k'>", "<img alt=only>",
       "</img>", "<IMG SRC=c/>", "<img", "<imgx src=no>"),
     Gen.oneOf("<link rel=canonical href='/c'>", "<link rel='alternate' hreflang=de href=/de>",

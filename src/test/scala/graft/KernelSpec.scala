@@ -50,6 +50,15 @@ class KernelSpec extends AnyFunSuite {
     assert(blocks.map(_.text) == Vector("a < b", "second para"))
   }
 
+  test("unquoted attribute values keep '/': <a href=/docs/> opens an anchor") {
+    val unquoted = "<p>see <a href=/docs/>docs menu here</a> now read this</p>"
+    val quoted = "<p>see <a href=\"/docs/\">docs menu here</a> now read this</p>"
+    val viaStream = BlockBuilder.buildStreaming(unquoted, Html.Deadline.unlimited)
+    assert(viaStream == BlockBuilder.buildStreaming(quoted, Html.Deadline.unlimited))
+    assert(BlockBuilder.build(Html.tokenize(unquoted)) == viaStream)
+    assert(viaStream.map(_.linkWords) == Vector(3))
+  }
+
   test("charset detection: meta + bom") {
     assert(Html.detectCharset("<meta charset=\"iso-8859-1\">".getBytes("ascii")).name()
       .toLowerCase.contains("8859"))

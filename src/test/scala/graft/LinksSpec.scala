@@ -108,6 +108,8 @@ class LinksSpec extends AnyFunSuite {
       (("ok", "")))
     // missing fields resolve to empty strings
     assert(m("<p>plain</p>") == (("", "")))
+    // a bare apostrophe in an unquoted value opens no quoted run
+    assert(m("<h1 title=it's>Head</h1><h1>x</h1>") == (("", "Head")))
   }
 
   test("meta: generator families yield template titles and h1") {
