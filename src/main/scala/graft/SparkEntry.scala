@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.datapipe.{RelationalOps, TrainingOps}
 import graft.gen.PagesGen
@@ -25,6 +25,52 @@ object SparkEntry {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
+
+  /** A doc's synthetic host, PagesGen.hostOf's formula: 30% on one big
+    * host, the rest over 97 small ones (the oracles spell it in SQL).
+    */
+  private val hostCol: Column =
+    when(col("doc_id") % 10 < 3, lit("big.example.com"))
+      .otherwise(concat(lit("h"), col("doc_id") % 97, lit(".example.com")))
+
+  /** `https://<host>/doc/<doc_id>` — the oracles' `urlExpr`. */
+  private val urlCol: Column = concat(lit("https://"), hostCol, lit("/doc/"), col("doc_id"))
+
+  /** [[TrainingOps.syntheticHttpPayload]]'s six response kinds as a
+    * Column, for the fixtures (m7, m10) that wrap them in WARC records.
+    */
+  private val httpPayloadCol: Column = {
+    val id = col("doc_id")
+    when(id % 6 === 0, concat(
+        lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\nServer: srv"),
+        id % 9, lit("\r\n\r\n<html>doc "), id, lit("</html>")))
+      .when(id % 6 === 1, concat(
+        lit("HTTP/1.1 301 Moved Permanently\r\nLocation: https://h"),
+        id % 97, lit(".example.com/doc/"), id, lit("\r\n\r\n")))
+      .when(id % 6 === 2, concat(
+        lit("HTTP/1.0 404 Not Found\nContent-Type: text/plain\n\nmissing "), id))
+      .when(id % 6 === 3, concat(
+        lit("HTTP/1.1 200 OK\r\nCONTENT-TYPE: application/json\r\nContent-Type: text/xml\r\n\r\n{\"doc\": "),
+        id, lit("}")))
+      .when(id % 6 === 4, concat(
+        lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\nX-Doc: "), id))
+      .otherwise(concat(lit("not-http doc "), id, lit("\r\n\r\nbody")))
+  }
+
+  /** One synthetic payload per doc, built from its doc_id alone — so an
+    * m-family oracle re-derives every byte of it arithmetically.
+    */
+  private def payloads(s: SparkSession, dir: String,
+      fixture: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    docs(s, dir).select(col("doc_id")).as[Long]
+      .map(id => (id, fixture(id))).toDF("doc_id", "payload")
+  }
+
+  /** An m-family payload walker run over its fixture's payloads. */
+  private def walked(walk: (SparkSession, DataFrame) => DataFrame,
+      fixture: Long => Array[Byte]): (SparkSession, String) => DataFrame =
+    (s, dir) => walk(s, payloads(s, dir, fixture))
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
@@ -333,9 +379,7 @@ object SparkEntry {
     */
   private def mirrorAug(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
-      when(col("doc_id") % 101 === 9, lit("h7.example.com"))
-        .when(col("doc_id") % 10 < 3, lit("big.example.com"))
-        .otherwise(concat(lit("h"), col("doc_id") % 97, lit(".example.com")))
+      when(col("doc_id") % 101 === 9, lit("h7.example.com")).otherwise(hostCol)
         .as("host"),
       when(col("doc_id") % 101 === 9, lit("republished notice"))
         .when(col("doc_id") % 5 === 4,
@@ -810,10 +854,6 @@ object SparkEntry {
     // — the conjunction, both thresholds, and precedence all oracle-pinned
     "e50_soft404" -> ((s, dir) => {
       val id = col("doc_id")
-      val url = concat(lit("https://"),
-        when(id % 10 < 3, lit("big.example.com"))
-          .otherwise(concat(lit("h"), id % 97, lit(".example.com"))),
-        lit("/doc/"), id)
       val status = when(id % 7 === 0, lit(404))
         .when(id % 7 === 1, lit(410)).otherwise(lit(200))
       val body = when(id % 5 === 3,
@@ -821,7 +861,7 @@ object SparkEntry {
         .when(id % 5 === 4, concat(lit("Sorry, this article is no longer available. "), col("text")))
         .otherwise(col("text"))
       graft.datapipe.GraphOps.soft404(
-        docs(s, dir).select(url.as("url"), status.as("http_status"), body.as("body")))
+        docs(s, dir).select(urlCol.as("url"), status.as("http_status"), body.as("body")))
     }),
     "d4_dedup_jaccard" -> ((s, dir) => TrainingOps.jaccardVerify(docs(s, dir))),
     // extraction-yield (content-to-markup) ratio per family-A page:
@@ -1119,11 +1159,8 @@ object SparkEntry {
     // domain at EVERY scale, so the phantom never collides with a real
     // shard (missing_shard)
     "p21_tensor_shard_audit" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticSafetensorsPayload(id)))
-        .toDF("doc_id", "payload")
-      val headers = TrainingOps.safetensorsHeaders(s, payloads)
+      val headers = TrainingOps.safetensorsHeaders(s,
+        payloads(s, dir, TrainingOps.syntheticSafetensorsPayload))
       val d = docs(s, dir).select(col("doc_id"),
         (col("doc_id") % 6).as("f"),
         (lit(2) + col("doc_id") % 7).cast("long").as("k0"),
@@ -1573,12 +1610,10 @@ object SparkEntry {
     // canonical key then feeds exact dedup / the bloom seen-set
     "e32_url_canonical" -> ((s, dir) => {
       val d = docs(s, dir)
-      val host = when(col("doc_id") % 10 < 3, lit("big.example.com"))
-        .otherwise(concat(lit("h"), col("doc_id") % 97, lit(".example.com")))
       val raw = concat(
         lit("https://"),
         when(col("doc_id") % 6 === 2, lit("www.")).otherwise(lit("")),
-        host, lit("/page/"), col("doc_id") % 50,
+        hostCol, lit("/page/"), col("doc_id") % 50,
         when(col("doc_id") % 3 === 0,
           concat(lit("?utm_source=news&utm_campaign=c"), col("doc_id") % 7))
           .when(col("doc_id") % 3 === 1,
@@ -1682,10 +1717,6 @@ object SparkEntry {
     "e52_canonical_clusters" -> ((s, dir) => {
       import s.implicits._
       val id = col("doc_id")
-      val url = concat(lit("https://"),
-        when(id % 10 < 3, lit("big.example.com"))
-          .otherwise(concat(lit("h"), id % 97, lit(".example.com"))),
-        lit("/doc/"), id)
       val html = when(id % 5 === 0, concat(
           lit("<html><head><link rel=\"canonical\" href=\"https://c.example.com/p"),
           id % 50, lit("\"></head><body>x</body></html>")))
@@ -1699,7 +1730,7 @@ object SparkEntry {
         .otherwise(concat(
           lit("<html><head><!-- <link rel=\"canonical\" href=\"https://no.example.com\"> -->" +
             "</head><body>doc "), id, lit("</body></html>")))
-      val pages = docs(s, dir).select(url.as("url"), html.as("html"))
+      val pages = docs(s, dir).select(urlCol.as("url"), html.as("html"))
         .as[(String, String)]
         .map { case (u, h) =>
           (u, Option(graft.core.Directives.scan(h).canonical))
@@ -2397,12 +2428,8 @@ object SparkEntry {
     // the byte-walking parser is checked against independent arithmetic
     "m3_warc_records" -> ((s, dir) => {
       val d = docs(s, dir)
-      val url = concat(lit("https://"),
-        when(col("doc_id") % 10 < 3, lit("big.example.com"))
-          .otherwise(concat(lit("h"), col("doc_id") % 97, lit(".example.com"))),
-        lit("/doc/"), col("doc_id"))
       val rec = concat(
-        lit("WARC/1.0\r\nWARC-Target-URI: "), url,
+        lit("WARC/1.0\r\nWARC-Target-URI: "), urlCol,
         lit("\r\nContent-Length: "), octet_length(col("text")),
         lit("\r\n\r\n"), col("text"), lit("\r\n\r\n"))
       val segs = d
@@ -2418,41 +2445,17 @@ object SparkEntry {
     // oracle derives format/dims/status ARITHMETICALLY from doc_id, so
     // a MATCH means the byte builder and the byte parser agree through
     // the BE/LE encodings and the JPEG marker walk
-    "m4_image_dims" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticImagePayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.imageDims(s, payloads)
-    }),
+    "m4_image_dims" -> walked(TrainingOps.imageDims, TrainingOps.syntheticImagePayload),
     // the fused Common-Crawl reader: WARC record walk + in-place HTTP
     // parse per record, one pass — segments synthesized with the m6
     // payload kinds wrapped in m3's record format
     "m7_warc_http" -> ((s, dir) => {
       val d = docs(s, dir)
       val id = col("doc_id")
-      val url = concat(lit("https://"),
-        when(id % 10 < 3, lit("big.example.com"))
-          .otherwise(concat(lit("h"), id % 97, lit(".example.com"))),
-        lit("/doc/"), id)
-      val payload = when(id % 6 === 0, concat(
-          lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\nServer: srv"),
-          id % 9, lit("\r\n\r\n<html>doc "), id, lit("</html>")))
-        .when(id % 6 === 1, concat(
-          lit("HTTP/1.1 301 Moved Permanently\r\nLocation: https://h"),
-          id % 97, lit(".example.com/doc/"), id, lit("\r\n\r\n")))
-        .when(id % 6 === 2, concat(
-          lit("HTTP/1.0 404 Not Found\nContent-Type: text/plain\n\nmissing "), id))
-        .when(id % 6 === 3, concat(
-          lit("HTTP/1.1 200 OK\r\nCONTENT-TYPE: application/json\r\nContent-Type: text/xml\r\n\r\n{\"doc\": "),
-          id, lit("}")))
-        .when(id % 6 === 4, concat(
-          lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\nX-Doc: "), id))
-        .otherwise(concat(lit("not-http doc "), id, lit("\r\n\r\nbody")))
       val rec = concat(
-        lit("WARC/1.0\r\nWARC-Target-URI: "), url,
-        lit("\r\nContent-Length: "), octet_length(payload),
-        lit("\r\n\r\n"), payload, lit("\r\n\r\n"))
+        lit("WARC/1.0\r\nWARC-Target-URI: "), urlCol,
+        lit("\r\nContent-Length: "), octet_length(httpPayloadCol),
+        lit("\r\n\r\n"), httpPayloadCol, lit("\r\n\r\n"))
       val segs = d
         .select((id % 16).as("segment_id"),
           struct(col("doc_id"), rec.as("rec")).as("sr"))
@@ -2464,13 +2467,7 @@ object SparkEntry {
     // HTTP response parsing over synthesized record payloads: status
     // line, routed headers (Content-Type media type, Location), body
     // addressed without copying; oracle fully arithmetic from doc_id
-    "m6_http_responses" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticHttpPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.httpResponses(s, payloads)
-    }),
+    "m6_http_responses" -> walked(TrainingOps.httpResponses, TrainingOps.syntheticHttpPayload),
     // THE complete Common-Crawl reader: gzip member -> inflate -> WARC
     // header -> HTTP parse, one typed pass. Non-WARC member content
     // does NOT halt the segment (members delimit records); only gzip
@@ -2478,28 +2475,10 @@ object SparkEntry {
     "m10_cc_reader" -> ((s, dir) => {
       import s.implicits._
       val id = col("doc_id")
-      val url = concat(lit("https://"),
-        when(id % 10 < 3, lit("big.example.com"))
-          .otherwise(concat(lit("h"), id % 97, lit(".example.com"))),
-        lit("/doc/"), id)
-      val payload = when(id % 6 === 0, concat(
-          lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\nServer: srv"),
-          id % 9, lit("\r\n\r\n<html>doc "), id, lit("</html>")))
-        .when(id % 6 === 1, concat(
-          lit("HTTP/1.1 301 Moved Permanently\r\nLocation: https://h"),
-          id % 97, lit(".example.com/doc/"), id, lit("\r\n\r\n")))
-        .when(id % 6 === 2, concat(
-          lit("HTTP/1.0 404 Not Found\nContent-Type: text/plain\n\nmissing "), id))
-        .when(id % 6 === 3, concat(
-          lit("HTTP/1.1 200 OK\r\nCONTENT-TYPE: application/json\r\nContent-Type: text/xml\r\n\r\n{\"doc\": "),
-          id, lit("}")))
-        .when(id % 6 === 4, concat(
-          lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\nX-Doc: "), id))
-        .otherwise(concat(lit("not-http doc "), id, lit("\r\n\r\nbody")))
       val rec = when(id % 13 === 6, lit("this member is not a warc record"))
-        .otherwise(concat(lit("WARC/1.0\r\nWARC-Target-URI: "), url,
-          lit("\r\nContent-Length: "), octet_length(payload),
-          lit("\r\n\r\n"), payload, lit("\r\n\r\n")))
+        .otherwise(concat(lit("WARC/1.0\r\nWARC-Target-URI: "), urlCol,
+          lit("\r\nContent-Length: "), octet_length(httpPayloadCol),
+          lit("\r\n\r\n"), httpPayloadCol, lit("\r\n\r\n")))
       val segs = docs(s, dir)
         .select((id % 16).as("sid"), id.as("doc_id"), rec.as("rec"))
         .as[(Long, Long, String)]
@@ -2521,13 +2500,7 @@ object SparkEntry {
     // scalar and (n,) forms), short-data and truncated-header families;
     // oracle fully arithmetic from doc_id (header lengths re-derived
     // from the same dict-literal text + 64-byte alignment rule)
-    "m30_npy_headers" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticNpyPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.npyHeaders(s, payloads)
-    }),
+    "m30_npy_headers" -> walked(TrainingOps.npyHeaders, TrainingOps.syntheticNpyPayload),
     // safetensors header walk over synthesized tensor-shard payloads —
     // the fourth tensor format beside TFRecord/Avro/npy: u64-LE header
     // length, from-scratch JSON-subset scan (tensor name -> dtype /
@@ -2535,13 +2508,8 @@ object SparkEntry {
     // buffer order, contiguous-cover validation; oracle fully
     // arithmetic from doc_id (header lengths re-derived from the SAME
     // JSON text + the 8-byte alignment rule)
-    "m31_safetensors_headers" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticSafetensorsPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.safetensorsHeaders(s, payloads)
-    }),
+    "m31_safetensors_headers" ->
+      walked(TrainingOps.safetensorsHeaders, TrainingOps.syntheticSafetensorsPayload),
     // gzip member splitting over synthesized .warc.gz-style segments:
     // one member per record (an FNAME header on doc_id%11==3 members),
     // segments with segment_id%4==1 cut 5 bytes short; the oracle checks
@@ -2549,12 +2517,8 @@ object SparkEntry {
     "m9_gzip_members" -> ((s, dir) => {
       import s.implicits._
       val id = col("doc_id")
-      val url = concat(lit("https://"),
-        when(id % 10 < 3, lit("big.example.com"))
-          .otherwise(concat(lit("h"), id % 97, lit(".example.com"))),
-        lit("/doc/"), id)
       val rec = concat(
-        lit("WARC/1.0\r\nWARC-Target-URI: "), url,
+        lit("WARC/1.0\r\nWARC-Target-URI: "), urlCol,
         lit("\r\nContent-Length: "), octet_length(col("text")),
         lit("\r\n\r\n"), col("text"), lit("\r\n\r\n"))
       val segs = docs(s, dir)
@@ -2574,219 +2538,94 @@ object SparkEntry {
     }),
     // RIFF/WAV header parsing: chunk walk honoring declared sizes + the
     // odd-chunk pad byte, order-independent fmt/data; arithmetic oracle
-    "m8_wav_headers" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticWavPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.wavHeaders(s, payloads)
-    }),
+    "m8_wav_headers" -> walked(TrainingOps.wavHeaders, TrainingOps.syntheticWavPayload),
     // HTTP/1.1 chunked transfer decoding: hex size lines + extensions,
     // trailers, post-data CRLF invariant; decoded body md5 checked by
     // an oracle that rebuilds the body string in SQL
-    "m12_chunked_decode" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticChunkedPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.chunkedDecode(s, payloads)
-    }),
+    "m12_chunked_decode" -> walked(TrainingOps.chunkedDecode, TrainingOps.syntheticChunkedPayload),
     // ISO-BMFF (MP4) box walk: largesize + size==0 + mvhd v0/v1 field
     // widths, moov-at-end order; arithmetic oracle (the m8 pattern)
-    "m11_mp4_headers" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticMp4Payload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.mp4Headers(s, payloads)
-    }),
+    "m11_mp4_headers" -> walked(TrainingOps.mp4Headers, TrainingOps.syntheticMp4Payload),
     // ZIP central-directory walk over synthesized archives: backward
     // EOCD scan with a decoy signature in the trailing comment, ZIP64
     // sentinel indirection (>4GiB entry), data-descriptor locals whose
     // sizes lie (CD is the truth), truncated directory keeps its prefix
-    "m13_zip_entries" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticZipPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.zipEntries(s, payloads)
-    }),
+    "m13_zip_entries" -> walked(TrainingOps.zipEntries, TrainingOps.syntheticZipPayload),
     // TAR header walk over synthesized archives: octal + GNU base-256
     // sizes, space-padded checksums verified with the field-as-spaces
     // rule, 'L' longname pseudo-entries consumed not emitted, POSIX
     // prefix/name path split (POSIX magic only), terminator-less EOF,
     // bad-checksum / truncated archives keep their parsed prefix
-    "m14_tar_entries" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticTarPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.tarEntries(s, payloads)
-    }),
+    "m14_tar_entries" -> walked(TrainingOps.tarEntries, TrainingOps.syntheticTarPayload),
     // TIFF/EXIF IFD walk over synthesized images: dual endianness,
     // inline-vs-offset values (count*typeSize <= 4), EXIF sub-IFD
     // pointer consumed not emitted, IFD1 chaining, pointer-cycle
     // detection, truncated IFD keeps its parsed prefix
-    "m15_tiff_entries" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticTiffPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.tiffEntries(s, payloads)
-    }),
+    "m15_tiff_entries" -> walked(TrainingOps.tiffEntries, TrainingOps.syntheticTiffPayload),
     // PNG chunk walk with CRC32 verification over synthesized images:
     // per-chunk (offset, type, length, crc_ok, critical) + per-file
     // terminal status; CRC mismatch never stops the walk, IEND does
     // (trailing junk unscanned), truncation/malformed keep the prefix
-    "m16_png_chunks" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticPngPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.pngChunks(s, payloads)
-    }),
+    "m16_png_chunks" -> walked(TrainingOps.pngChunks, TrainingOps.syntheticPngPayload),
     // JPEG marker-segment walk (m16's sibling for the other half of
     // the web's images): per-marker (offset, name, declared length) +
     // entropy-scan rows carrying ecs_len; boundaries by LENGTH never
     // FF-scan (planted FF D8 in a COM body), FF00 stuffing, RSTn
     // in-scan rows, EOI stops the walk, no_eoi distinct from truncated
-    "m17_jpeg_segments" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticJpegPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.jpegSegments(s, payloads)
-    }),
+    "m17_jpeg_segments" -> walked(TrainingOps.jpegSegments, TrainingOps.syntheticJpegPayload),
     // MPEG-1 Layer III frame-chain walk (the audio bitstream walker):
     // frame lengths COMPUTED from the bitrate/samplerate tables
     // (144000*br div sr + pad), ID3v2 skipped by syncsafe size, exact
     // 128-byte ID3v1 tail, free-format as its own verdict, no resync
-    "m18_mp3_frames" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticMp3Payload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.mp3Frames(s, payloads)
-    }),
+    "m18_mp3_frames" -> walked(TrainingOps.mp3Frames, TrainingOps.syntheticMp3Payload),
     // Zstandard frame/block walk (RFC 8878): every extent DECLARED so
     // the container walks without a decompressor — raw/compressed
     // blocks stepped by Block_Size, RLE consumes ONE byte, skippable
     // frames by u32 size, header length computed from descriptor bits,
     // 2-byte FCS carries the spec's +256 bias
-    "m19_zstd_frames" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticZstdPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.zstdFrames(s, payloads)
-    }),
+    "m19_zstd_frames" -> walked(TrainingOps.zstdFrames, TrainingOps.syntheticZstdPayload),
     // EBML/Matroska element walk (webm): IDs and sizes are VINTs whose
     // WIDTH lives in the leading-zero marker; unknown-size Segment runs
     // to EOF; descent one level into Segment only; non-minimal size
     // encodings pinned
-    "m20_ebml_elements" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticEbmlPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.ebmlElements(s, payloads)
-    }),
+    "m20_ebml_elements" -> walked(TrainingOps.ebmlElements, TrainingOps.syntheticEbmlPayload),
     // Parquet container sniff: end-anchored (PAR1 head+tail, u32le
     // footer_len from the tail, footer must fit inside n-12)
     // WebP chunk walk: RIFF grammar + three dimension codecs selected
     // by the first chunk's fourcc (u16le / packed 14-bit / u24le-1)
-    "m27_webp_chunks" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticWebpPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.webpChunks(s, payloads)
-    }),
+    "m27_webp_chunks" -> walked(TrainingOps.webpChunks, TrainingOps.syntheticWebpPayload),
     // protobuf field walk: MSB-continuation varints, four live wire
     // types, no magic / no framing (m22's TFRecord is the container)
-    "m26_proto_fields" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticProtoPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.protoFields(s, payloads)
-    }),
+    "m26_proto_fields" -> walked(TrainingOps.protoFields, TrainingOps.syntheticProtoPayload),
     // FLAC metadata-block walk: u24 big-endian lengths, in-header
     // last-flag bit termination, bit-packed STREAMINFO fields
-    "m25_flac_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticFlacPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.flacBlocks(s, payloads)
-    }),
+    "m25_flac_blocks" -> walked(TrainingOps.flacBlocks, TrainingOps.syntheticFlacPayload),
     // GIF block walk: sub-block chains (len|data, zero-terminated) +
     // the log-encoded color-table length from the screen descriptor
-    "m24_gif_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticGifPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.gifBlocks(s, payloads)
-    }),
-    "m23_parquet_footer" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticParquetPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.parquetFooter(s, payloads)
-    }),
+    "m24_gif_blocks" -> walked(TrainingOps.gifBlocks, TrainingOps.syntheticGifPayload),
+    "m23_parquet_footer" -> walked(TrainingOps.parquetFooter, TrainingOps.syntheticParquetPayload),
     // TFRecord walk: u64le length + masked-CRC32C framing; length-crc
     // failure HALTS (boundary untrustworthy), data-crc failure flags
     // and CONTINUES — the two-checksum policy pinned by families
-    "m22_tfrecord_records" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticTfrecordPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.tfrecordRecords(s, payloads)
-    }),
+    "m22_tfrecord_records" ->
+      walked(TrainingOps.tfrecordRecords, TrainingOps.syntheticTfrecordPayload),
     // JSONL walk: newline framing independent of per-line validity
     // (strict from-scratch RFC-8259 check), EOF terminates a line,
     // blank lines counted but not records
-    "m29_jsonl_records" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticJsonlPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.jsonlRecords(s, payloads)
-    }),
+    "m29_jsonl_records" -> walked(TrainingOps.jsonlRecords, TrainingOps.syntheticJsonlPayload),
     // Avro OCF walk (the OTHER training-shard format next to m22):
     // zigzag-varint framing, BOTH metadata-map count forms, codec
     // harvest; sync-mismatch flags + continues, size-past-EOF halts
-    "m28_avro_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticAvroPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.avroBlocks(s, payloads)
-    }),
+    "m28_avro_blocks" -> walked(TrainingOps.avroBlocks, TrainingOps.syntheticAvroPayload),
     // Ogg page walk (RFC 3533): body = sum of lacing values, packet
     // boundaries encoded IN the values (a 255-run continues, first
     // <255 ends), direct-polynomial CRC verified but never driving
     // the walk
-    "m21_ogg_pages" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticOggPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.oggPages(s, payloads)
-    }),
+    "m21_ogg_pages" -> walked(TrainingOps.oggPages, TrainingOps.syntheticOggPayload),
     // charset sniffing over synthesized page bytes: BOM > 1024-byte meta
     // prescan > UTF-8 structural validation > windows-1252 fallback; the
     // oracle derives every verdict arithmetically from doc_id
-    "m5_charset" -> ((s, dir) => {
-      import s.implicits._
-      val payloads = docs(s, dir).select(col("doc_id")).as[Long]
-        .map(id => (id, TrainingOps.syntheticCharsetPayload(id)))
-        .toDF("doc_id", "payload")
-      TrainingOps.charsetDetect(s, payloads)
-    }),
+    "m5_charset" -> walked(TrainingOps.charsetDetect, TrainingOps.syntheticCharsetPayload),
   )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -3,6 +3,7 @@ package graft.datapipe
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Bytes._
 import graft.spark.Caches.RegisteredFrame
 
 /** Training-data pipeline operators over the generic `documents` /
@@ -4817,100 +4818,94 @@ object TrainingOps extends Serializable {
     * Typed mapPartitions, MAP-ONLY zero shuffle; rungs 1-2 touch at most
     * 1024 bytes + the BOM, only rung 3 reads the whole payload.
     */
-  def charsetDetect(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def validUtf8(b: Array[Byte]): Boolean = {
-          var i = 0
-          val n = b.length
-          var ok = true
-          while (ok && i < n) {
-            val c = b(i) & 0xff
-            if (c < 0x80) i += 1
-            else if (c < 0xc2) ok = false // bare continuation / overlong lead
-            else if (c < 0xe0) {
-              if (i + 1 >= n || (b(i + 1) & 0xc0) != 0x80) ok = false else i += 2
-            } else if (c < 0xf0) {
-              if (i + 2 >= n) ok = false
-              else {
-                val c1 = b(i + 1) & 0xff
-                if ((c1 & 0xc0) != 0x80 || (b(i + 2) & 0xc0) != 0x80) ok = false
-                else if (c == 0xe0 && c1 < 0xa0) ok = false // overlong
-                else if (c == 0xed && c1 >= 0xa0) ok = false // surrogate
-                else i += 3
-              }
-            } else if (c < 0xf5) {
-              if (i + 3 >= n) ok = false
-              else {
-                val c1 = b(i + 1) & 0xff
-                if ((c1 & 0xc0) != 0x80 || (b(i + 2) & 0xc0) != 0x80 ||
-                  (b(i + 3) & 0xc0) != 0x80) ok = false
-                else if (c == 0xf0 && c1 < 0x90) ok = false // overlong
-                else if (c == 0xf4 && c1 >= 0x90) ok = false // > U+10FFFF
-                else i += 4
-              }
-            } else ok = false
-          }
-          ok
+  def charsetDetect(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, bom STRING, declared STRING, " +
+        "detected STRING, utf8_valid BOOLEAN NOT NULL") {
+      def validUtf8(b: Array[Byte]): Boolean = {
+        var i = 0
+        val n = b.length
+        var ok = true
+        while (ok && i < n) {
+          val c = b(i) & 0xff
+          if (c < 0x80) i += 1
+          else if (c < 0xc2) ok = false // bare continuation / overlong lead
+          else if (c < 0xe0) {
+            if (i + 1 >= n || (b(i + 1) & 0xc0) != 0x80) ok = false else i += 2
+          } else if (c < 0xf0) {
+            if (i + 2 >= n) ok = false
+            else {
+              val c1 = b(i + 1) & 0xff
+              if ((c1 & 0xc0) != 0x80 || (b(i + 2) & 0xc0) != 0x80) ok = false
+              else if (c == 0xe0 && c1 < 0xa0) ok = false // overlong
+              else if (c == 0xed && c1 >= 0xa0) ok = false // surrogate
+              else i += 3
+            }
+          } else if (c < 0xf5) {
+            if (i + 3 >= n) ok = false
+            else {
+              val c1 = b(i + 1) & 0xff
+              if ((c1 & 0xc0) != 0x80 || (b(i + 2) & 0xc0) != 0x80 ||
+                (b(i + 3) & 0xc0) != 0x80) ok = false
+              else if (c == 0xf0 && c1 < 0x90) ok = false // overlong
+              else if (c == 0xf4 && c1 >= 0x90) ok = false // > U+10FFFF
+              else i += 4
+            }
+          } else ok = false
         }
-        def lower(c: Int): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
-        // first charset= token in the 1024-byte prescan window, or null
-        def prescan(b: Array[Byte]): String = {
-          val lim = math.min(b.length, 1024)
-          val pat = "charset"
-          var i = 0
-          var found: String = null
-          while (found == null && i + pat.length < lim) {
-            var j = 0
-            while (j < pat.length && lower(b(i + j) & 0xff) == pat(j)) j += 1
-            if (j == pat.length) {
-              var p = i + pat.length
-              while (p < lim && (b(p) & 0xff) == ' ') p += 1
-              if (p < lim && (b(p) & 0xff) == '=') {
-                p += 1
-                while (p < lim && (b(p) & 0xff) == ' ') p += 1
-                val quote = if (p < lim && ((b(p) & 0xff) == '"' || (b(p) & 0xff) == '\'')) b(p) & 0xff else 0
-                if (quote != 0) p += 1
-                val sb = new StringBuilder
-                var stop = false
-                while (!stop && p < lim) {
-                  val c = b(p) & 0xff
-                  if (quote != 0 && c == quote) stop = true
-                  else if (quote == 0 && (c == ' ' || c == ';' || c == '>' ||
-                    c == '/' || c == '"' || c == '\'')) stop = true // a bare
-                  // value inside a quoted content="..." ends at the
-                  // enclosing quote, not at the end of the window
-                  else { sb.append(lower(c).toChar); p += 1 }
-                }
-                if (sb.nonEmpty) found = sb.toString
-              }
-              if (found == null) i += pat.length else ()
-            } else i += 1
-          }
-          found
-        }
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val bom =
-            if (b.length >= 3 && (b(0) & 0xff) == 0xef && (b(1) & 0xff) == 0xbb &&
-              (b(2) & 0xff) == 0xbf) "utf-8"
-            else if (b.length >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xfe) "utf-16le"
-            else if (b.length >= 2 && (b(0) & 0xff) == 0xfe && (b(1) & 0xff) == 0xff) "utf-16be"
-            else null
-          val declared = prescan(b)
-          val valid = validUtf8(b)
-          val detected =
-            if (bom != null) bom
-            else if (declared != null) declared
-            else if (valid) "utf-8"
-            else "windows-1252"
-          (id, Option(bom), Option(declared), detected, valid)
-        }
+        ok
       }
-      .toDF("doc_id", "bom", "declared", "detected", "utf8_valid")
-  }
+      def lower(c: Int): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
+      // first charset= token in the 1024-byte prescan window, or null
+      def prescan(b: Array[Byte]): String = {
+        val lim = math.min(b.length, 1024)
+        val pat = "charset"
+        var i = 0
+        var found: String = null
+        while (found == null && i + pat.length < lim) {
+          var j = 0
+          while (j < pat.length && lower(b(i + j) & 0xff) == pat(j)) j += 1
+          if (j == pat.length) {
+            var p = i + pat.length
+            while (p < lim && (b(p) & 0xff) == ' ') p += 1
+            if (p < lim && (b(p) & 0xff) == '=') {
+              p += 1
+              while (p < lim && (b(p) & 0xff) == ' ') p += 1
+              val quote = if (p < lim && ((b(p) & 0xff) == '"' || (b(p) & 0xff) == '\'')) b(p) & 0xff else 0
+              if (quote != 0) p += 1
+              val sb = new StringBuilder
+              var stop = false
+              while (!stop && p < lim) {
+                val c = b(p) & 0xff
+                if (quote != 0 && c == quote) stop = true
+                else if (quote == 0 && (c == ' ' || c == ';' || c == '>' ||
+                  c == '/' || c == '"' || c == '\'')) stop = true // a bare
+                // value inside a quoted content="..." ends at the
+                // enclosing quote, not at the end of the window
+                else { sb.append(lower(c).toChar); p += 1 }
+              }
+              if (sb.nonEmpty) found = sb.toString
+            }
+            if (found == null) i += pat.length else ()
+          } else i += 1
+        }
+        found
+      }
+      b =>
+        val bom =
+          if (b.length >= 3 && (b(0) & 0xff) == 0xef && (b(1) & 0xff) == 0xbb &&
+            (b(2) & 0xff) == 0xbf) "utf-8"
+          else if (b.length >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xfe) "utf-16le"
+          else if (b.length >= 2 && (b(0) & 0xff) == 0xfe && (b(1) & 0xff) == 0xff) "utf-16be"
+          else null
+        val declared = prescan(b)
+        val valid = validUtf8(b)
+        val detected =
+          if (bom != null) bom
+          else if (declared != null) declared
+          else if (valid) "utf-8"
+          else "windows-1252"
+        (bom, declared, detected, valid)
+    }
 
   /** HTTP response parsing over raw record payloads — the layer between
     * [[warcRecords]] and the page bytes: a WARC `response` record's
@@ -5004,21 +4999,15 @@ object TrainingOps extends Serializable {
       bodyOff.map(_ - off), bl, Option(bh))
   }
 
-  def httpResponses(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val h = parseHttpRegion(digest, b, 0, b.length)
-          (id, h.code, h.ctype, h.loc, h.status, h.bodyOffset, h.bodyLen, h.bodyMd5)
-        }
-      }
-      .toDF("doc_id", "http_status", "content_type", "location", "status",
-        "body_offset", "body_len", "body_md5")
-  }
+  def httpResponses(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, http_status INT, " +
+        "content_type STRING, location STRING, status STRING, body_offset INT, " +
+        "body_len INT, body_md5 STRING") {
+      val digest = java.security.MessageDigest.getInstance("MD5")
+      b =>
+        val h = parseHttpRegion(digest, b, 0, b.length)
+        (h.code, h.ctype, h.loc, h.status, h.bodyOffset, h.bodyLen, h.bodyMd5)
+    }
 
   /** The fused Common-Crawl reader: [[warcRecords]]'s Content-Length
     * record walk feeding [[parseHttpRegion]] per record — one pass, one
@@ -5120,63 +5109,51 @@ object TrainingOps extends Serializable {
     * mapPartitions, MAP-ONLY zero shuffle; only chunk headers and the
     * 16-byte fmt body are read — a gigabyte WAV costs ~100 bytes.
     */
-  def wavHeaders(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def le(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = n - 1
-          while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-          v
-        }
-        def tag(b: Array[Byte], i: Int): String =
-          if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var chans: Option[Int] = None
-          var rate: Option[Int] = None
-          var bits: Option[Int] = None
-          var byteRate = 0L
-          var dataSize: Option[Long] = None
-          var status: String = null
-          if (n < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") status = "unknown"
-          else {
-            var i = 12
-            while (status == null && i < n) {
-              if (i + 8 > n) status = "truncated"
+  def wavHeaders(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, channels INT, sample_rate INT, " +
+        "bits INT, data_bytes BIGINT, duration_ms BIGINT, status STRING") {
+      def tag(b: Array[Byte], i: Int): String =
+        if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
+      b =>
+        val n = b.length
+        var chans: Option[Int] = None
+        var rate: Option[Int] = None
+        var bits: Option[Int] = None
+        var byteRate = 0L
+        var dataSize: Option[Long] = None
+        var status: String = null
+        if (n < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") status = "unknown"
+        else {
+          var i = 12
+          while (status == null && i < n) {
+            if (i + 8 > n) status = "truncated"
+            else {
+              val cid = tag(b, i)
+              val sz = u32le(b, i + 4)
+              val body = i + 8
+              if (body + sz > n) status = "truncated"
               else {
-                val cid = tag(b, i)
-                val sz = le(b, i + 4, 4)
-                val body = i + 8
-                if (body + sz > n) status = "truncated"
-                else {
-                  if (cid == "fmt " && sz >= 16) {
-                    chans = Some(le(b, body + 2, 2).toInt)
-                    rate = Some(le(b, body + 4, 4).toInt)
-                    byteRate = le(b, body + 8, 4)
-                    bits = Some(le(b, body + 14, 2).toInt)
-                  } else if (cid == "data") dataSize = Some(sz)
-                  // odd chunk: one pad byte NOT counted by the size field
-                  i = body + sz.toInt + (sz.toInt & 1)
-                }
+                if (cid == "fmt " && sz >= 16) {
+                  chans = Some(u16le(b, body + 2))
+                  rate = Some(u32le(b, body + 4).toInt)
+                  byteRate = u32le(b, body + 8)
+                  bits = Some(u16le(b, body + 14))
+                } else if (cid == "data") dataSize = Some(sz)
+                // odd chunk: one pad byte NOT counted by the size field
+                i = body + sz.toInt + (sz.toInt & 1)
               }
             }
-            if (status == null)
-              status = if (chans.isDefined && dataSize.isDefined) "ok" else "truncated"
           }
-          val dur =
-            if (status == "ok" && byteRate > 0) Some(1000L * dataSize.get / byteRate)
-            else None
-          val ok = status == "ok"
-          (id, if (ok) chans else None, if (ok) rate else None,
-            if (ok) bits else None, if (ok) dataSize else None, dur, status)
+          if (status == null)
+            status = if (chans.isDefined && dataSize.isDefined) "ok" else "truncated"
         }
-      }
-      .toDF("doc_id", "channels", "sample_rate", "bits", "data_bytes",
-        "duration_ms", "status")
-  }
+        val dur =
+          if (status == "ok" && byteRate > 0) Some(1000L * dataSize.get / byteRate)
+          else None
+        val ok = status == "ok"
+        (if (ok) chans else None, if (ok) rate else None,
+          if (ok) bits else None, if (ok) dataSize else None, dur, status)
+    }
 
   /** Gzip MEMBER splitting — the real Common-Crawl container layer
     * below [[warcRecords]]: a `.warc.gz` is not one gzip stream but a
@@ -5207,11 +5184,6 @@ object TrainingOps extends Serializable {
         it.flatMap { case (sid, raw) =>
           val b = if (raw == null) Array.emptyByteArray else raw
           val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Int, Long, String, String)]
           var off = 0
@@ -5230,7 +5202,7 @@ object TrainingOps extends Serializable {
               var bad = false
               if ((flg & 4) != 0) { // FEXTRA
                 if (p + 2 > n) bad = true
-                else { val xlen = le(p, 2).toInt; p += 2 + xlen }
+                else p += 2 + u16le(b, p)
               }
               if (!bad && (flg & 8) != 0) { // FNAME: zero-terminated
                 while (p < n && b(p) != 0) p += 1
@@ -5264,8 +5236,8 @@ object TrainingOps extends Serializable {
                 if (fault == null) {
                   val trailerOff = p + ((n - p) - inf.getRemaining)
                   if (trailerOff + 8 > n) fault = "truncated"
-                  else if (le(trailerOff, 4) != crc.getValue ||
-                    le(trailerOff + 4, 4) != (total & 0xffffffffL)) fault = "corrupt"
+                  else if (u32le(b, trailerOff) != crc.getValue ||
+                    u32le(b, trailerOff + 4) != (total & 0xffffffffL)) fault = "corrupt"
                   else {
                     out += ((sid, idx, total,
                       digest.digest().map("%02x".format(_)).mkString, "ok"))
@@ -5314,11 +5286,6 @@ object TrainingOps extends Serializable {
         it.flatMap { case (sid, raw) =>
           val b = if (raw == null) Array.emptyByteArray else raw
           val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Int, String, Option[Int], Option[String], Option[String], String)]
           def fault(idx: Int, st: String): Unit =
@@ -5337,7 +5304,7 @@ object TrainingOps extends Serializable {
               var p = off + 10
               var bad = false
               if ((flg & 4) != 0) {
-                if (p + 2 > n) bad = true else { val x = le(p, 2).toInt; p += 2 + x }
+                if (p + 2 > n) bad = true else p += 2 + u16le(b, p)
               }
               if (!bad && (flg & 8) != 0) {
                 while (p < n && b(p) != 0) p += 1
@@ -5368,8 +5335,8 @@ object TrainingOps extends Serializable {
                 if (gzFault == null) {
                   val trailerOff = p + ((n - p) - inf.getRemaining)
                   if (trailerOff + 8 > n) gzFault = "gzip_truncated"
-                  else if (le(trailerOff, 4) != crc.getValue ||
-                    le(trailerOff + 4, 4) != (body.size.toLong & 0xffffffffL))
+                  else if (u32le(b, trailerOff) != crc.getValue ||
+                    u32le(b, trailerOff + 4) != (body.size.toLong & 0xffffffffL))
                     gzFault = "gzip_corrupt"
                   else {
                     // one WARC record per member (the CC convention):
@@ -5437,9 +5404,7 @@ object TrainingOps extends Serializable {
     d.end()
     val crc = new java.util.zip.CRC32
     crc.update(content)
-    def le4(v: Long) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    bb ++= le4(crc.getValue); bb ++= le4(content.length.toLong & 0xffffffffL)
+    bb ++= le32(crc.getValue); bb ++= le32(content.length.toLong)
     bb.toArray
   }
 
@@ -5452,9 +5417,6 @@ object TrainingOps extends Serializable {
     */
   def syntheticWavPayload(id: Long): Array[Byte] = {
     def a(s: String) = s.getBytes("US-ASCII")
-    def le2(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le4(v: Long) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
     val chans = 1 + (id % 2).toInt
     val rate = 8000 * (1 + (id % 4).toInt)
     val bits = 16
@@ -5462,20 +5424,20 @@ object TrainingOps extends Serializable {
     val byteRate = rate.toLong * blockAlign
     val nSamples = 100 + (id % 50).toInt
     val data = Array.fill[Byte](nSamples * blockAlign)(0x11)
-    def fmt = a("fmt ") ++ le4(16) ++ le2(1) ++ le2(chans) ++ le4(rate) ++
-      le4(byteRate) ++ le2(blockAlign) ++ le2(bits)
-    def dataCk = a("data") ++ le4(data.length.toLong) ++ data
+    def fmt = a("fmt ") ++ le32(16) ++ le16(1) ++ le16(chans) ++ le32(rate) ++
+      le32(byteRate) ++ le16(blockAlign) ++ le16(bits)
+    def dataCk = a("data") ++ le32(data.length.toLong) ++ data
     def riff(chunks: Array[Byte]) =
-      a("RIFF") ++ le4(4L + chunks.length) ++ a("WAVE") ++ chunks
+      a("RIFF") ++ le32(4L + chunks.length) ++ a("WAVE") ++ chunks
     (id % 5) match {
       case 0 => riff(fmt ++ dataCk)
       case 1 => // odd-sized LIST chunk + its pad byte, then fmt/data —
         // a walker ignoring the pad lands off-grid and dies
         val listBody = a("INFOx" * 1).take(5)
-        riff(a("LIST") ++ le4(listBody.length.toLong) ++ listBody ++
+        riff(a("LIST") ++ le32(listBody.length.toLong) ++ listBody ++
           Array[Byte](0) ++ fmt ++ dataCk)
       case 2 => // data first, then a JUNK chunk, then fmt
-        val junk = a("JUNK") ++ le4(4) ++ Array.fill[Byte](4)(0x22)
+        val junk = a("JUNK") ++ le32(4) ++ Array.fill[Byte](4)(0x22)
         riff(dataCk ++ junk ++ fmt)
       case 3 => riff(fmt).take(20) // cut inside the fmt body
       case _ => a(s"not a riff payload $id")
@@ -5518,43 +5480,39 @@ object TrainingOps extends Serializable {
   def syntheticImagePayload(id: Long): Array[Byte] = {
     val w = (16 + id % 640).toInt
     val h = (16 + id % 480).toInt
-    def be2(v: Int) = Array[Byte](((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be4(v: Int) = Array[Byte]((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def le2(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
     val pngSig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
     (id % 6) match {
       case 0 => // PNG: signature, IHDR (13-byte body), zero CRC, junk tail
         bb ++= pngSig
-        bb ++= be4(13); bb ++= "IHDR".getBytes("US-ASCII")
-        bb ++= be4(w); bb ++= be4(h)
+        bb ++= be32(13); bb ++= "IHDR".getBytes("US-ASCII")
+        bb ++= be32(w); bb ++= be32(h)
         bb ++= Array[Byte](8, 6, 0, 0, 0) // depth, color, comp, filter, interlace
-        bb ++= be4(0)
+        bb ++= be32(0)
         bb ++= s"junk$id".getBytes("US-ASCII")
       case 1 => // GIF89a: 6-byte magic, LE width/height, flags/bg/aspect
         bb ++= "GIF89a".getBytes("US-ASCII")
-        bb ++= le2(w); bb ++= le2(h); bb ++= Array[Byte](0, 0, 0)
+        bb ++= le16(w); bb ++= le16(h); bb ++= Array[Byte](0, 0, 0)
         bb ++= s"junk$id".getBytes("US-ASCII")
       case 2 => // JPEG: SOI, APP0/JFIF, COM (variable length, embedded
         // FF D8 magic in the body — must be skipped by LENGTH, never by
         // magic search), optional fill byte, SOF0, EOI
         bb ++= Array(0xff.toByte, 0xd8.toByte)
-        bb ++= Array(0xff.toByte, 0xe0.toByte); bb ++= be2(16)
+        bb ++= Array(0xff.toByte, 0xe0.toByte); bb ++= be16(16)
         bb ++= "JFIF".getBytes("US-ASCII"); bb += 0; bb ++= Array.fill[Byte](9)(0)
         val com = s"c$id".getBytes("US-ASCII") ++
           Array(0xff.toByte, 0xd8.toByte) ++ Array.fill[Byte]((id % 23).toInt)('x')
-        bb ++= Array(0xff.toByte, 0xfe.toByte); bb ++= be2(com.length + 2); bb ++= com
+        bb ++= Array(0xff.toByte, 0xfe.toByte); bb ++= be16(com.length + 2); bb ++= com
         if (id % 4 == 2) bb += 0xff.toByte // fill byte before the next marker
-        bb ++= Array(0xff.toByte, 0xc0.toByte); bb ++= be2(17)
-        bb += 8; bb ++= be2(h); bb ++= be2(w)
+        bb ++= Array(0xff.toByte, 0xc0.toByte); bb ++= be16(17)
+        bb += 8; bb ++= be16(h); bb ++= be16(w)
         bb += 3; bb ++= Array.fill[Byte](9)(0)
         bb ++= Array(0xff.toByte, 0xd9.toByte)
       case 3 => // truncated PNG: signature + 4 bytes, IHDR never arrives
-        bb ++= pngSig; bb ++= be4(13)
+        bb ++= pngSig; bb ++= be32(13)
       case 5 => // malformed JPEG: SOS with no prior SOF — dims unknowable
         bb ++= Array(0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xda.toByte)
-        bb ++= be2(4); bb ++= "xx".getBytes("US-ASCII")
+        bb ++= be16(4); bb ++= "xx".getBytes("US-ASCII")
       case _ => // not an image at all
         bb ++= s"plain text payload $id".getBytes("US-ASCII")
     }
@@ -5597,14 +5555,12 @@ object TrainingOps extends Serializable {
     *   5: clean EOF after a complete chunk but no IEND.
     */
   def syntheticPngPayload(id: Long): Array[Byte] = {
-    def be4(v: Long) = Array[Byte](((v >>> 24) & 0xff).toByte,
-      ((v >>> 16) & 0xff).toByte, ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
     def fill(n: Int): Array[Byte] = Array.tabulate(n)(i => (0x61 + i % 13).toByte)
     def chunk(t: String, data: Array[Byte], crcXor: Long = 0L): Array[Byte] = {
       val crc = new java.util.zip.CRC32
       val tb = t.getBytes("US-ASCII")
       crc.update(tb); crc.update(data)
-      be4(data.length.toLong) ++ tb ++ data ++ be4((crc.getValue ^ crcXor) & 0xffffffffL)
+      be32(data.length.toLong) ++ tb ++ data ++ be32((crc.getValue ^ crcXor) & 0xffffffffL)
     }
     val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
     val tl = (1 + id % 17).toInt
@@ -5618,10 +5574,10 @@ object TrainingOps extends Serializable {
         chunk("IDAT", fill(dl)) ++ chunk("IDAT", fill(3)) ++
         chunk("IEND", Array.emptyByteArray) ++ s"JUNK$id".getBytes("US-ASCII")
       case 2 =>
-        if ((id / 6) % 2 == 0) sig ++ ihdr ++ be4(1000L) ++
+        if ((id / 6) % 2 == 0) sig ++ ihdr ++ be32(1000L) ++
           "tIME".getBytes("US-ASCII") ++ fill(4) // data overruns EOF
         else sig ++ ihdr ++ Array[Byte](0, 0, 0) // partial header
-      case 3 => sig ++ ihdr ++ be4(0x80000001L) ++ "tIME".getBytes("US-ASCII") ++ fill(5)
+      case 3 => sig ++ ihdr ++ be32(0x80000001L) ++ "tIME".getBytes("US-ASCII") ++ fill(5)
       case 4 => s"GIF89a not a png $id".getBytes("US-ASCII")
       case _ => sig ++ ihdr ++ chunk("tEXt", fill(tl))
     }
@@ -5652,66 +5608,42 @@ object TrainingOps extends Serializable {
     * zero shuffle; headers and CRCs are read but data is touched only by
     * the CRC update — no copies, no decode.
     */
-  def pngChunks(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-          val isPng = b.length >= 8 && (0 until 8).forall(i => (b(i) & 0xff) == sig(i))
-          if (!isPng)
-            Seq((id, "not_png", None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[Int], None: Option[Int],
-              None: Option[Int]))
+  def pngChunks(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "c_off BIGINT, ctype STRING, clen INT, crc_ok INT, critical INT",
+        "status") { (b, rows) =>
+      val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
+      val isPng = b.length >= 8 && (0 until 8).forall(i => u8(b, i) == sig(i))
+      var p = 8
+      var idx = 0
+      var status: String = if (isPng) null else "not_png"
+      while (status == null) {
+        if (p == b.length) status = "no_iend"
+        else if (p + 8 > b.length) status = "truncated"
+        else {
+          val len = u32be(b, p)
+          val typeOk = (p + 4 until p + 8).forall { i =>
+            val c = u8(b, i)
+            (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
+          }
+          if (len > 0x7fffffffL || !typeOk) status = "malformed"
+          else if (p + 12 + len > b.length) status = "truncated"
           else {
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Long, String, Int, Int, Int)]
-            var p = 8
-            var idx = 0
-            var status: String = null
-            while (status == null) {
-              if (p == b.length) status = "no_iend"
-              else if (p + 8 > b.length) status = "truncated"
-              else {
-                val len = ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-                  ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-                val typeOk = (p + 4 until p + 8).forall { i =>
-                  val c = b(i) & 0xff
-                  (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
-                }
-                if (len > 0x7fffffffL || !typeOk) status = "malformed"
-                else if (p + 12 + len > b.length) status = "truncated"
-                else {
-                  val ctype = new String(b, p + 4, 4, "US-ASCII")
-                  val crc = new java.util.zip.CRC32
-                  crc.update(b, p + 4, 4 + len.toInt)
-                  val cp = p + 8 + len.toInt
-                  val stored = ((b(cp) & 0xffL) << 24) | ((b(cp + 1) & 0xffL) << 16) |
-                    ((b(cp + 2) & 0xffL) << 8) | (b(cp + 3) & 0xffL)
-                  out += ((idx, p.toLong, ctype, len.toInt,
-                    if (crc.getValue == stored) 1 else 0,
-                    if ((b(p + 4) & 0x20) == 0) 1 else 0))
-                  idx += 1
-                  p += 12 + len.toInt
-                  if (ctype == "IEND") status = "ok"
-                }
-              }
-            }
-            val es = out.toList
-            if (es.isEmpty)
-              Seq((id, status, None: Option[Int], None: Option[Long],
-                None: Option[String], None: Option[Int], None: Option[Int],
-                None: Option[Int]))
-            else es.map { case (i2, off, ct, ln, ck, cr) =>
-              (id, status, Some(i2), Some(off), Some(ct), Some(ln), Some(ck), Some(cr))
-            }
+            val ctype = new String(b, p + 4, 4, "US-ASCII")
+            val crc = new java.util.zip.CRC32
+            crc.update(b, p + 4, 4 + len.toInt)
+            val stored = u32be(b, p + 8 + len.toInt)
+            rows += Array(idx, p.toLong, ctype, len.toInt,
+              if (crc.getValue == stored) 1 else 0,
+              if ((b(p + 4) & 0x20) == 0) 1 else 0)
+            idx += 1
+            p += 12 + len.toInt
+            if (ctype == "IEND") status = "ok"
           }
         }
       }
-      .toDF("doc_id", "status", "idx", "c_off", "ctype", "clen", "crc_ok", "critical")
-  }
+      Seq(status)
+    }
 
   /** Synthetic JPEG payloads for [[jpegSegments]] — six families keyed
     * by doc_id % 6, every offset a pure function of the three
@@ -5734,25 +5666,24 @@ object TrainingOps extends Serializable {
   def syntheticJpegPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
     def mk(x: Int): Unit = { bb += 0xff.toByte; bb += x.toByte }
-    def be2(v: Int): Unit = { bb += ((v >>> 8) & 0xff).toByte; bb += (v & 0xff).toByte }
     def fill(n: Int): Unit = (0 until n).foreach(i => bb += (0x41 + i % 23).toByte)
     val al = (1 + id % 17).toInt
     val cl = (id % 9).toInt
     val el = (5 + id % 13).toInt
-    def app0(): Unit = { mk(0xe0); be2(al + 2); fill(al) }
+    def app0(): Unit = { mk(0xe0); bb ++= be16(al + 2); fill(al) }
     def sof0(): Unit = {
-      mk(0xc0); be2(17); bb += 8.toByte; be2(16); be2(16); bb += 3.toByte
+      mk(0xc0); bb ++= be16(17); bb += 8.toByte; bb ++= be16(16); bb ++= be16(16); bb += 3.toByte
       (1 to 3).foreach { c => bb += c.toByte; bb += 0x11.toByte; bb += 0.toByte }
     }
     def sos(): Unit = {
-      mk(0xda); be2(12); bb += 3.toByte
+      mk(0xda); bb ++= be16(12); bb += 3.toByte
       (1 to 3).foreach { c => bb += c.toByte; bb += 0.toByte }
       bb += 0.toByte; bb += 63.toByte; bb += 0.toByte
     }
     (id % 6) match {
       case 0 =>
         mk(0xd8); app0()
-        mk(0xfe); be2(cl + 4); bb += 0xff.toByte; bb += 0xd8.toByte; fill(cl)
+        mk(0xfe); bb ++= be16(cl + 4); bb += 0xff.toByte; bb += 0xd8.toByte; fill(cl)
         sof0(); sos()
         bb += 0xff.toByte; bb += 0x00.toByte; fill(el)
         mk(0xd0); fill(3)
@@ -5760,9 +5691,9 @@ object TrainingOps extends Serializable {
         bb ++= s"JUNK$id".getBytes("US-ASCII")
       case 1 => mk(0xd8); app0(); bb += 'X'.toByte; fill(4)
       case 2 =>
-        if ((id / 6) % 2 == 0) { mk(0xd8); app0(); mk(0xfe); be2(cl + 50); fill(2) }
+        if ((id / 6) % 2 == 0) { mk(0xd8); app0(); mk(0xfe); bb ++= be16(cl + 50); fill(2) }
         else { mk(0xd8); app0(); bb += 0xff.toByte }
-      case 3 => mk(0xd8); app0(); mk(0xfe); be2(1); fill(5)
+      case 3 => mk(0xd8); app0(); mk(0xfe); bb ++= be16(1); fill(5)
       case 4 => bb ++= s"GIF89a not a jpeg $id".getBytes("US-ASCII")
       case _ =>
         mk(0xd8); app0(); sof0(); sos()
@@ -5801,100 +5732,86 @@ object TrainingOps extends Serializable {
     * zero shuffle; payload bytes are stepped over by declared lengths —
     * only entropy runs are byte-scanned, nothing is copied or decoded.
     */
-  def jpegSegments(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def mname(x: Int): String = x match {
-          case 0xd8 => "SOI"
-          case 0xd9 => "EOI"
-          case 0xda => "SOS"
-          case 0xc4 => "DHT"
-          case 0xdb => "DQT"
-          case 0xdd => "DRI"
-          case 0xfe => "COM"
-          case 0x01 => "TEM"
-          case v if v >= 0xd0 && v <= 0xd7 => "RST" + (v - 0xd0)
-          case v if v >= 0xc0 && v <= 0xcf => "SOF" + (v - 0xc0)
-          case v if v >= 0xe0 && v <= 0xef => "APP" + (v - 0xe0)
-          case v => f"M$v%02X"
-        }
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, String, Option[Int], Option[Int])]
-          var status: String = null
-          if (n < 2 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
-            status = "not_jpeg"
-          else {
-            out += ((0, 0L, "SOI", None, None))
-            var p = 2
-            var idx = 1
-            var entropy = false
-            var start = 0
-            var scanRow = -1
-            def patch(upTo: Int): Unit =
-              if (scanRow >= 0) out(scanRow) = out(scanRow).copy(_5 = Some(upTo - start))
-            while (status == null) {
-              if (entropy) {
-                if (p >= n) { patch(p); status = "no_eoi" }
-                else if ((b(p) & 0xff) != 0xff) p += 1
-                else if (p + 1 >= n) { patch(p); status = "no_eoi" }
-                else {
-                  val m = b(p + 1) & 0xff
-                  if (m == 0x00) p += 2 // stuffed data byte
-                  else if (m >= 0xd0 && m <= 0xd7) {
-                    patch(p)
-                    out += ((idx, p.toLong, mname(m), None, None))
-                    scanRow = out.length - 1
-                    idx += 1
-                    p += 2; start = p
-                  } else { patch(p); entropy = false } // real marker: back to segment mode
-                }
-              } else if (p >= n) status = "truncated"
-              else if ((b(p) & 0xff) != 0xff) status = "malformed"
+  def jpegSegments(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "m_off BIGINT, marker STRING, seg_len INT, ecs_len INT", "status") {
+      def mname(x: Int): String = x match {
+        case 0xd8 => "SOI"
+        case 0xd9 => "EOI"
+        case 0xda => "SOS"
+        case 0xc4 => "DHT"
+        case 0xdb => "DQT"
+        case 0xdd => "DRI"
+        case 0xfe => "COM"
+        case 0x01 => "TEM"
+        case v if v >= 0xd0 && v <= 0xd7 => "RST" + (v - 0xd0)
+        case v if v >= 0xc0 && v <= 0xcf => "SOF" + (v - 0xc0)
+        case v if v >= 0xe0 && v <= 0xef => "APP" + (v - 0xe0)
+        case v => f"M$v%02X"
+      }
+      (b, rows) =>
+        val n = b.length
+        var status: String = null
+        if (n < 2 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8)
+          status = "not_jpeg"
+        else {
+          rows += Array(0, 0L, "SOI", None, None)
+          var p = 2
+          var idx = 1
+          var entropy = false
+          var start = 0
+          var scanRow = -1
+          def patch(upTo: Int): Unit =
+            if (scanRow >= 0) rows(scanRow)(4) = upTo - start
+          while (status == null) {
+            if (entropy) {
+              if (p >= n) { patch(p); status = "no_eoi" }
+              else if (u8(b, p) != 0xff) p += 1
+              else if (p + 1 >= n) { patch(p); status = "no_eoi" }
               else {
-                var j = p // consume fill bytes (runs of FF before the marker byte)
-                while (j < n && (b(j) & 0xff) == 0xff) j += 1
-                if (j >= n) status = "truncated"
+                val m = u8(b, p + 1)
+                if (m == 0x00) p += 2 // stuffed data byte
+                else if (m >= 0xd0 && m <= 0xd7) {
+                  patch(p)
+                  rows += Array(idx, p.toLong, mname(m), None, None)
+                  scanRow = rows.length - 1
+                  idx += 1
+                  p += 2; start = p
+                } else { patch(p); entropy = false } // real marker: back to segment mode
+              }
+            } else if (p >= n) status = "truncated"
+            else if (u8(b, p) != 0xff) status = "malformed"
+            else {
+              var j = p // consume fill bytes (runs of FF before the marker byte)
+              while (j < n && u8(b, j) == 0xff) j += 1
+              if (j >= n) status = "truncated"
+              else {
+                val m = u8(b, j)
+                if (m == 0x00) status = "malformed"
+                else if (m == 0xd9) {
+                  rows += Array(idx, (j - 1).toLong, "EOI", None, None)
+                  idx += 1; status = "ok"
+                } else if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
+                  rows += Array(idx, (j - 1).toLong, mname(m), None, None)
+                  idx += 1; p = j + 1
+                } else if (j + 3 > n) status = "truncated"
                 else {
-                  val m = b(j) & 0xff
-                  if (m == 0x00) status = "malformed"
-                  else if (m == 0xd9) {
-                    out += ((idx, (j - 1).toLong, "EOI", None, None))
-                    idx += 1; status = "ok"
-                  } else if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
-                    out += ((idx, (j - 1).toLong, mname(m), None, None))
-                    idx += 1; p = j + 1
-                  } else if (j + 3 > n) status = "truncated"
+                  val len = u16be(b, j + 1)
+                  if (len < 2) status = "malformed"
+                  else if (j + 1 + len > n) status = "truncated"
                   else {
-                    val len = ((b(j + 1) & 0xff) << 8) | (b(j + 2) & 0xff)
-                    if (len < 2) status = "malformed"
-                    else if (j + 1 + len > n) status = "truncated"
-                    else {
-                      out += ((idx, (j - 1).toLong, mname(m), Some(len), None))
-                      if (m == 0xda) { scanRow = out.length - 1; entropy = true; start = j + 1 + len }
-                      idx += 1
-                      p = j + 1 + len
-                    }
+                    rows += Array(idx, (j - 1).toLong, mname(m), len, None)
+                    if (m == 0xda) { scanRow = rows.length - 1; entropy = true; start = j + 1 + len }
+                    idx += 1
+                    p = j + 1 + len
                   }
                 }
               }
             }
           }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[Int], None: Option[Int]))
-          else es.map { case (i2, off, mk2, sl, ecs) =>
-            (id, status, Some(i2), Some(off), Some(mk2), sl, ecs)
-          }
         }
-      }
-      .toDF("doc_id", "status", "idx", "m_off", "marker", "seg_len", "ecs_len")
-  }
+        Seq(status)
+    }
 
   /** MPEG-1 Layer III bitrate table (kbps by header index 1..14; 0 is
     * "free" and 15 invalid) and sample-rate table (Hz by index 0..2;
@@ -5994,76 +5911,59 @@ object TrainingOps extends Serializable {
     * the scan stage, zero exchange; only headers are read — frame
     * bodies are stepped over by the computed length.
     */
-  def mp3Frames(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, String, Option[Int], Option[Int], Option[Int], Option[Int], Option[Int])]
-          var status: String = null
-          var p = 0
-          var idx = 0
-          def u(i: Int) = b(i) & 0xff
-          // ID3v2 only at offset 0 per spec
-          if (n >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-            val ts = (u(6) << 21) | (u(7) << 14) | (u(8) << 7) | u(9)
-            val tl = 10 + ts
-            if (tl > n) status = "truncated"
+  def mp3Frames(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "f_off BIGINT, kind STRING, br_kbps INT, sr_hz INT, pad INT, flen INT, crc INT",
+        "status") { (b, rows) =>
+      val n = b.length
+      var status: String = null
+      var p = 0
+      var idx = 0
+      def u(i: Int) = u8(b, i)
+      // ID3v2 only at offset 0 per spec
+      if (n >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
+        val ts = (u(6) << 21) | (u(7) << 14) | (u(8) << 7) | u(9)
+        val tl = 10 + ts
+        if (tl > n) status = "truncated"
+        else {
+          rows += Array(idx, 0L, "id3v2", None, None, None, tl, None)
+          idx += 1; p = tl
+        }
+      } else if (n < 2 || u(0) != 0xff || (u(1) & 0xe0) != 0xe0) {
+        status = "not_mp3"
+      }
+      while (status == null) {
+        if (p == n) status = "ok"
+        else if (n - p >= 3 && b(p) == 'T' && b(p + 1) == 'A' && b(p + 2) == 'G') {
+          if (n - p == 128) {
+            rows += Array(idx, p.toLong, "id3v1", None, None, None, 128, None)
+            idx += 1; status = "ok"
+          } else status = "malformed"
+        } else if (n - p < 4) status = "truncated"
+        else if (u(p) != 0xff || (u(p + 1) & 0xe0) != 0xe0) status = "malformed"
+        else {
+          val version = (u(p + 1) >> 3) & 0x3
+          val layer = (u(p + 1) >> 1) & 0x3
+          val noCrc = u(p + 1) & 0x1
+          val brIdx = u(p + 2) >> 4
+          val srIdx = (u(p + 2) >> 2) & 0x3
+          val pad = (u(p + 2) >> 1) & 0x1
+          if (version != 3 || layer != 1) status = "malformed"
+          else if (brIdx == 0) status = "free_bitrate"
+          else if (brIdx == 15 || srIdx == 3) status = "malformed"
+          else {
+            val flen = 144000 * Mp3Bitrates(brIdx) / Mp3Samplerates(srIdx) + pad
+            if (p + flen > n) status = "truncated"
             else {
-              out += ((idx, 0L, "id3v2", None, None, None, Some(tl), None))
-              idx += 1; p = tl
+              rows += Array(idx, p.toLong, "frame", Mp3Bitrates(brIdx),
+                Mp3Samplerates(srIdx), pad, flen, 1 - noCrc)
+              idx += 1; p += flen
             }
-          } else if (n < 2 || u(0) != 0xff || (u(1) & 0xe0) != 0xe0) {
-            status = "not_mp3"
-          }
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p >= 3 && b(p) == 'T' && b(p + 1) == 'A' && b(p + 2) == 'G') {
-              if (n - p == 128) {
-                out += ((idx, p.toLong, "id3v1", None, None, None, Some(128), None))
-                idx += 1; status = "ok"
-              } else status = "malformed"
-            } else if (n - p < 4) status = "truncated"
-            else if (u(p) != 0xff || (u(p + 1) & 0xe0) != 0xe0) status = "malformed"
-            else {
-              val version = (u(p + 1) >> 3) & 0x3
-              val layer = (u(p + 1) >> 1) & 0x3
-              val noCrc = u(p + 1) & 0x1
-              val brIdx = u(p + 2) >> 4
-              val srIdx = (u(p + 2) >> 2) & 0x3
-              val pad = (u(p + 2) >> 1) & 0x1
-              if (version != 3 || layer != 1) status = "malformed"
-              else if (brIdx == 0) status = "free_bitrate"
-              else if (brIdx == 15 || srIdx == 3) status = "malformed"
-              else {
-                val flen = 144000 * Mp3Bitrates(brIdx) / Mp3Samplerates(srIdx) + pad
-                if (p + flen > n) status = "truncated"
-                else {
-                  out += ((idx, p.toLong, "frame", Some(Mp3Bitrates(brIdx)),
-                    Some(Mp3Samplerates(srIdx)), Some(pad), Some(flen),
-                    Some(1 - noCrc)))
-                  idx += 1; p += flen
-                }
-              }
-            }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Int], None: Option[Int]))
-          else es.map { case (i2, off, k, br, sr, pd, fl, cr) =>
-            (id, status, Some(i2), Some(off), Some(k), br, sr, pd, fl, cr)
           }
         }
       }
-      .toDF("doc_id", "status", "idx", "f_off", "kind", "br_kbps", "sr_hz",
-        "pad", "flen", "crc")
-  }
+      Seq(status)
+    }
 
   /** Synthetic zstd payloads for [[zstdFrames]] — six families keyed by
     * doc_id % 6, every length derived from doc_id so the DuckDB oracle
@@ -6085,14 +5985,9 @@ object TrainingOps extends Serializable {
     */
   def syntheticZstdPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le32(v: Long): Unit =
-      (0 until 4).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
-    def magic(): Unit = le32(0xFD2FB528L)
-    def blockHdr(size: Int, btype: Int, last: Int): Unit = {
-      val h = (size << 3) | (btype << 1) | last
-      bb += (h & 0xff).toByte; bb += ((h >> 8) & 0xff).toByte
-      bb += ((h >> 16) & 0xff).toByte
-    }
+    def magic(): Unit = bb ++= le32(0xFD2FB528L)
+    def blockHdr(size: Int, btype: Int, last: Int): Unit =
+      bb ++= le24((size << 3) | (btype << 1) | last)
     def fill(k: Int, c: Int = 'x'): Unit =
       (0 until k).foreach(i => bb += ((c + i % 23) & 0x7f).toByte)
     val r1 = (16 + id % 32).toInt; val r2 = (8 + id % 16).toInt
@@ -6110,7 +6005,7 @@ object TrainingOps extends Serializable {
         blockHdr(r2, 2, 0); fill(r2, 'q')
         blockHdr(rc, 1, 1); bb += 'r'.toByte
       case 1 =>
-        le32(0x184D2A50L + id % 16); le32(sk.toLong); fill(sk, 's')
+        bb ++= le32(0x184D2A50L + id % 16); bb ++= le32(sk.toLong); fill(sk, 's')
         magic(); bb += 0x24.toByte // single-segment + checksum
         bb += raw1.toByte // 1-byte FCS
         blockHdr(raw1, 0, 1); fill(raw1)
@@ -6161,114 +6056,94 @@ object TrainingOps extends Serializable {
     * never copied or decoded. Reference: RFC 8878 §3.1.1 (frame and
     * block headers), §3.1.2 (skippable frames).
     */
-  def zstdFrames(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u(i: Int) = b(i) & 0xff
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, String, Option[String], Option[Int], Option[Int], Option[Long])]
-          var status: String = null
-          var p = 0; var idx = 0
-          if (n < 4 || (le(0, 4) != 0xFD2FB528L &&
-            (le(0, 4) & 0xFFFFFFF0L) != 0x184D2A50L)) status = "not_zstd"
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p < 4) status = "truncated"
+  def zstdFrames(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "z_off BIGINT, kind STRING, btype STRING, bsize INT, last INT, fcs BIGINT",
+        "status") { (b, rows) =>
+      val n = b.length
+      var status: String = null
+      var p = 0; var idx = 0
+      if (n < 4 || (u32le(b, 0) != 0xFD2FB528L &&
+        (u32le(b, 0) & 0xFFFFFFF0L) != 0x184D2A50L)) status = "not_zstd"
+      while (status == null) {
+        if (p == n) status = "ok"
+        else if (n - p < 4) status = "truncated"
+        else {
+          val m = u32le(b, p)
+          if ((m & 0xFFFFFFF0L) == 0x184D2A50L) {
+            if (n - p < 8) status = "truncated"
             else {
-              val m = le(p, 4)
-              if ((m & 0xFFFFFFF0L) == 0x184D2A50L) {
-                if (n - p < 8) status = "truncated"
-                else {
-                  val sz = le(p + 4, 4)
-                  if (p + 8 + sz > n) status = "truncated"
+              val sz = u32le(b, p + 4)
+              if (p + 8 + sz > n) status = "truncated"
+              else {
+                rows += Array(idx, p.toLong, "skippable", None, sz.toInt, None, None)
+                idx += 1; p += 8 + sz.toInt
+              }
+            }
+          } else if (m != 0xFD2FB528L) status = "malformed"
+          else if (n - p < 5) status = "truncated"
+          else {
+            val d = u8(b, p + 4)
+            val fcsFlag = d >> 6; val single = (d >> 5) & 1
+            val reserved = (d >> 3) & 1; val ck = (d >> 2) & 1
+            val didSize = Array(0, 1, 2, 4)(d & 3)
+            if (reserved == 1) status = "malformed"
+            else {
+              val fcsSize = fcsFlag match {
+                case 0 => if (single == 1) 1 else 0
+                case 1 => 2
+                case 2 => 4
+                case _ => 8
+              }
+              val hl = 5 + (1 - single) + didSize + fcsSize
+              if (p + hl > n) status = "truncated"
+              else {
+                val fcsOff = p + 5 + (1 - single) + didSize
+                val fcs: Option[Long] = fcsSize match {
+                  case 0 => None
+                  case 1 => Some(u8(b, fcsOff).toLong)
+                  case 2 => Some(u16le(b, fcsOff) + 256L)
+                  case 4 => Some(u32le(b, fcsOff))
+                  case _ => Some(u64le(b, fcsOff))
+                }
+                rows += Array(idx, p.toLong, "frame", None, hl, None, fcs)
+                idx += 1; p += hl
+                var lastSeen = false
+                while (status == null && !lastSeen) {
+                  if (n - p < 3) status = "truncated"
                   else {
-                    out += ((idx, p.toLong, "skippable", None, Some(sz.toInt), None, None))
-                    idx += 1; p += 8 + sz.toInt
+                    val h = u24le(b, p)
+                    val lastB = h & 1
+                    val bt = (h >> 1) & 3
+                    val bs = h >> 3
+                    if (bt == 3) status = "malformed"
+                    else {
+                      val consumed = 3 + (if (bt == 1) 1 else bs)
+                      if (p + consumed > n) status = "truncated"
+                      else {
+                        val btName =
+                          if (bt == 0) "raw" else if (bt == 1) "rle" else "compressed"
+                        rows += Array(idx, p.toLong, "block", btName, bs, lastB, None)
+                        idx += 1; p += consumed
+                        if (lastB == 1) lastSeen = true
+                      }
+                    }
                   }
                 }
-              } else if (m != 0xFD2FB528L) status = "malformed"
-              else if (n - p < 5) status = "truncated"
-              else {
-                val d = u(p + 4)
-                val fcsFlag = d >> 6; val single = (d >> 5) & 1
-                val reserved = (d >> 3) & 1; val ck = (d >> 2) & 1
-                val didSize = Array(0, 1, 2, 4)(d & 3)
-                if (reserved == 1) status = "malformed"
-                else {
-                  val fcsSize = fcsFlag match {
-                    case 0 => if (single == 1) 1 else 0
-                    case 1 => 2
-                    case 2 => 4
-                    case _ => 8
-                  }
-                  val hl = 5 + (1 - single) + didSize + fcsSize
-                  if (p + hl > n) status = "truncated"
+                if (status == null && ck == 1) {
+                  if (n - p < 4) status = "truncated"
                   else {
-                    val fcsOff = p + 5 + (1 - single) + didSize
-                    val fcs: Option[Long] =
-                      if (fcsSize == 0) None
-                      else if (fcsSize == 2) Some(le(fcsOff, 2) + 256L)
-                      else Some(le(fcsOff, fcsSize))
-                    out += ((idx, p.toLong, "frame", None, Some(hl), None, fcs))
-                    idx += 1; p += hl
-                    var lastSeen = false
-                    while (status == null && !lastSeen) {
-                      if (n - p < 3) status = "truncated"
-                      else {
-                        val h = le(p, 3)
-                        val lastB = (h & 1).toInt
-                        val bt = ((h >> 1) & 3).toInt
-                        val bs = (h >> 3).toInt
-                        if (bt == 3) status = "malformed"
-                        else {
-                          val consumed = 3 + (if (bt == 1) 1 else bs)
-                          if (p + consumed > n) status = "truncated"
-                          else {
-                            val btName =
-                              if (bt == 0) "raw" else if (bt == 1) "rle" else "compressed"
-                            out += ((idx, p.toLong, "block", Some(btName),
-                              Some(bs), Some(lastB), None))
-                            idx += 1; p += consumed
-                            if (lastB == 1) lastSeen = true
-                          }
-                        }
-                      }
-                    }
-                    if (status == null && ck == 1) {
-                      if (n - p < 4) status = "truncated"
-                      else {
-                        out += ((idx, p.toLong, "checksum", None, Some(4), None, None))
-                        idx += 1; p += 4
-                      }
-                    }
+                    rows += Array(idx, p.toLong, "checksum", None, 4, None, None)
+                    idx += 1; p += 4
                   }
                 }
               }
             }
           }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[String], None: Option[Int],
-              None: Option[Int], None: Option[Long]))
-          else es.map { case (i2, off, k, bt, bs, la, fc) =>
-            (id, status, Some(i2), Some(off), Some(k), bt, bs, la, fc)
-          }
         }
       }
-      .toDF("doc_id", "status", "idx", "z_off", "kind", "btype", "bsize",
-        "last", "fcs")
-  }
+      Seq(status)
+    }
 
   /** Synthetic EBML/Matroska payloads for [[ebmlElements]] — six
     * families keyed by doc_id % 6 (dc = 11+id%16 header content,
@@ -6354,99 +6229,83 @@ object TrainingOps extends Serializable {
     * stepped over. Reference: RFC 8794 §4 (VINT), §6.2 (unknown data
     * size); Matroska element IDs from the IANA registry.
     */
-  def ebmlElements(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u(i: Int) = b(i) & 0xff
-          def vintWidth(fb: Int, max: Int): Int = {
-            var w = 1; var mask = 0x80
-            while (mask > 0 && (fb & mask) == 0) { w += 1; mask >>= 1 }
-            if (fb == 0 || w > max) -1 else w
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, Int, String, Option[Long], Int)]
-          var status: String = null
-          var idx = 0
-          // read one element header at p bounded by end; returns
-          // (idHex, size Option, headerLen) or null after setting status
-          def readHeader(p: Int, end: Int): (String, Option[Long], Int) = {
-            if (end - p < 1) { status = "truncated"; return null }
-            val iw = vintWidth(u(p), 4)
-            if (iw < 0) { status = "malformed"; return null }
-            if (p + iw > end) { status = "truncated"; return null }
-            val idHex = (0 until iw).map(k => f"${u(p + k)}%02X").mkString
-            val sp = p + iw
-            if (end - sp < 1) { status = "truncated"; return null }
-            val sw = vintWidth(u(sp), 8)
-            if (sw < 0) { status = "malformed"; return null }
-            if (sp + sw > end) { status = "truncated"; return null }
-            var v = (u(sp) & (0xff >> sw)).toLong
-            var allOnes = (u(sp) & (0xff >> sw)) == (0xff >> sw)
-            (1 until sw).foreach { k =>
-              v = (v << 8) | u(sp + k); if (u(sp + k) != 0xff) allOnes = false
-            }
-            (idHex, if (allOnes) None else Some(v), iw + sw)
-          }
-          if (n < 4 || !(u(0) == 0x1a && u(1) == 0x45 && u(2) == 0xdf && u(3) == 0xa3))
-            status = "not_ebml"
-          var p = 0
-          while (status == null) {
-            if (p == n) status = "ok"
+  def ebmlElements(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "e_off BIGINT, level INT, id_hex STRING, esize BIGINT, hdr_len INT",
+        "status") { (b, rows) =>
+      val n = b.length
+      def u(i: Int) = u8(b, i)
+      def vintWidth(fb: Int, max: Int): Int = {
+        var w = 1; var mask = 0x80
+        while (mask > 0 && (fb & mask) == 0) { w += 1; mask >>= 1 }
+        if (fb == 0 || w > max) -1 else w
+      }
+      var status: String = null
+      var idx = 0
+      // read one element header at p bounded by end; returns
+      // (idHex, size Option, headerLen) or null after setting status
+      def readHeader(p: Int, end: Int): (String, Option[Long], Int) = {
+        if (end - p < 1) { status = "truncated"; return null }
+        val iw = vintWidth(u(p), 4)
+        if (iw < 0) { status = "malformed"; return null }
+        if (p + iw > end) { status = "truncated"; return null }
+        val idHex = (0 until iw).map(k => f"${u(p + k)}%02X").mkString
+        val sp = p + iw
+        if (end - sp < 1) { status = "truncated"; return null }
+        val sw = vintWidth(u(sp), 8)
+        if (sw < 0) { status = "malformed"; return null }
+        if (sp + sw > end) { status = "truncated"; return null }
+        var v = (u(sp) & (0xff >> sw)).toLong
+        var allOnes = (u(sp) & (0xff >> sw)) == (0xff >> sw)
+        (1 until sw).foreach { k =>
+          v = (v << 8) | u(sp + k); if (u(sp + k) != 0xff) allOnes = false
+        }
+        (idHex, if (allOnes) None else Some(v), iw + sw)
+      }
+      if (n < 4 || !(u(0) == 0x1a && u(1) == 0x45 && u(2) == 0xdf && u(3) == 0xa3))
+        status = "not_ebml"
+      var p = 0
+      while (status == null) {
+        if (p == n) status = "ok"
+        else {
+          val h = readHeader(p, n)
+          if (h != null) {
+            val (idHex, size, hl) = h
+            if (size.isEmpty && idHex != "18538067") status = "malformed"
             else {
-              val h = readHeader(p, n)
-              if (h != null) {
-                val (idHex, size, hl) = h
-                if (size.isEmpty && idHex != "18538067") status = "malformed"
-                else {
-                  out += ((idx, p.toLong, 0, idHex, size, hl)); idx += 1
-                  val cStart = p + hl
-                  val cEnd = size.map(sz => cStart + sz).getOrElse(n.toLong)
-                  if (cEnd > n) status = "truncated"
-                  else if (idHex == "18538067") {
-                    // descend one level into the Segment; inside a
-                    // DECLARED segment a child crossing the boundary is
-                    // malformed (disagreeing extents), inside an
-                    // unknown-size one it is plain truncation (EOF)
-                    val segUnknown = size.isEmpty
-                    var q = cStart
-                    while (status == null && q < cEnd) {
-                      val ch = readHeader(q, cEnd.toInt)
-                      if (ch != null) {
-                        val (cid, csz, chl) = ch
-                        if (csz.isEmpty) status = "malformed"
-                        else if (q + chl + csz.get > cEnd)
-                          status = if (segUnknown) "truncated" else "malformed"
-                        else {
-                          out += ((idx, q.toLong, 1, cid, csz, chl)); idx += 1
-                          q += chl + csz.get.toInt
-                        }
-                      } else if (status == "truncated" && !segUnknown)
-                        status = "malformed"
+              rows += Array(idx, p.toLong, 0, idHex, size, hl); idx += 1
+              val cStart = p + hl
+              val cEnd = size.map(sz => cStart + sz).getOrElse(n.toLong)
+              if (cEnd > n) status = "truncated"
+              else if (idHex == "18538067") {
+                // descend one level into the Segment; inside a
+                // DECLARED segment a child crossing the boundary is
+                // malformed (disagreeing extents), inside an
+                // unknown-size one it is plain truncation (EOF)
+                val segUnknown = size.isEmpty
+                var q = cStart
+                while (status == null && q < cEnd) {
+                  val ch = readHeader(q, cEnd.toInt)
+                  if (ch != null) {
+                    val (cid, csz, chl) = ch
+                    if (csz.isEmpty) status = "malformed"
+                    else if (q + chl + csz.get > cEnd)
+                      status = if (segUnknown) "truncated" else "malformed"
+                    else {
+                      rows += Array(idx, q.toLong, 1, cid, csz, chl); idx += 1
+                      q += chl + csz.get.toInt
                     }
-                    p = cEnd.toInt
-                  } else p = cEnd.toInt
+                  } else if (status == "truncated" && !segUnknown)
+                    status = "malformed"
                 }
-              }
+                p = cEnd.toInt
+              } else p = cEnd.toInt
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[Int], None: Option[String], None: Option[Long],
-              None: Option[Int]))
-          else es.map { case (i2, off, lvl, ih, sz, hl) =>
-            (id, status, Some(i2), Some(off), Some(lvl), Some(ih), sz, Some(hl))
           }
         }
       }
-      .toDF("doc_id", "status", "idx", "e_off", "level", "id_hex", "esize",
-        "hdr_len")
-  }
+      Seq(status)
+    }
 
   /** Ogg page CRC (RFC 3533): CRC-32 with polynomial 0x04c11db7,
     * DIRECT algorithm — zero initial value, no final xor, no bit
@@ -6493,8 +6352,6 @@ object TrainingOps extends Serializable {
     */
   def syntheticOggPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le(v: Long, k: Int): Unit =
-      (0 until k).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     val l1 = (10 + id % 50).toInt; val l2 = (5 + id % 20).toInt
     val r = (7 + id % 40).toInt; val l3 = (3 + id % 30).toInt
     val gran = id % 1000; val serial = id % 97
@@ -6503,16 +6360,16 @@ object TrainingOps extends Serializable {
       val start = bb.length
       bb ++= "OggS".getBytes("US-ASCII")
       bb += version.toByte; bb += flags.toByte
-      le(gran, 8); le(serial, 4); le(seq, 4)
+      bb ++= le64(gran); bb ++= le32(serial); bb ++= le32(seq)
       val crcPos = bb.length
-      le(0L, 4) // crc placeholder
+      bb ++= le32(0L) // crc placeholder
       bb += lacing.length.toByte
       lacing.foreach(v => bb += v.toByte)
       lacing.zipWithIndex.foreach { case (v, k) =>
         (0 until v).foreach(j => bb += (('a' + (k + j) % 23) & 0x7f).toByte)
       }
       val crc = oggCrc(bb.toArray, start, bb.length - start)
-      (0 until 4).foreach(i => bb(crcPos + i) = ((crc >> (8 * i)) & 0xff).toByte)
+      bb.patchInPlace(crcPos, le32(crc), 4)
       if (corruptCrc && lacing.nonEmpty && lacing.head > 0)
         bb(bb.length - 1) = (bb(bb.length - 1) ^ 0x01).toByte
     }
@@ -6525,7 +6382,7 @@ object TrainingOps extends Serializable {
       case 2 =>
         bb ++= "OggS".getBytes("US-ASCII")
         bb += 0.toByte; bb += 0x02.toByte
-        le(gran, 8); le(serial, 4); le(0L, 4); le(0L, 4)
+        bb ++= le64(gran); bb ++= le32(serial); bb ++= le32(0L); bb ++= le32(0L)
         bb += 5.toByte; bb += 40.toByte; bb += 40.toByte // table cut short
       case 3 =>
         page(0x02, 0L, Seq(l1))
@@ -6557,80 +6414,57 @@ object TrainingOps extends Serializable {
     * Scale shape: typed mapPartitions in the scan stage, zero
     * exchange; body bytes are touched only by the CRC update.
     */
-  def oggPages(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u(i: Int) = b(i) & 0xff
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, Int, Long, Long, Long, Int, Int, Int, Int)]
-          var status: String = null
-          var p = 0; var idx = 0
-          if (n < 4 || b(0) != 'O' || b(1) != 'g' || b(2) != 'g' || b(3) != 'S')
-            status = "not_ogg"
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p < 27) status = "truncated"
-            else if (!(b(p) == 'O' && b(p + 1) == 'g' && b(p + 2) == 'g' && b(p + 3) == 'S'))
-              status = "malformed"
-            else if (u(p + 4) != 0) status = "malformed"
-            else {
-              val flags = u(p + 5)
-              val gran = le(p + 6, 8)
-              val serial = le(p + 14, 4)
-              val seq = le(p + 18, 4)
-              val nseg = u(p + 26)
-              if (p + 27 + nseg > n) status = "truncated"
-              else {
-                var body = 0; var pkts = 0
-                (0 until nseg).foreach { k =>
-                  val v = u(p + 27 + k)
-                  body += v; if (v < 255) pkts += 1
-                }
-                val total = 27 + nseg + body
-                if (p + total > n) status = "truncated"
-                else {
-                  // CRC over the page with its CRC field zeroed
-                  var c = 0
-                  var i = p
-                  while (i < p + total) {
-                    val byte = if (i >= p + 22 && i < p + 26) 0 else u(i)
-                    c = (c << 8) ^ OggCrcTable(((c >>> 24) ^ byte) & 0xff)
-                    i += 1
-                  }
-                  val stored = le(p + 22, 4)
-                  val ok = if ((c & 0xffffffffL) == stored) 1 else 0
-                  out += ((idx, p.toLong, flags, gran, serial, seq, nseg,
-                    body, pkts, ok))
-                  idx += 1; p += total
-                }
-              }
+  def oggPages(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "p_off BIGINT, flags INT, granule BIGINT, serial BIGINT, seq BIGINT, n_segs INT, " +
+        "body_len INT, n_packets INT, crc_ok INT", "status") { (b, rows) =>
+      val n = b.length
+      def u(i: Int) = u8(b, i)
+      var status: String = null
+      var p = 0; var idx = 0
+      if (n < 4 || b(0) != 'O' || b(1) != 'g' || b(2) != 'g' || b(3) != 'S')
+        status = "not_ogg"
+      while (status == null) {
+        if (p == n) status = "ok"
+        else if (n - p < 27) status = "truncated"
+        else if (!(b(p) == 'O' && b(p + 1) == 'g' && b(p + 2) == 'g' && b(p + 3) == 'S'))
+          status = "malformed"
+        else if (u(p + 4) != 0) status = "malformed"
+        else {
+          val flags = u(p + 5)
+          val gran = u64le(b, p + 6)
+          val serial = u32le(b, p + 14)
+          val seq = u32le(b, p + 18)
+          val nseg = u(p + 26)
+          if (p + 27 + nseg > n) status = "truncated"
+          else {
+            var body = 0; var pkts = 0
+            (0 until nseg).foreach { k =>
+              val v = u(p + 27 + k)
+              body += v; if (v < 255) pkts += 1
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[Int], None: Option[Long], None: Option[Long],
-              None: Option[Long], None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Int]))
-          else es.map { case (i2, off, fl, gr, se, sq, ns, bo, pk, ok) =>
-            (id, status, Some(i2), Some(off), Some(fl), Some(gr), Some(se),
-              Some(sq), Some(ns), Some(bo), Some(pk), Some(ok))
+            val total = 27 + nseg + body
+            if (p + total > n) status = "truncated"
+            else {
+              // CRC over the page with its CRC field zeroed
+              var c = 0
+              var i = p
+              while (i < p + total) {
+                val byte = if (i >= p + 22 && i < p + 26) 0 else u(i)
+                c = (c << 8) ^ OggCrcTable(((c >>> 24) ^ byte) & 0xff)
+                i += 1
+              }
+              val stored = u32le(b, p + 22)
+              val ok = if ((c & 0xffffffffL) == stored) 1 else 0
+              rows += Array(idx, p.toLong, flags, gran, serial, seq, nseg,
+                body, pkts, ok)
+              idx += 1; p += total
+            }
           }
         }
       }
-      .toDF("doc_id", "status", "idx", "p_off", "flags", "granule", "serial",
-        "seq", "n_segs", "body_len", "n_packets", "crc_ok")
-  }
+      Seq(status)
+    }
 
   /** TFRecord masked CRC32C (the TensorFlow framing convention):
     * crc32c (Castagnoli — java.util.zip.CRC32C, NOT the zlib
@@ -6662,17 +6496,14 @@ object TrainingOps extends Serializable {
     */
   def syntheticTfrecordPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le(v: Long, k: Int): Unit =
-      (0 until k).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     val lens = Seq((8 + id % 40).toInt, (5 + id % 25).toInt, (3 + id % 10).toInt)
     def record(i: Int, declaredLen: Int, actualLen: Int): Unit = {
-      val lenBytes = new Array[Byte](8)
-      (0 until 8).foreach(k => lenBytes(k) = ((declaredLen.toLong >> (8 * k)) & 0xff).toByte)
+      val lenBytes = le64(declaredLen)
       bb ++= lenBytes
-      le(tfMaskedCrc(lenBytes, 0, 8).toLong & 0xffffffffL, 4)
+      bb ++= le32(tfMaskedCrc(lenBytes, 0, 8))
       val dataStart = bb.length
       (0 until actualLen).foreach(_ => bb += ('a' + i).toByte)
-      le(tfMaskedCrc(bb.toArray, dataStart, actualLen).toLong & 0xffffffffL, 4)
+      bb ++= le32(tfMaskedCrc(bb.toArray, dataStart, actualLen))
     }
     (id % 5) match {
       case 0 => (0 until 3).foreach(i => record(i, lens(i), lens(i)))
@@ -6720,59 +6551,38 @@ object TrainingOps extends Serializable {
     * Scale shape: typed mapPartitions in the scan stage, zero
     * exchange; payload bytes feed only the CRC and digest.
     */
-  def tfrecordRecords(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, Long, Int, Int, String)]
-          var status: String = null
-          var p = 0; var idx = 0
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p < 12) status = "truncated"
+  def tfrecordRecords(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "r_off BIGINT, rec_len BIGINT, len_crc_ok INT, data_crc_ok INT, payload_md5 STRING",
+        "status") {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      (b, rows) =>
+        val n = b.length
+        var status: String = null
+        var p = 0; var idx = 0
+        while (status == null) {
+          if (p == n) status = "ok"
+          else if (n - p < 12) status = "truncated"
+          else {
+            val len = u64le(b, p)
+            val lenCrcOk =
+              (tfMaskedCrc(b, p, 8).toLong & 0xffffffffL) == u32le(b, p + 8)
+            if (!lenCrcOk) status = "corrupt_len"
+            else if (p + 12 + len + 4 > n) status = "truncated"
             else {
-              val len = le(p, 8)
-              val lenCrcOk =
-                (tfMaskedCrc(b, p, 8).toLong & 0xffffffffL) == le(p + 8, 4)
-              if (!lenCrcOk) status = "corrupt_len"
-              else if (p + 12 + len + 4 > n) status = "truncated"
-              else {
-                val dataCrcOk =
-                  (tfMaskedCrc(b, p + 12, len.toInt).toLong & 0xffffffffL) ==
-                    le(p + 12 + len.toInt, 4)
-                md.reset()
-                md.update(b, p + 12, len.toInt)
-                val hex = md.digest().map("%02x".format(_)).mkString
-                out += ((idx, p.toLong, len, 1, if (dataCrcOk) 1 else 0, hex))
-                idx += 1; p += 12 + len.toInt + 4
-              }
+              val dataCrcOk =
+                (tfMaskedCrc(b, p + 12, len.toInt).toLong & 0xffffffffL) ==
+                  u32le(b, p + 12 + len.toInt)
+              md.reset()
+              md.update(b, p + 12, len.toInt)
+              val hex = md.digest().map("%02x".format(_)).mkString
+              rows += Array(idx, p.toLong, len, 1, if (dataCrcOk) 1 else 0, hex)
+              idx += 1; p += 12 + len.toInt + 4
             }
           }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[Long], None: Option[Int], None: Option[Int],
-              None: Option[String]))
-          else es.map { case (i2, off, ln, lc, dc, h) =>
-            (id, status, Some(i2), Some(off), Some(ln), Some(lc), Some(dc),
-              Some(h))
-          }
         }
-      }
-      .toDF("doc_id", "status", "idx", "r_off", "rec_len", "len_crc_ok",
-        "data_crc_ok", "payload_md5")
-  }
+        Seq(status)
+    }
 
   /** Strict RFC-8259 JSON validity check, from scratch (no library
     * parse on the executor hot path): full grammar — nested
@@ -6924,43 +6734,36 @@ object TrainingOps extends Serializable {
     * Scale shape: typed mapPartitions in the scan stage, zero
     * exchange; line bytes feed only the validator and digest.
     */
-  def jsonlRecords(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Int, Long, Long, String, Int, String)]
-          var p = 0; var idx = 0
-          while (p < n) {
-            var e = p
-            while (e < n && b(e) != '\n') e += 1
-            val len = e - p
-            val line = new String(b, p, len, java.nio.charset.StandardCharsets.UTF_8)
-            md.reset(); md.update(b, p, len)
-            val hex = md.digest().map("%02x".format(_)).mkString
-            val t = line.trim
-            val kind =
-              if (t.isEmpty) "blank"
-              else t.charAt(0) match {
-                case '{' => "object"
-                case '[' => "array"
-                case _ => "scalar"
-              }
-            val valid = if (t.nonEmpty && jsonValid(line)) 1 else 0
-            out += ((id, idx, p.toLong, len.toLong, kind, valid, hex))
-            idx += 1
-            p = e + 1
-          }
-          out
+  def jsonlRecords(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, idx INT NOT NULL, " +
+        "l_off BIGINT NOT NULL, l_len BIGINT NOT NULL, kind STRING, valid INT NOT NULL, " +
+        "payload_md5 STRING") {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      (b, rows) =>
+        val n = b.length
+        var p = 0; var idx = 0
+        while (p < n) {
+          var e = p
+          while (e < n && b(e) != '\n') e += 1
+          val len = e - p
+          val line = new String(b, p, len, java.nio.charset.StandardCharsets.UTF_8)
+          md.reset(); md.update(b, p, len)
+          val hex = md.digest().map("%02x".format(_)).mkString
+          val t = line.trim
+          val kind =
+            if (t.isEmpty) "blank"
+            else t.charAt(0) match {
+              case '{' => "object"
+              case '[' => "array"
+              case _ => "scalar"
+            }
+          val valid = if (t.nonEmpty && jsonValid(line)) 1 else 0
+          rows += Array(idx, p.toLong, len.toLong, kind, valid, hex)
+          idx += 1
+          p = e + 1
         }
-      }
-      .toDF("doc_id", "idx", "l_off", "l_len", "kind", "valid", "payload_md5")
-  }
+        Nil
+    }
 
   /** JSONL shard payload assembly — the WRITE side of [[jsonlRecords]]
     * and the materialization of [[tokenShards]]' plan: group documents
@@ -7033,151 +6836,143 @@ object TrainingOps extends Serializable {
     * m-family rule; only header-plane fields leave the executor, never
     * tensor bytes.
     */
-  def npyHeaders(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, raw) =>
-        val b = if (raw == null) Array.emptyByteArray else raw
-        val n = b.length
-        def fail(st: String, ver: Option[String] = None, hlen: Option[Long] = None):
-            (Long, String, Option[String], Option[String], Option[Boolean],
-              Option[Int], Option[Long], Option[Int], Option[Long], Option[Long]) =
-          (id, st, ver, None, None, None, None, None, hlen, None)
-        val magic = Array(0x93, 'N', 'U', 'M', 'P', 'Y').map(_.toByte)
-        if (n < 8 || !magic.indices.forall(i => b(i) == magic(i))) fail("not_npy")
+  def npyHeaders(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, status STRING, version STRING, " +
+        "descr STRING, fortran BOOLEAN, n_dims INT, n_elems BIGINT, item_size INT, " +
+        "header_len BIGINT, data_len BIGINT") { b =>
+      val n = b.length
+      def fail(st: String, ver: Option[String] = None, hlen: Option[Long] = None) =
+        (st, ver, None, None, None, None, None, hlen, None)
+      val magic = Array(0x93, 'N', 'U', 'M', 'P', 'Y').map(_.toByte)
+      if (n < 8 || !magic.indices.forall(i => b(i) == magic(i))) fail("not_npy")
+      else {
+        val maj = b(6) & 0xff
+        val min = b(7) & 0xff
+        val ver = Some(s"$maj.$min")
+        if (maj < 1 || maj > 3) fail("bad_version", ver)
         else {
-          val maj = b(6) & 0xff
-          val min = b(7) & 0xff
-          val ver = Some(s"$maj.$min")
-          if (maj < 1 || maj > 3) fail("bad_version", ver)
+          val pre = if (maj == 1) 10 else 12
+          if (n < pre) fail("truncated_header", ver)
           else {
-            val pre = if (maj == 1) 10 else 12
-            if (n < pre) fail("truncated_header", ver)
+            val hlen = if (maj == 1) u16le(b, 8).toLong else u32le(b, 8)
+            val hdrEnd = pre + hlen
+            if (hdrEnd > n) fail("truncated_header", ver, Some(hlen))
             else {
-              var hlen = 0L
-              (pre - 1) to 8 by -1 foreach { i => hlen = (hlen << 8) | (b(i) & 0xffL) }
-              val hdrEnd = pre + hlen
-              if (hdrEnd > n) fail("truncated_header", ver, Some(hlen))
+              val hdr = new String(b, pre, hlen.toInt, "US-ASCII")
+              // from-scratch dict-literal scan
+              var p = 0
+              val m = scala.collection.mutable.HashMap.empty[String, Any]
+              def ws(): Unit = while (p < hdr.length &&
+                (hdr(p) == ' ' || hdr(p) == '\n')) p += 1
+              var ok = hdr.nonEmpty && hdr.last == '\n'
+              ws()
+              if (!ok || p >= hdr.length || hdr(p) != '{') ok = false
               else {
-                val hdr = new String(b, pre, hlen.toInt, "US-ASCII")
-                // from-scratch dict-literal scan
-                var p = 0
-                val m = scala.collection.mutable.HashMap.empty[String, Any]
-                def ws(): Unit = while (p < hdr.length &&
-                  (hdr(p) == ' ' || hdr(p) == '\n')) p += 1
-                var ok = hdr.nonEmpty && hdr.last == '\n'
-                ws()
-                if (!ok || p >= hdr.length || hdr(p) != '{') ok = false
-                else {
-                  p += 1
-                  var open = true
-                  while (ok && open) {
-                    ws()
-                    if (p < hdr.length && hdr(p) == '}') { p += 1; open = false }
-                    else if (p < hdr.length && hdr(p) == '\'') {
-                      val e = hdr.indexOf('\'', p + 1)
-                      if (e < 0) ok = false
+                p += 1
+                var open = true
+                while (ok && open) {
+                  ws()
+                  if (p < hdr.length && hdr(p) == '}') { p += 1; open = false }
+                  else if (p < hdr.length && hdr(p) == '\'') {
+                    val e = hdr.indexOf('\'', p + 1)
+                    if (e < 0) ok = false
+                    else {
+                      val key = hdr.substring(p + 1, e)
+                      p = e + 1; ws()
+                      if (p >= hdr.length || hdr(p) != ':') ok = false
                       else {
-                        val key = hdr.substring(p + 1, e)
-                        p = e + 1; ws()
-                        if (p >= hdr.length || hdr(p) != ':') ok = false
-                        else {
-                          p += 1; ws()
-                          if (p < hdr.length && hdr(p) == '\'') {
-                            val e2 = hdr.indexOf('\'', p + 1)
-                            if (e2 < 0) ok = false
-                            else { m(key) = hdr.substring(p + 1, e2); p = e2 + 1 }
-                          } else if (hdr.startsWith("True", p)) { m(key) = true; p += 4 }
-                          else if (hdr.startsWith("False", p)) { m(key) = false; p += 5 }
-                          else if (p < hdr.length && hdr(p) == '(') {
-                            p += 1
-                            val dims = scala.collection.mutable.ArrayBuffer.empty[Long]
-                            var tup = true
-                            while (ok && tup) {
-                              ws()
-                              if (p < hdr.length && hdr(p) == ')') { p += 1; tup = false }
+                        p += 1; ws()
+                        if (p < hdr.length && hdr(p) == '\'') {
+                          val e2 = hdr.indexOf('\'', p + 1)
+                          if (e2 < 0) ok = false
+                          else { m(key) = hdr.substring(p + 1, e2); p = e2 + 1 }
+                        } else if (hdr.startsWith("True", p)) { m(key) = true; p += 4 }
+                        else if (hdr.startsWith("False", p)) { m(key) = false; p += 5 }
+                        else if (p < hdr.length && hdr(p) == '(') {
+                          p += 1
+                          val dims = scala.collection.mutable.ArrayBuffer.empty[Long]
+                          var tup = true
+                          while (ok && tup) {
+                            ws()
+                            if (p < hdr.length && hdr(p) == ')') { p += 1; tup = false }
+                            else {
+                              val s0 = p
+                              while (p < hdr.length && hdr(p).isDigit) p += 1
+                              // 18-digit cap: fits a Long; a longer run
+                              // is garbage, not a tensor dimension
+                              if (p == s0 || p - s0 > 18) ok = false
                               else {
-                                val s0 = p
-                                while (p < hdr.length && hdr(p).isDigit) p += 1
-                                // 18-digit cap: fits a Long; a longer run
-                                // is garbage, not a tensor dimension
-                                if (p == s0 || p - s0 > 18) ok = false
-                                else {
-                                  dims += hdr.substring(s0, p).toLong
-                                  ws()
-                                  if (p < hdr.length && hdr(p) == ',') p += 1
-                                  else if (p < hdr.length && hdr(p) == ')') ()
-                                  else ok = false
-                                }
+                                dims += hdr.substring(s0, p).toLong
+                                ws()
+                                if (p < hdr.length && hdr(p) == ',') p += 1
+                                else if (p < hdr.length && hdr(p) == ')') ()
+                                else ok = false
                               }
                             }
-                            if (ok) m(key) = dims.toSeq
-                          } else ok = false
-                          if (ok) {
-                            ws()
-                            if (p < hdr.length && hdr(p) == ',') p += 1
                           }
+                          if (ok) m(key) = dims.toSeq
+                        } else ok = false
+                        if (ok) {
+                          ws()
+                          if (p < hdr.length && hdr(p) == ',') p += 1
                         }
                       }
-                    } else ok = false
-                  }
-                }
-                val descr = m.get("descr").collect { case s: String => s }
-                val fortran = m.get("fortran_order").collect { case x: Boolean => x }
-                val shape = m.get("shape").collect { case s: Seq[_] =>
-                  s.collect { case l: Long => l } }
-                // numpy descr grammar: optional byte-order char, one type
-                // char, digits, optional [unit] suffix. Item size = the
-                // digits AFTER the type char (trailing-digit parsing would
-                // fail '<M8[ns]' datetimes entirely), times 4 for 'U'
-                // (UCS-4 code points, the one dtype whose digit count is
-                // not bytes). 9-digit cap fits an Int.
-                val itemSize = descr.flatMap { d =>
-                  var q = 0
-                  if (q < d.length && "<>|=".indexOf(d.charAt(q).toInt) >= 0) q += 1
-                  if (q >= d.length) None
-                  else {
-                    val tc = d.charAt(q)
-                    q += 1
-                    val s0 = q
-                    while (q < d.length && d.charAt(q).isDigit) q += 1
-                    // 1e8-element cap: 4x it still fits an Int, and no
-                    // physical dtype is 100 MB/element — a larger claim
-                    // is a corrupt header, not a tensor
-                    if (q == s0 || q - s0 > 9) None
-                    else d.substring(s0, q).toInt match {
-                      case base if base > 100000000 => None
-                      case base => Some(if (tc == 'U') 4 * base else base)
                     }
+                  } else ok = false
+                }
+              }
+              val descr = m.get("descr").collect { case s: String => s }
+              val fortran = m.get("fortran_order").collect { case x: Boolean => x }
+              val shape = m.get("shape").collect { case s: Seq[_] =>
+                s.collect { case l: Long => l } }
+              // numpy descr grammar: optional byte-order char, one type
+              // char, digits, optional [unit] suffix. Item size = the
+              // digits AFTER the type char (trailing-digit parsing would
+              // fail '<M8[ns]' datetimes entirely), times 4 for 'U'
+              // (UCS-4 code points, the one dtype whose digit count is
+              // not bytes). 9-digit cap fits an Int.
+              val itemSize = descr.flatMap { d =>
+                var q = 0
+                if (q < d.length && "<>|=".indexOf(d.charAt(q).toInt) >= 0) q += 1
+                if (q >= d.length) None
+                else {
+                  val tc = d.charAt(q)
+                  q += 1
+                  val s0 = q
+                  while (q < d.length && d.charAt(q).isDigit) q += 1
+                  // 1e8-element cap: 4x it still fits an Int, and no
+                  // physical dtype is 100 MB/element — a larger claim
+                  // is a corrupt header, not a tensor
+                  if (q == s0 || q - s0 > 9) None
+                  else d.substring(s0, q).toInt match {
+                    case base if base > 100000000 => None
+                    case base => Some(if (tc == 'U') 4 * base else base)
                   }
                 }
-                // overflow-checked extent: a crafted shape like
-                // (9e17, 9e17) must surface as bad_header, never wrap
-                // into a negative expected length that reads as 'ok'
-                val extent: Option[(Long, Long)] = // (nElems, expected)
-                  if (shape.isEmpty || itemSize.isEmpty) None
-                  else try {
-                    val ne = shape.get.foldLeft(1L)(Math.multiplyExact)
-                    Some((ne, Math.multiplyExact(itemSize.get.toLong, ne)))
-                  } catch { case _: ArithmeticException => None }
-                if (!ok || descr.isEmpty || fortran.isEmpty || extent.isEmpty)
-                  fail("bad_header", ver, Some(hlen))
-                else {
-                  val (nElems, expected) = extent.get
-                  val dataLen = n - hdrEnd
-                  val st = if (dataLen < expected) "short_data" else "ok"
-                  (id, st, ver, descr, fortran, Some(shape.get.length),
-                    Some(nElems), itemSize, Some(hlen), Some(dataLen))
-                }
+              }
+              // overflow-checked extent: a crafted shape like
+              // (9e17, 9e17) must surface as bad_header, never wrap
+              // into a negative expected length that reads as 'ok'
+              val extent: Option[(Long, Long)] = // (nElems, expected)
+                if (shape.isEmpty || itemSize.isEmpty) None
+                else try {
+                  val ne = shape.get.foldLeft(1L)(Math.multiplyExact)
+                  Some((ne, Math.multiplyExact(itemSize.get.toLong, ne)))
+                } catch { case _: ArithmeticException => None }
+              if (!ok || descr.isEmpty || fortran.isEmpty || extent.isEmpty)
+                fail("bad_header", ver, Some(hlen))
+              else {
+                val (nElems, expected) = extent.get
+                val dataLen = n - hdrEnd
+                val st = if (dataLen < expected) "short_data" else "ok"
+                (st, ver, descr, fortran, Some(shape.get.length),
+                  Some(nElems), itemSize, Some(hlen), Some(dataLen))
               }
             }
           }
         }
       }
-      .toDF("doc_id", "status", "version", "descr", "fortran", "n_dims",
-        "n_elems", "item_size", "header_len", "data_len")
-  }
+    }
 
   /** Deterministic synthetic `.npy` payloads for [[npyHeaders]] — six
     * families by doc_id % 6 (k0 = 2+id%7, k1 = 1+id%5):
@@ -7219,8 +7014,7 @@ object TrainingOps extends Serializable {
     bb ++= "NUMPY".getBytes("US-ASCII")
     bb += verMaj.toByte
     bb += 0.toByte
-    if (verMaj == 1) { bb += (hlen & 0xff).toByte; bb += ((hlen >> 8) & 0xff).toByte }
-    else (0 until 4).foreach(i => bb += ((hlen >> (8 * i)) & 0xff).toByte)
+    bb ++= (if (verMaj == 1) le16(hlen) else le32(hlen))
     bb ++= (dict + " " * (hlen - dict.length - 1) + "\n").getBytes("US-ASCII")
     if (f == 4) return bb.take(pre + 5).toArray
     val nData = if (f == 3) 3 else itemSize * shape.foldLeft(1)(_ * _)
@@ -7250,8 +7044,8 @@ object TrainingOps extends Serializable {
     * hand parsers miss: exactly one comma between members, no trailing
     * commas, ASCII digits only with no leading zeros, ASCII hex in
     * `\\uXXXX`) > bad_schema (grammar-valid but
-    * semantically wrong: unknown dtype, missing / duplicate / unknown
-    * tensor key, offsets arity ≠ 2 or begin > end, end−begin ≠
+    * semantically wrong: unknown dtype, an integer past the int64 range,
+    * missing / duplicate / unknown tensor key, offsets arity ≠ 2 or begin > end, end−begin ≠
     * prod(shape)·itemsize with multiplyExact overflow armor, duplicate
     * tensor name, or a non-contiguous / overlapping offset cover — the
     * spec requires tensors to tile the buffer from 0 gap-free) >
@@ -7266,278 +7060,269 @@ object TrainingOps extends Serializable {
     * never tensor bytes.
     */
   def safetensorsHeaders(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
     val dtypeSize = Map(
       "BOOL" -> 1, "U8" -> 1, "I8" -> 1, "F8_E4M3" -> 1, "F8_E5M2" -> 1,
       "U16" -> 2, "I16" -> 2, "F16" -> 2, "BF16" -> 2,
       "U32" -> 4, "I32" -> 4, "F32" -> 4,
       "U64" -> 8, "I64" -> 8, "F64" -> 8)
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, raw) =>
-        val b = if (raw == null) Array.emptyByteArray else raw
-        val n = b.length
-        def one(st: String, hlen: Option[Long] = None):
-            Seq[(Long, String, Option[String], Option[String], Option[Int],
-              Option[Long], Option[Int], Option[Long], Option[Long],
-              Option[Long], Option[Long])] =
-          Seq((id, st, None, None, None, None, None, None, None, hlen, None))
-        if (n < 8) one("too_short")
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, name STRING, " +
+        "dtype STRING, n_dims INT, n_elems BIGINT, item_size INT, off_begin BIGINT, " +
+        "off_end BIGINT, header_len BIGINT, data_len BIGINT",
+        "status", "header_len", "data_len") { (b, rows) =>
+      val n = b.length
+      if (n < 8) Seq("too_short", None, None)
+      else {
+        val hlen = u64le(b, 0)
+        if (hlen <= 0 || hlen > 100000000L || 8 + hlen > n)
+          Seq("bad_header_len", hlen, None)
         else {
-          var hlen = 0L
-          7 to 0 by -1 foreach { i => hlen = (hlen << 8) | (b(i) & 0xffL) }
-          if (hlen <= 0 || hlen > 100000000L || 8 + hlen > n)
-            one("bad_header_len", Some(hlen))
-          else {
-            val s = new String(b, 8, hlen.toInt, "UTF-8")
-            val nn = s.length
-            var p = 0
-            // from-scratch scanner over the safetensors JSON grammar
-            def ws(): Unit = while (p < nn && (s(p) == ' ' || s(p) == '\t' ||
-              s(p) == '\n' || s(p) == '\r')) p += 1
-            def str(): Option[String] = {
-              if (p >= nn || s(p) != '"') None
-              else {
-                p += 1
-                val sb = new StringBuilder
-                var bad = false
-                while (!bad && p < nn && s(p) != '"') {
-                  val c = s(p)
-                  if (c == '\\') {
-                    if (p + 1 >= nn) bad = true
-                    else s(p + 1) match {
-                      case '"' => sb += '"'; p += 2
-                      case '\\' => sb += '\\'; p += 2
-                      case '/' => sb += '/'; p += 2
-                      case 'b' => sb += '\b'; p += 2
-                      case 'f' => sb += '\f'; p += 2
-                      case 'n' => sb += '\n'; p += 2
-                      case 'r' => sb += '\r'; p += 2
-                      case 't' => sb += '\t'; p += 2
-                      case 'u' =>
-                        // ASCII hex only — Character.digit would admit
-                        // full-width and other Unicode hex forms
-                        def hex(c: Char): Boolean = (c >= '0' && c <= '9') ||
-                          (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
-                        if (p + 6 > nn || !(2 to 5).forall(i => hex(s(p + i))))
-                          bad = true
-                        else {
-                          sb += Integer.parseInt(s.substring(p + 2, p + 6), 16).toChar
-                          p += 6
-                        }
-                      case _ => bad = true
-                    }
-                  } else if (c < ' ') bad = true
-                  else { sb += c; p += 1 }
-                }
-                if (bad || p >= nn) None else { p += 1; Some(sb.toString) }
-              }
-            }
-            def uint(): Option[Long] = {
-              // ASCII digits only (isDigit admits Unicode numerals) and
-              // no leading zeros — the JSON number grammar
-              val s0 = p
-              while (p < nn && s(p) >= '0' && s(p) <= '9') p += 1
-              if (p == s0 || p - s0 > 18 ||
-                (p - s0 > 1 && s(s0) == '0')) None
-              else Some(s.substring(s0, p).toLong)
-            }
-            def uintArray(): Option[Seq[Long]] = {
-              if (p >= nn || s(p) != '[') None
-              else {
-                p += 1; ws()
-                val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-                var bad = false
-                var open = p >= nn || s(p) != ']'
-                if (!open) p += 1
-                while (!bad && open) {
-                  uint() match {
-                    case None => bad = true
-                    case Some(v) =>
-                      out += v; ws()
-                      if (p < nn && s(p) == ',') { p += 1; ws() }
-                      else if (p < nn && s(p) == ']') { p += 1; open = false }
-                      else bad = true
-                  }
-                }
-                if (bad) None else Some(out.toSeq)
-              }
-            }
-            // parse: collect (name, dtype, shape, offsets) per tensor;
-            // grammar failure → bad_json, semantic failure → bad_schema
-            final case class T(name: String, dtype: String, shape: Seq[Long],
-              b0: Long, b1: Long)
-            val tensors = scala.collection.mutable.ArrayBuffer.empty[T]
-            var fail: String = null
-            def failJson(): Unit = if (fail == null) fail = "bad_json"
-            def failSchema(): Unit = if (fail == null) fail = "bad_schema"
-            ws()
-            if (p >= nn || s(p) != '{') failJson()
+          val s = new String(b, 8, hlen.toInt, "UTF-8")
+          val nn = s.length
+          var p = 0
+          // from-scratch scanner over the safetensors JSON grammar
+          def ws(): Unit = while (p < nn && (s(p) == ' ' || s(p) == '\t' ||
+            s(p) == '\n' || s(p) == '\r')) p += 1
+          def str(): Option[String] = {
+            if (p >= nn || s(p) != '"') None
             else {
               p += 1
-              var open = true
-              while (fail == null && open) {
-                ws()
-                if (p < nn && s(p) == '}') { p += 1; open = false }
-                else str() match {
-                  case None => failJson()
-                  case Some(key) =>
-                    ws()
-                    if (p >= nn || s(p) != ':') failJson()
-                    else {
-                      p += 1; ws()
-                      if (key == "__metadata__") {
-                        // string → string object
-                        if (p >= nn || s(p) != '{') failJson()
-                        else {
-                          p += 1
-                          var mOpen = true
-                          while (fail == null && mOpen) {
+              val sb = new StringBuilder
+              var bad = false
+              while (!bad && p < nn && s(p) != '"') {
+                val c = s(p)
+                if (c == '\\') {
+                  if (p + 1 >= nn) bad = true
+                  else s(p + 1) match {
+                    case '"' => sb += '"'; p += 2
+                    case '\\' => sb += '\\'; p += 2
+                    case '/' => sb += '/'; p += 2
+                    case 'b' => sb += '\b'; p += 2
+                    case 'f' => sb += '\f'; p += 2
+                    case 'n' => sb += '\n'; p += 2
+                    case 'r' => sb += '\r'; p += 2
+                    case 't' => sb += '\t'; p += 2
+                    case 'u' =>
+                      // ASCII hex only — Character.digit would admit
+                      // full-width and other Unicode hex forms
+                      def hex(c: Char): Boolean = (c >= '0' && c <= '9') ||
+                        (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
+                      if (p + 6 > nn || !(2 to 5).forall(i => hex(s(p + i))))
+                        bad = true
+                      else {
+                        sb += Integer.parseInt(s.substring(p + 2, p + 6), 16).toChar
+                        p += 6
+                      }
+                    case _ => bad = true
+                  }
+                } else if (c < ' ') bad = true
+                else { sb += c; p += 1 }
+              }
+              if (bad || p >= nn) None else { p += 1; Some(sb.toString) }
+            }
+          }
+          // grammar failure → bad_json, semantic failure → bad_schema
+          var fail: String = null
+          def failJson(): Unit = if (fail == null) fail = "bad_json"
+          def failSchema(): Unit = if (fail == null) fail = "bad_schema"
+          def uint(): Option[Long] = {
+            // ASCII digits only (isDigit admits Unicode numerals) and
+            // no leading zeros — the JSON number grammar; a valid run
+            // past the Long range is a schema fault, not a grammar one
+            val s0 = p
+            while (p < nn && s(p) >= '0' && s(p) <= '9') p += 1
+            if (p == s0 || (p - s0 > 1 && s(s0) == '0')) None
+            else {
+              val v = s.substring(s0, p).toLongOption
+              if (v.isEmpty) failSchema()
+              v
+            }
+          }
+          def uintArray(): Option[Seq[Long]] = {
+            if (p >= nn || s(p) != '[') None
+            else {
+              p += 1; ws()
+              val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+              var bad = false
+              var open = p >= nn || s(p) != ']'
+              if (!open) p += 1
+              while (!bad && open) {
+                uint() match {
+                  case None => bad = true
+                  case Some(v) =>
+                    out += v; ws()
+                    if (p < nn && s(p) == ',') { p += 1; ws() }
+                    else if (p < nn && s(p) == ']') { p += 1; open = false }
+                    else bad = true
+                }
+              }
+              if (bad) None else Some(out.toSeq)
+            }
+          }
+          // parse: collect (name, dtype, shape, offsets) per tensor
+          final case class T(name: String, dtype: String, shape: Seq[Long],
+            b0: Long, b1: Long)
+          val tensors = scala.collection.mutable.ArrayBuffer.empty[T]
+          ws()
+          if (p >= nn || s(p) != '{') failJson()
+          else {
+            p += 1
+            var open = true
+            while (fail == null && open) {
+              ws()
+              if (p < nn && s(p) == '}') { p += 1; open = false }
+              else str() match {
+                case None => failJson()
+                case Some(key) =>
+                  ws()
+                  if (p >= nn || s(p) != ':') failJson()
+                  else {
+                    p += 1; ws()
+                    if (key == "__metadata__") {
+                      // string → string object
+                      if (p >= nn || s(p) != '{') failJson()
+                      else {
+                        p += 1
+                        var mOpen = true
+                        while (fail == null && mOpen) {
+                          ws()
+                          if (p < nn && s(p) == '}') { p += 1; mOpen = false }
+                          else if (str().isEmpty) failJson()
+                          else {
                             ws()
-                            if (p < nn && s(p) == '}') { p += 1; mOpen = false }
-                            else if (str().isEmpty) failJson()
+                            if (p >= nn || s(p) != ':') failJson()
                             else {
-                              ws()
-                              if (p >= nn || s(p) != ':') failJson()
+                              p += 1; ws()
+                              if (str().isEmpty) failJson()
                               else {
-                                p += 1; ws()
-                                if (str().isEmpty) failJson()
-                                else {
-                                  ws()
-                                  if (p < nn && s(p) == ',') {
-                                    p += 1; ws()
-                                    if (p >= nn || s(p) != '"') failJson()
-                                  } else if (p >= nn || s(p) != '}') failJson()
-                                }
+                                ws()
+                                if (p < nn && s(p) == ',') {
+                                  p += 1; ws()
+                                  if (p >= nn || s(p) != '"') failJson()
+                                } else if (p >= nn || s(p) != '}') failJson()
                               }
                             }
                           }
                         }
-                      } else if (p >= nn || s(p) != '{') failJson()
-                      else {
-                        p += 1
-                        var dtype: Option[String] = None
-                        var shape: Option[Seq[Long]] = None
-                        var offs: Option[Seq[Long]] = None
-                        var tOpen = true
-                        while (fail == null && tOpen) {
-                          ws()
-                          if (p < nn && s(p) == '}') { p += 1; tOpen = false }
-                          else str() match {
-                            case None => failJson()
-                            case Some(tk) =>
-                              ws()
-                              if (p >= nn || s(p) != ':') failJson()
-                              else {
-                                p += 1; ws()
-                                tk match {
-                                  case "dtype" =>
-                                    if (dtype.nonEmpty) failSchema()
-                                    else str() match {
-                                      case None => failJson()
-                                      case d => dtype = d
-                                    }
-                                  case "shape" =>
-                                    if (shape.nonEmpty) failSchema()
-                                    else uintArray() match {
-                                      case None => failJson()
-                                      case sh => shape = sh
-                                    }
-                                  case "data_offsets" =>
-                                    if (offs.nonEmpty) failSchema()
-                                    else uintArray() match {
-                                      case None => failJson()
-                                      case o => offs = o
-                                    }
-                                  case _ => failSchema()
-                                }
-                                if (fail == null) {
-                                  ws()
-                                  if (p < nn && s(p) == ',') {
-                                    p += 1; ws()
-                                    if (p >= nn || s(p) != '"') failJson()
-                                  } else if (p >= nn || s(p) != '}') failJson()
-                                }
+                      }
+                    } else if (p >= nn || s(p) != '{') failJson()
+                    else {
+                      p += 1
+                      var dtype: Option[String] = None
+                      var shape: Option[Seq[Long]] = None
+                      var offs: Option[Seq[Long]] = None
+                      var tOpen = true
+                      while (fail == null && tOpen) {
+                        ws()
+                        if (p < nn && s(p) == '}') { p += 1; tOpen = false }
+                        else str() match {
+                          case None => failJson()
+                          case Some(tk) =>
+                            ws()
+                            if (p >= nn || s(p) != ':') failJson()
+                            else {
+                              p += 1; ws()
+                              tk match {
+                                case "dtype" =>
+                                  if (dtype.nonEmpty) failSchema()
+                                  else str() match {
+                                    case None => failJson()
+                                    case d => dtype = d
+                                  }
+                                case "shape" =>
+                                  if (shape.nonEmpty) failSchema()
+                                  else uintArray() match {
+                                    case None => failJson()
+                                    case sh => shape = sh
+                                  }
+                                case "data_offsets" =>
+                                  if (offs.nonEmpty) failSchema()
+                                  else uintArray() match {
+                                    case None => failJson()
+                                    case o => offs = o
+                                  }
+                                case _ => failSchema()
                               }
-                          }
-                        }
-                        if (fail == null) {
-                          if (dtype.isEmpty || shape.isEmpty || offs.isEmpty ||
-                            offs.get.length != 2) failSchema()
-                          else tensors += T(key, dtype.get, shape.get,
-                            offs.get(0), offs.get(1))
+                              if (fail == null) {
+                                ws()
+                                if (p < nn && s(p) == ',') {
+                                  p += 1; ws()
+                                  if (p >= nn || s(p) != '"') failJson()
+                                } else if (p >= nn || s(p) != '}') failJson()
+                              }
+                            }
                         }
                       }
                       if (fail == null) {
-                        ws()
-                        // members separated by EXACTLY one comma, no
-                        // trailing comma — RFC 8259 object grammar
-                        if (p < nn && s(p) == ',') {
-                          p += 1; ws()
-                          if (p >= nn || s(p) != '"') failJson()
-                        } else if (p >= nn || s(p) != '}') failJson()
+                        if (dtype.isEmpty || shape.isEmpty || offs.isEmpty ||
+                          offs.get.length != 2) failSchema()
+                        else tensors += T(key, dtype.get, shape.get,
+                          offs.get(0), offs.get(1))
                       }
                     }
-                }
-              }
-              if (fail == null) { ws(); if (p != nn) failJson() }
-            }
-            // semantic validation: dtype known, size arithmetic exact,
-            // names unique, offsets tile the buffer from 0 gap-free
-            val checked: Seq[(T, Long, Int)] =
-              if (fail != null) Seq.empty
-              else {
-                val out = scala.collection.mutable.ArrayBuffer.empty[(T, Long, Int)]
-                tensors.foreach { t =>
-                  if (fail == null) dtypeSize.get(t.dtype) match {
-                    case None => failSchema()
-                    case Some(isz) =>
-                      val ext = try {
-                        val ne = t.shape.foldLeft(1L)(Math.multiplyExact)
-                        Some((ne, Math.multiplyExact(isz.toLong, ne)))
-                      } catch { case _: ArithmeticException => None }
-                      if (ext.isEmpty || t.b0 > t.b1 ||
-                        t.b1 - t.b0 != ext.get._2) failSchema()
-                      else out += ((t, ext.get._1, isz))
-                  }
-                }
-                if (fail == null) {
-                  if (out.map(_._1.name).distinct.length != out.length) failSchema()
-                  else {
-                    // (b0, b1) tiebreak: a zero-size tensor [c, c) must
-                    // sort before the non-zero tensor starting at c, or
-                    // a spec-valid gap-free cover would be rejected
-                    val sorted = out.sortBy(x => (x._1.b0, x._1.b1))
-                    var cursor = 0L
-                    sorted.foreach { case (t, _, _) =>
-                      if (fail == null && t.b0 != cursor) failSchema()
-                      cursor = t.b1
+                    if (fail == null) {
+                      ws()
+                      // members separated by EXACTLY one comma, no
+                      // trailing comma — RFC 8259 object grammar
+                      if (p < nn && s(p) == ',') {
+                        p += 1; ws()
+                        if (p >= nn || s(p) != '"') failJson()
+                      } else if (p >= nn || s(p) != '}') failJson()
                     }
-                    if (fail == null) { out.clear(); out ++= sorted }
                   }
-                }
-                out.toSeq
-              }
-            if (fail != null) one(fail, Some(hlen))
-            else {
-              val dataLen = n - 8 - hlen
-              if (checked.isEmpty) Seq((id, "empty", None, None, None, None,
-                None, None, None, Some(hlen), Some(dataLen)))
-              else {
-                val cover = checked.map(_._1.b1).max
-                val st = if (dataLen < cover) "short_data" else "ok"
-                checked.map { case (t, ne, isz) =>
-                  (id, st, Some(t.name), Some(t.dtype), Some(t.shape.length),
-                    Some(ne), Some(isz), Some(t.b0), Some(t.b1),
-                    Some(hlen), Some(dataLen))
-                }
               }
             }
+            if (fail == null) { ws(); if (p != nn) failJson() }
+          }
+          // semantic validation: dtype known, size arithmetic exact,
+          // names unique, offsets tile the buffer from 0 gap-free
+          val checked: Seq[(T, Long, Int)] =
+            if (fail != null) Seq.empty
+            else {
+              val out = scala.collection.mutable.ArrayBuffer.empty[(T, Long, Int)]
+              tensors.foreach { t =>
+                if (fail == null) dtypeSize.get(t.dtype) match {
+                  case None => failSchema()
+                  case Some(isz) =>
+                    val ext = try {
+                      val ne = t.shape.foldLeft(1L)(Math.multiplyExact)
+                      Some((ne, Math.multiplyExact(isz.toLong, ne)))
+                    } catch { case _: ArithmeticException => None }
+                    if (ext.isEmpty || t.b0 > t.b1 ||
+                      t.b1 - t.b0 != ext.get._2) failSchema()
+                    else out += ((t, ext.get._1, isz))
+                }
+              }
+              if (fail == null) {
+                if (out.map(_._1.name).distinct.length != out.length) failSchema()
+                else {
+                  // (b0, b1) tiebreak: a zero-size tensor [c, c) must
+                  // sort before the non-zero tensor starting at c, or
+                  // a spec-valid gap-free cover would be rejected
+                  val sorted = out.sortBy(x => (x._1.b0, x._1.b1))
+                  var cursor = 0L
+                  sorted.foreach { case (t, _, _) =>
+                    if (fail == null && t.b0 != cursor) failSchema()
+                    cursor = t.b1
+                  }
+                  if (fail == null) { out.clear(); out ++= sorted }
+                }
+              }
+              out.toSeq
+            }
+          if (fail != null) Seq(fail, hlen, None)
+          else {
+            val dataLen = n - 8 - hlen
+            checked.foreach { case (t, ne, isz) =>
+              rows += Array(t.name, t.dtype, t.shape.length, ne, isz, t.b0, t.b1)
+            }
+            val st =
+              if (checked.isEmpty) "empty"
+              else if (dataLen < checked.map(_._1.b1).max) "short_data" else "ok"
+            Seq(st, hlen, dataLen)
           }
         }
       }
-      .toDF("doc_id", "status", "name", "dtype", "n_dims", "n_elems",
-        "item_size", "off_begin", "off_end", "header_len", "data_len")
+    }
   }
 
   /** Deterministic synthetic safetensors payloads for
@@ -7579,7 +7364,7 @@ object TrainingOps extends Serializable {
       case _ => ((8L + json.length + 7) / 8) * 8 - 8
     }
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    (0 until 8).foreach(i => bb += ((hlen >> (8 * i)) & 0xff).toByte)
+    bb ++= le64(hlen)
     val padded = if (f == 2 || f == 3) json
       else json + " " * (hlen.toInt - json.length)
     bb ++= padded.getBytes("UTF-8")
@@ -7624,8 +7409,9 @@ object TrainingOps extends Serializable {
     *
     * `expected` carries one row per (shard, tensor name) with
     * `exp_dtype` / `exp_elems`; headers are reduced to a per-shard file
-    * status (identical on every row of a shard by m31's construction —
-    * `min` is just the reduction) plus the ok-file tensor rows, then
+    * status by severity (m31 stamps one status on every row of a shard,
+    * but a caller's mixed rows must not mask a failure: any failure
+    * beats `empty`, which beats `ok`) plus the ok-file tensor rows, then
     * full-outer joined on (shard, name) with the p19/p20 NULL-side
     * convention (absent ≠ zero). Verdict ladder (first match wins):
     * missing_shard (manifest names a shard no file walk saw) >
@@ -7634,7 +7420,8 @@ object TrainingOps extends Serializable {
     * sees the full blast radius; the legal zero-tensor `empty` file is
     * READABLE and falls through to missing_tensor instead) >
     * missing_tensor > unexpected_tensor >
-    * shape_mismatch (dtype or element-count disagreement) > consistent.
+    * shape_mismatch (dtype or element-count disagreement, a NULL on
+    * either side included) > consistent.
     *
     * Scale shape: both sides are metadata-plane tables (shard × tensor
     * cardinality — headers never carry tensor bytes), so the audit is
@@ -7646,8 +7433,12 @@ object TrainingOps extends Serializable {
     // every shard executes twice in one job
     val hdr = headers
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).registered
+    // a failure (0) beats `empty` (1) beats `ok` (2); a NULL status
+    // ranks last, so, as under `min`, it never masks a real one
+    val severity = when(col("status").isNull, 3).when(col("status") === "ok", 2)
+      .when(col("status") === "empty", 1).otherwise(0)
     val status = hdr.groupBy(col("doc_id").as("shard"))
-      .agg(min("status").as("status"))
+      .agg(min(struct(severity, col("status"))).getField("status").as("status"))
     val h = hdr.filter(col("status") === "ok")
       .select(col("doc_id").as("shard"), col("name"), col("dtype"),
         col("n_elems"))
@@ -7665,8 +7456,8 @@ object TrainingOps extends Serializable {
             lit("unreadable_shard"))
           .when(col("dtype").isNull, lit("missing_tensor"))
           .when(col("exp_dtype").isNull, lit("unexpected_tensor"))
-          .when(col("dtype") =!= col("exp_dtype") ||
-            col("n_elems") =!= col("exp_elems"), lit("shape_mismatch"))
+          .when(!(col("dtype") <=> col("exp_dtype")) ||
+            !(col("n_elems") <=> col("exp_elems")), lit("shape_mismatch"))
           .otherwise(lit("consistent")).as("verdict"))
   }
 
@@ -7770,119 +7561,103 @@ object TrainingOps extends Serializable {
     * Scale shape: typed mapPartitions in the scan stage, zero exchange;
     * payload bytes feed only the digest.
     */
-  def avroBlocks(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          // zigzag varint at p: (value, nextPos), or null at EOF/overflow
-          def vint(p0: Int): (Long, Int) = {
-            var acc = 0L; var shift = 0; var p = p0
-            while (p < n && shift <= 63) {
-              val by = b(p); p += 1
-              acc |= (by & 0x7fL) << shift
-              if ((by & 0x80) == 0) return ((acc >>> 1) ^ -(acc & 1L), p)
-              shift += 7
-            }
-            null
+  def avroBlocks(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, codec STRING, " +
+        "idx INT, b_off BIGINT, n_objects BIGINT, n_bytes BIGINT, sync_ok INT, " +
+        "payload_md5 STRING", "status", "codec") {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      (b, rows) =>
+        val n = b.length
+        // zigzag varint at p: (value, nextPos), or null at EOF/overflow
+        def vint(p0: Int): (Long, Int) = {
+          var acc = 0L; var shift = 0; var p = p0
+          while (p < n && shift <= 63) {
+            val by = b(p); p += 1
+            acc |= (by & 0x7fL) << shift
+            if ((by & 0x80) == 0) return ((acc >>> 1) ^ -(acc & 1L), p)
+            shift += 7
           }
-          var status: String = null
-          var codec: String = null
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, Long, Long, Int, String)]
-          if (n < 4 || b(0) != 'O' || b(1) != 'b' || b(2) != 'j' || b(3) != 1)
-            status = "not_avro"
-          else {
-            var p = 4
-            // metadata map
-            var mapDone = false
-            while (status == null && !mapDone) {
-              val c = vint(p)
-              if (c == null) status = "truncated"
+          null
+        }
+        var status: String = null
+        var codec: String = null
+        if (n < 4 || b(0) != 'O' || b(1) != 'b' || b(2) != 'j' || b(3) != 1)
+          status = "not_avro"
+        else {
+          var p = 4
+          // metadata map
+          var mapDone = false
+          while (status == null && !mapDone) {
+            val c = vint(p)
+            if (c == null) status = "truncated"
+            else {
+              p = c._2
+              var remaining = math.abs(c._1)
+              if (c._1 == 0) mapDone = true
               else {
-                p = c._2
-                var remaining = math.abs(c._1)
-                if (c._1 == 0) mapDone = true
-                else {
-                  if (c._1 < 0) {
-                    val sz = vint(p) // byte size of the entries; boundary hint only
-                    if (sz == null) { status = "truncated"; remaining = 0 }
-                    else p = sz._2
-                  }
-                  while (status == null && remaining > 0) {
-                    var key: String = null
-                    val kl = vint(p)
-                    if (kl == null || kl._1 < 0 || kl._2 + kl._1 > n) status = "truncated"
+                if (c._1 < 0) {
+                  val sz = vint(p) // byte size of the entries; boundary hint only
+                  if (sz == null) { status = "truncated"; remaining = 0 }
+                  else p = sz._2
+                }
+                while (status == null && remaining > 0) {
+                  var key: String = null
+                  val kl = vint(p)
+                  if (kl == null || kl._1 < 0 || kl._2 + kl._1 > n) status = "truncated"
+                  else {
+                    key = new String(b, kl._2, kl._1.toInt,
+                      java.nio.charset.StandardCharsets.UTF_8)
+                    p = kl._2 + kl._1.toInt
+                    val vl = vint(p)
+                    if (vl == null || vl._1 < 0 || vl._2 + vl._1 > n) status = "truncated"
                     else {
-                      key = new String(b, kl._2, kl._1.toInt,
-                        java.nio.charset.StandardCharsets.UTF_8)
-                      p = kl._2 + kl._1.toInt
-                      val vl = vint(p)
-                      if (vl == null || vl._1 < 0 || vl._2 + vl._1 > n) status = "truncated"
-                      else {
-                        if (key == "avro.codec")
-                          codec = new String(b, vl._2, vl._1.toInt,
-                            java.nio.charset.StandardCharsets.UTF_8)
-                        p = vl._2 + vl._1.toInt
-                      }
+                      if (key == "avro.codec")
+                        codec = new String(b, vl._2, vl._1.toInt,
+                          java.nio.charset.StandardCharsets.UTF_8)
+                      p = vl._2 + vl._1.toInt
                     }
-                    remaining -= 1
                   }
-                }
-              }
-            }
-            // header sync
-            val sync = new Array[Byte](16)
-            if (status == null) {
-              if (p + 16 > n) status = "truncated"
-              else { System.arraycopy(b, p, sync, 0, 16); p += 16 }
-            }
-            // data blocks
-            var idx = 0
-            while (status == null) {
-              if (p == n) status = "ok"
-              else {
-                val off = p
-                val cnt = vint(p)
-                val sz = if (cnt == null) null else vint(cnt._2)
-                if (cnt == null || sz == null || cnt._1 < 0 || sz._1 < 0 ||
-                  sz._2 + sz._1 + 16 > n) status = "truncated"
-                else {
-                  val dataAt = sz._2
-                  val len = sz._1.toInt
-                  md.reset(); md.update(b, dataAt, len)
-                  val hex = md.digest().map("%02x".format(_)).mkString
-                  var ok = 1
-                  var j = 0
-                  while (j < 16) {
-                    if (b(dataAt + len + j) != sync(j)) ok = 0
-                    j += 1
-                  }
-                  out += ((idx, off.toLong, cnt._1, len.toLong, ok, hex))
-                  idx += 1
-                  p = dataAt + len + 16
+                  remaining -= 1
                 }
               }
             }
           }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, Option(codec), None: Option[Int], None: Option[Long],
-              None: Option[Long], None: Option[Long], None: Option[Int],
-              None: Option[String]))
-          else es.map { case (i2, off, o, s, ok, h) =>
-            (id, status, Option(codec), Some(i2), Some(off), Some(o), Some(s),
-              Some(ok), Some(h))
+          // header sync
+          val sync = new Array[Byte](16)
+          if (status == null) {
+            if (p + 16 > n) status = "truncated"
+            else { System.arraycopy(b, p, sync, 0, 16); p += 16 }
+          }
+          // data blocks
+          var idx = 0
+          while (status == null) {
+            if (p == n) status = "ok"
+            else {
+              val off = p
+              val cnt = vint(p)
+              val sz = if (cnt == null) null else vint(cnt._2)
+              if (cnt == null || sz == null || cnt._1 < 0 || sz._1 < 0 ||
+                sz._2 + sz._1 + 16 > n) status = "truncated"
+              else {
+                val dataAt = sz._2
+                val len = sz._1.toInt
+                md.reset(); md.update(b, dataAt, len)
+                val hex = md.digest().map("%02x".format(_)).mkString
+                var ok = 1
+                var j = 0
+                while (j < 16) {
+                  if (b(dataAt + len + j) != sync(j)) ok = 0
+                  j += 1
+                }
+                rows += Array(idx, off.toLong, cnt._1, len.toLong, ok, hex)
+                idx += 1
+                p = dataAt + len + 16
+              }
+            }
           }
         }
-      }
-      .toDF("doc_id", "status", "codec", "idx", "b_off", "n_objects",
-        "n_bytes", "sync_ok", "payload_md5")
-  }
+        Seq(status, codec)
+    }
 
   /** Synthetic Parquet-container payloads for [[parquetFooter]] — five
     * families keyed by doc_id % 5 (p = 30+id%40 data bytes,
@@ -7893,19 +7668,17 @@ object TrainingOps extends Serializable {
     */
   def syntheticParquetPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le32(v: Long): Unit =
-      (0 until 4).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     def magic(): Unit = bb ++= "PAR1".getBytes("US-ASCII")
     val p = (30 + id % 40).toInt; val fl = (20 + id % 50).toInt
     def fill(k: Int, c: Int): Unit =
       (0 until k).foreach(i => bb += ((c + i % 17) & 0x7f).toByte)
     (id % 5) match {
-      case 0 => magic(); fill(p, 'd'); fill(fl, 'm'); le32(fl.toLong); magic()
+      case 0 => magic(); fill(p, 'd'); fill(fl, 'm'); bb ++= le32(fl.toLong); magic()
       case 1 => bb ++= s"plain text payload $id".getBytes("US-ASCII")
-      case 2 => magic(); fill(p, 'd'); fill(fl, 'm'); le32(fl.toLong)
+      case 2 => magic(); fill(p, 'd'); fill(fl, 'm'); bb ++= le32(fl.toLong)
         bb ++= "XXXX".getBytes("US-ASCII")
       case 3 => magic(); fill(p, 'd'); fill(fl, 'm')
-        le32((p + fl + 100).toLong); magic()
+        bb ++= le32((p + fl + 100).toLong); magic()
       case _ => magic(); fill(math.min(7, p), 'd')
     }
     bb.toArray
@@ -7930,35 +7703,22 @@ object TrainingOps extends Serializable {
     * Scale shape: per-row map reading 12 bytes of header/trailer
     * regardless of file size; zero exchange.
     */
-  def parquetFooter(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          def magicAt(i: Int) =
-            b(i) == 'P' && b(i + 1) == 'A' && b(i + 2) == 'R' && b(i + 3) == '1'
-          if (n < 12)
-            (id, if (n >= 4 && magicAt(0)) "truncated" else "not_parquet",
-              None: Option[Long], None: Option[Long], n)
-          else if (!magicAt(0)) (id, "not_parquet", None, None, n)
-          else if (!magicAt(n - 4)) (id, "malformed", None, None, n)
-          else {
-            val fl = le(n - 8, 4)
-            if (fl > n - 12) (id, "corrupt_footer", Some(fl), None, n)
-            else (id, "ok", Some(fl), Some(n - 8 - fl), n)
-          }
-        }
+  def parquetFooter(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, status STRING, footer_len BIGINT, " +
+        "footer_off BIGINT, n_bytes INT NOT NULL") { b =>
+      val n = b.length
+      def magicAt(i: Int) =
+        b(i) == 'P' && b(i + 1) == 'A' && b(i + 2) == 'R' && b(i + 3) == '1'
+      if (n < 12)
+        (if (n >= 4 && magicAt(0)) "truncated" else "not_parquet", None, None, n)
+      else if (!magicAt(0)) ("not_parquet", None, None, n)
+      else if (!magicAt(n - 4)) ("malformed", None, None, n)
+      else {
+        val fl = u32le(b, n - 8)
+        if (fl > n - 12) ("corrupt_footer", Some(fl), None, n)
+        else ("ok", Some(fl), Some(n - 8 - fl), n)
       }
-      .toDF("doc_id", "status", "footer_len", "footer_off", "n_bytes")
-  }
+    }
 
   /** Synthetic GIF payloads for [[gifBlocks]] — five families keyed by
     * doc_id % 5 (s = id%3 color-table size bits, k = 1+id%3 frames,
@@ -7971,18 +7731,17 @@ object TrainingOps extends Serializable {
     */
   def syntheticGifPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le16(v: Int): Unit = { bb += (v & 0xff).toByte; bb += ((v >> 8) & 0xff).toByte }
     val s = (id % 3).toInt; val k = (1 + id % 3).toInt
     val m = (1 + id % 2).toInt; val d = (1 + id % 7).toInt
     val w = (100 + id % 50).toInt; val h = (80 + id % 40).toInt
     def lsd(gct: Boolean): Unit = {
-      le16(w); le16(h)
+      bb ++= le16(w); bb ++= le16(h)
       bb += (if (gct) (0x80 | s) else s).toByte; bb += 0; bb += 0
     }
     def gctBytes(): Unit = (0 until 3 * (2 << s)).foreach(i => bb += ((i * 7) & 0x7f).toByte)
     def gce(): Unit = { bb ++= Array[Byte](0x21, 0xf9.toByte, 4, 0, 0, 0, 0, 0) }
     def frame(): Unit = {
-      bb += 0x2c; le16(0); le16(0); le16(w); le16(h); bb += 0 // no LCT
+      bb += 0x2c; bb ++= le16(0); bb ++= le16(0); bb ++= le16(w); bb ++= le16(h); bb += 0 // no LCT
       bb += 8 // LZW min code size
       (0 until m).foreach { j =>
         bb += d.toByte; (0 until d).foreach(x => bb += ((j * 31 + x) & 0x7f).toByte)
@@ -8060,76 +7819,66 @@ object TrainingOps extends Serializable {
     *
     * Scale shape: per-row typed map in the scan stage, zero exchange.
     */
-  def protoFields(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var pos = 0
-          var verr = 0 // 0 ok, 1 truncated, 2 overlong
-          def varint(): Long = {
-            var shift = 0; var v = 0L; var i = 0; verr = 0
-            while (true) {
-              if (pos >= n) { verr = 1; return 0L }
-              val c = b(pos) & 0xff; pos += 1; i += 1
-              if (i > 10) { verr = 2; return 0L }
-              v |= (c & 0x7fL) << shift; shift += 7
-              if ((c & 0x80) == 0) return v
+  def protoFields(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, status STRING, n_fields INT, " +
+        "n_varint INT, n_len INT, n_fixed32 INT, n_fixed64 INT, max_field_no BIGINT, " +
+        "n_bytes INT NOT NULL") { b =>
+      val n = b.length
+      var pos = 0
+      var verr = 0 // 0 ok, 1 truncated, 2 overlong
+      def varint(): Long = {
+        var shift = 0; var v = 0L; var i = 0; verr = 0
+        while (true) {
+          if (pos >= n) { verr = 1; return 0L }
+          val c = b(pos) & 0xff; pos += 1; i += 1
+          if (i > 10) { verr = 2; return 0L }
+          v |= (c & 0x7fL) << shift; shift += 7
+          if ((c & 0x80) == 0) return v
+        }
+        v
+      }
+      var nf = 0; var nv = 0; var nl = 0; var n32 = 0; var n64 = 0
+      var maxF = 0L
+      var status: String = null
+      while (status == null && pos < n) {
+        val tag = varint()
+        if (verr == 1) status = "truncated"
+        else if (verr == 2) status = "malformed"
+        else {
+          val wt = (tag & 7).toInt; val fno = tag >>> 3
+          if (fno == 0) status = "malformed"
+          else {
+            var fieldOk = false
+            wt match {
+              case 0 =>
+                varint()
+                if (verr == 1) status = "truncated"
+                else if (verr == 2) status = "malformed"
+                else { nv += 1; fieldOk = true }
+              case 1 =>
+                if (pos + 8 > n) status = "truncated"
+                else { pos += 8; n64 += 1; fieldOk = true }
+              case 2 =>
+                val l = varint()
+                if (verr == 1) status = "truncated"
+                else if (verr == 2) status = "malformed"
+                else if (l < 0 || l > n - pos) status = "truncated"
+                else { pos += l.toInt; nl += 1; fieldOk = true }
+              case 5 =>
+                if (pos + 4 > n) status = "truncated"
+                else { pos += 4; n32 += 1; fieldOk = true }
+              case _ => status = "malformed"
             }
-            v
+            if (fieldOk) { nf += 1; if (fno > maxF) maxF = fno }
           }
-          var nf = 0; var nv = 0; var nl = 0; var n32 = 0; var n64 = 0
-          var maxF = 0L
-          var status: String = null
-          while (status == null && pos < n) {
-            val tag = varint()
-            if (verr == 1) status = "truncated"
-            else if (verr == 2) status = "malformed"
-            else {
-              val wt = (tag & 7).toInt; val fno = tag >>> 3
-              if (fno == 0) status = "malformed"
-              else {
-                var fieldOk = false
-                wt match {
-                  case 0 =>
-                    varint()
-                    if (verr == 1) status = "truncated"
-                    else if (verr == 2) status = "malformed"
-                    else { nv += 1; fieldOk = true }
-                  case 1 =>
-                    if (pos + 8 > n) status = "truncated"
-                    else { pos += 8; n64 += 1; fieldOk = true }
-                  case 2 =>
-                    val l = varint()
-                    if (verr == 1) status = "truncated"
-                    else if (verr == 2) status = "malformed"
-                    else if (l < 0 || l > n - pos) status = "truncated"
-                    else { pos += l.toInt; nl += 1; fieldOk = true }
-                  case 5 =>
-                    if (pos + 4 > n) status = "truncated"
-                    else { pos += 4; n32 += 1; fieldOk = true }
-                  case _ => status = "malformed"
-                }
-                if (fieldOk) { nf += 1; if (fno > maxF) maxF = fno }
-              }
-            }
-          }
-          if (status == null) status = "ok"
-          val noneI = None: Option[Int]
-          val noneL = None: Option[Long]
-          if (status == "truncated")
-            (id, status, noneI, noneI, noneI, noneI, noneI, noneL, n)
-          else
-            (id, status, Some(nf), Some(nv), Some(nl), Some(n32), Some(n64),
-              if (nf == 0) noneL else Some(maxF), n)
         }
       }
-      .toDF("doc_id", "status", "n_fields", "n_varint", "n_len",
-        "n_fixed32", "n_fixed64", "max_field_no", "n_bytes")
-  }
+      if (status == null) status = "ok"
+      if (status == "truncated") (status, None, None, None, None, None, None, n)
+      else
+        (status, Some(nf), Some(nv), Some(nl), Some(n32), Some(n64),
+          if (nf == 0) None else Some(maxF), n)
+    }
 
   /** GIF block walk — the SUB-BLOCK-CHAIN member of the walker series
     * and a fourth length mechanism beside ZIP's end-anchored directory
@@ -8153,71 +7902,60 @@ object TrainingOps extends Serializable {
     *
     * Scale shape: per-row typed map in the scan stage, zero exchange.
     */
-  def gifBlocks(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-          val hdrOk = n >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
-            b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a'
-          if (!hdrOk) (id, "not_gif", None: Option[Int], None: Option[Int],
-            None: Option[Int], None: Option[Int], None: Option[Int], n)
-          else if (n < 13) (id, "truncated", None, None, None, None, None, n)
-          else {
-            val w = u16(6); val h = u16(8); val packed = b(10) & 0xff
-            val gct = if ((packed & 0x80) != 0) 3 * (2 << (packed & 7)) else 0
-            var pos = 13 + gct
-            var frames = 0; var exts = 0; var subs = 0
-            var status: String = null
-            // walks one len|data chain; returns data-sub-block count or -1 on EOF
-            def chain(): Int = {
-              var c = 0
-              while (true) {
-                if (pos >= n) return -1
-                val len = b(pos) & 0xff; pos += 1
-                if (len == 0) return c
-                if (pos + len > n) return -1
-                c += 1; pos += len
-              }
-              c
-            }
-            while (status == null) {
-              if (pos >= n) status = "truncated"
-              else (b(pos) & 0xff) match {
-                case 0x3b => status = "ok"
-                case 0x21 =>
-                  pos += 2 // introducer + label
+  def gifBlocks(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, status STRING, width INT, " +
+        "height INT, frames INT, extensions INT, subblocks INT, n_bytes INT NOT NULL") { b =>
+      val n = b.length
+      val hdrOk = n >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
+        b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a'
+      if (!hdrOk) ("not_gif", None, None, None, None, None, n)
+      else if (n < 13) ("truncated", None, None, None, None, None, n)
+      else {
+        val w = u16le(b, 6); val h = u16le(b, 8); val packed = u8(b, 10)
+        val gct = if ((packed & 0x80) != 0) 3 * (2 << (packed & 7)) else 0
+        var pos = 13 + gct
+        var frames = 0; var exts = 0; var subs = 0
+        var status: String = null
+        // walks one len|data chain; returns data-sub-block count or -1 on EOF
+        def chain(): Int = {
+          var c = 0
+          while (true) {
+            if (pos >= n) return -1
+            val len = u8(b, pos); pos += 1
+            if (len == 0) return c
+            if (pos + len > n) return -1
+            c += 1; pos += len
+          }
+          c
+        }
+        while (status == null) {
+          if (pos >= n) status = "truncated"
+          else u8(b, pos) match {
+            case 0x3b => status = "ok"
+            case 0x21 =>
+              pos += 2 // introducer + label
+              val c = chain()
+              if (c < 0) status = "truncated" else { exts += 1; subs += c }
+            case 0x2c =>
+              if (pos + 10 > n) status = "truncated"
+              else {
+                val fp = u8(b, pos + 9)
+                pos += 10
+                pos += (if ((fp & 0x80) != 0) 3 * (2 << (fp & 7)) else 0)
+                pos += 1 // LZW minimum code size
+                if (pos > n) status = "truncated"
+                else {
                   val c = chain()
-                  if (c < 0) status = "truncated" else { exts += 1; subs += c }
-                case 0x2c =>
-                  if (pos + 10 > n) status = "truncated"
-                  else {
-                    val fp = b(pos + 9) & 0xff
-                    pos += 10
-                    pos += (if ((fp & 0x80) != 0) 3 * (2 << (fp & 7)) else 0)
-                    pos += 1 // LZW minimum code size
-                    if (pos > n) status = "truncated"
-                    else {
-                      val c = chain()
-                      if (c < 0) status = "truncated" else { frames += 1; subs += c }
-                    }
-                  }
-                case _ => status = "malformed"
+                  if (c < 0) status = "truncated" else { frames += 1; subs += c }
+                }
               }
-            }
-            if (status == "truncated")
-              (id, status, Some(w), Some(h), None, None, None, n)
-            else (id, status, Some(w), Some(h), Some(frames), Some(exts), Some(subs), n)
+            case _ => status = "malformed"
           }
         }
+        if (status == "truncated") (status, Some(w), Some(h), None, None, None, n)
+        else (status, Some(w), Some(h), Some(frames), Some(exts), Some(subs), n)
       }
-      .toDF("doc_id", "status", "width", "height", "frames", "extensions",
-        "subblocks", "n_bytes")
-  }
+    }
 
   /** Synthetic WebP payloads for [[webpChunks]] — six families keyed by
     * doc_id % 6 (j = 10+id%13 lossy/lossless tail bytes, e = 5+id%7
@@ -8228,48 +7966,46 @@ object TrainingOps extends Serializable {
     */
   def syntheticWebpPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le(v: Long, k: Int): Unit =
-      (0 until k).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     def tag(s: String): Unit = bb ++= s.getBytes("US-ASCII")
     def fill(k: Int): Unit = (0 until k).foreach(i => bb += ((i * 11 + 3) & 0x7f).toByte)
     val w = (160 + id % 100).toInt; val h = (120 + id % 80).toInt
     val j = (10 + id % 13).toInt; val e = (5 + id % 7).toInt
     def chunk(cc: String, data: => Unit): Unit = {
       val mark = bb.length
-      tag(cc); le(0, 4) // len patched below
+      tag(cc); bb ++= le32(0) // len patched below
       val start = bb.length
       data
       val len = bb.length - start
-      (0 until 4).foreach(i => bb(mark + 4 + i) = ((len >> (8 * i)) & 0xff).toByte)
+      bb.patchInPlace(mark + 4, le32(len), 4)
       if (len % 2 == 1) bb += 0 // RIFF odd pad
     }
     def riff(body: => Unit): Unit = {
-      tag("RIFF"); le(0, 4); tag("WEBP")
+      tag("RIFF"); bb ++= le32(0); tag("WEBP")
       body
       val sz = bb.length - 8
-      (0 until 4).foreach(i => bb(4 + i) = ((sz >> (8 * i)) & 0xff).toByte)
+      bb.patchInPlace(4, le32(sz), 4)
     }
     def vp8(): Unit = chunk("VP8 ", {
       fill(3); bb += 0x9d.toByte; bb += 0x01; bb += 0x2a
-      le(w.toLong, 2); le(h.toLong, 2); fill(j)
+      bb ++= le16(w); bb ++= le16(h); fill(j)
     })
     (id % 6) match {
       case 0 => riff(vp8())
       case 1 => riff(chunk("VP8L", {
         bb += 0x2f
-        le(((w - 1).toLong | ((h - 1).toLong << 14)), 4); fill(j)
+        bb ++= le32((w - 1).toLong | ((h - 1).toLong << 14)); fill(j)
       }))
       case 2 => riff({
-        chunk("VP8X", { le(0, 4); le((w - 1).toLong, 3); le((h - 1).toLong, 3) })
+        chunk("VP8X", { bb ++= le32(0); bb ++= le24(w - 1); bb ++= le24(h - 1) })
         chunk("EXIF", fill(e))
       })
       case 3 => bb ++= s"plain text payload $id".getBytes("US-ASCII")
       case 4 =>
-        tag("RIFF"); le(16, 4); tag("WEBP"); tag("VP8 "); le(20, 4); fill(4)
+        tag("RIFF"); bb ++= le32(16); tag("WEBP"); tag("VP8 "); bb ++= le32(20); fill(4)
       case _ =>
         riff(vp8())
         val sz = bb.length - 8 + 3 // off by 3: the concat/truncate tell
-        (0 until 4).foreach(i => bb(4 + i) = ((sz >> (8 * i)) & 0xff).toByte)
+        bb.patchInPlace(4, le32(sz), 4)
     }
     bb.toArray
   }
@@ -8293,80 +8029,67 @@ object TrainingOps extends Serializable {
     *
     * Scale shape: per-row typed map in the scan stage, zero exchange.
     */
-  def webpChunks(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var z = k - 1
-            while (z >= 0) { v = (v << 8) | (b(i + z) & 0xffL); z -= 1 }
-            v
-          }
-          def tagAt(i: Int, s: String): Boolean =
-            s.indices.forall(k => b(i + k) == s.charAt(k).toByte)
-          val noneI = None: Option[Int]
-          if (n < 12 || !tagAt(0, "RIFF") || !tagAt(8, "WEBP"))
-            (id, "not_webp", None: Option[String], noneI, noneI, noneI, n)
-          else if (le(4, 4) != n - 8)
-            (id, "malformed", None, noneI, noneI, noneI, n)
+  def webpChunks(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, status STRING, format STRING, " +
+        "width INT, height INT, n_chunks INT, n_bytes INT NOT NULL") { b =>
+      val n = b.length
+      def tagAt(i: Int, s: String): Boolean =
+        s.indices.forall(k => b(i + k) == s.charAt(k).toByte)
+      if (n < 12 || !tagAt(0, "RIFF") || !tagAt(8, "WEBP"))
+        ("not_webp", None, None, None, None, n)
+      else if (u32le(b, 4) != n - 8)
+        ("malformed", None, None, None, None, n)
+      else {
+        var pos = 12
+        var status: String = null
+        var format: Option[String] = None
+        var wd: Option[Int] = None; var ht: Option[Int] = None
+        var chunks = 0
+        while (status == null && pos < n) {
+          if (pos + 8 > n) status = "truncated"
           else {
-            var pos = 12
-            var status: String = null
-            var format: Option[String] = None
-            var wd = noneI; var ht = noneI
-            var chunks = 0
-            while (status == null && pos < n) {
-              if (pos + 8 > n) status = "truncated"
-              else {
-                val cc = new String(b, pos, 4, "US-ASCII")
-                val len = le(pos + 4, 4)
-                val pad = len % 2
-                if (pos + 8 + len + pad > n) status = "truncated"
-                else {
-                  val d = pos + 8
-                  if (chunks == 0) cc match {
-                    case "VP8 " =>
-                      if (len < 10 || b(d + 3) != 0x9d.toByte ||
-                        b(d + 4) != 0x01 || b(d + 5) != 0x2a)
-                        status = "malformed"
-                      else {
-                        format = Some("lossy")
-                        wd = Some((le(d + 6, 2) & 0x3fff).toInt)
-                        ht = Some((le(d + 8, 2) & 0x3fff).toInt)
-                      }
-                    case "VP8L" =>
-                      if (len < 5 || b(d) != 0x2f) status = "malformed"
-                      else {
-                        format = Some("lossless")
-                        val bits = le(d + 1, 4)
-                        wd = Some((bits & 0x3fff).toInt + 1)
-                        ht = Some(((bits >> 14) & 0x3fff).toInt + 1)
-                      }
-                    case "VP8X" =>
-                      if (len < 10) status = "malformed"
-                      else {
-                        format = Some("extended")
-                        wd = Some(le(d + 4, 3).toInt + 1)
-                        ht = Some(le(d + 7, 3).toInt + 1)
-                      }
-                    case _ => status = "malformed"
+            val cc = new String(b, pos, 4, "US-ASCII")
+            val len = u32le(b, pos + 4)
+            val pad = len % 2
+            if (pos + 8 + len + pad > n) status = "truncated"
+            else {
+              val d = pos + 8
+              if (chunks == 0) cc match {
+                case "VP8 " =>
+                  if (len < 10 || b(d + 3) != 0x9d.toByte ||
+                    b(d + 4) != 0x01 || b(d + 5) != 0x2a)
+                    status = "malformed"
+                  else {
+                    format = Some("lossy")
+                    wd = Some(u16le(b, d + 6) & 0x3fff)
+                    ht = Some(u16le(b, d + 8) & 0x3fff)
                   }
-                  if (status == null) { chunks += 1; pos = d + len.toInt + pad.toInt }
-                }
+                case "VP8L" =>
+                  if (len < 5 || b(d) != 0x2f) status = "malformed"
+                  else {
+                    format = Some("lossless")
+                    val bits = u32le(b, d + 1)
+                    wd = Some((bits & 0x3fff).toInt + 1)
+                    ht = Some(((bits >> 14) & 0x3fff).toInt + 1)
+                  }
+                case "VP8X" =>
+                  if (len < 10) status = "malformed"
+                  else {
+                    format = Some("extended")
+                    wd = Some(u24le(b, d + 4) + 1)
+                    ht = Some(u24le(b, d + 7) + 1)
+                  }
+                case _ => status = "malformed"
               }
+              if (status == null) { chunks += 1; pos = d + len.toInt + pad.toInt }
             }
-            if (status == null)
-              (id, "ok", format, wd, ht, Some(chunks), n)
-            else (id, status, None, noneI, noneI, noneI, n)
           }
         }
+        if (status == null)
+          ("ok", format, wd, ht, Some(chunks), n)
+        else (status, None, None, None, None, n)
       }
-      .toDF("doc_id", "status", "format", "width", "height", "n_chunks", "n_bytes")
-  }
+    }
 
   /** Synthetic FLAC payloads for [[flacBlocks]] — five families keyed
     * by doc_id % 5 (v = 10+id%20 vorbis bytes, p = 5+id%9 padding,
@@ -8377,20 +8100,19 @@ object TrainingOps extends Serializable {
     */
   def syntheticFlacPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def u24be(v: Int): Unit = { bb += ((v >> 16) & 0xff).toByte; bb += ((v >> 8) & 0xff).toByte; bb += (v & 0xff).toByte }
     def block(last: Boolean, tpe: Int, len: Int): Unit = {
-      bb += ((if (last) 0x80 else 0) | tpe).toByte; u24be(len)
+      bb += ((if (last) 0x80 else 0) | tpe).toByte; bb ++= be24(len)
     }
     val rate = 8000 + (id % 8).toInt * 4000
     val ch = 1 + (id % 4).toInt; val bps = 16 + (id % 2).toInt * 8
     val total = 44100L + id % 1000
     def streaminfo(): Unit = {
       block(last = false, 0, 34)
-      u24be(0x10001000 >> 8); bb += 0x10 // min/max block size 4096 each
-      u24be(0); u24be(0x040000) // min/max frame size
+      bb ++= be24(0x10001000 >> 8); bb += 0x10 // min/max block size 4096 each
+      bb ++= be24(0); bb ++= be24(0x040000) // min/max frame size
       val packed = (rate.toLong << 44) | ((ch - 1).toLong << 41) |
         ((bps - 1).toLong << 36) | total
-      (7 to 0 by -1).foreach(i => bb += ((packed >> (8 * i)) & 0xff).toByte)
+      bb ++= be64(packed)
       (0 until 16).foreach(i => bb += ((id + i) & 0x7f).toByte) // md5
     }
     val v = (10 + id % 20).toInt; val p = (5 + id % 9).toInt; val a = (20 + id % 30).toInt
@@ -8435,128 +8157,101 @@ object TrainingOps extends Serializable {
     *
     * Scale shape: per-row typed map in the scan stage, zero exchange.
     */
-  def flacBlocks(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u24(i: Int): Int =
-            ((b(i) & 0xff) << 16) | ((b(i + 1) & 0xff) << 8) | (b(i + 2) & 0xff)
-          val none = None: Option[Long]
-          val noneI = None: Option[Int]
-          if (n < 4 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C')
-            (id, "not_flac", noneI, noneI, noneI, noneI, none, none, n)
+  def flacBlocks(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, status STRING, n_blocks INT, " +
+        "sample_rate INT, channels INT, bits_per_sample INT, total_samples BIGINT, " +
+        "audio_bytes BIGINT, n_bytes INT NOT NULL") { b =>
+      val n = b.length
+      if (n < 4 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C')
+        ("not_flac", None, None, None, None, None, None, n)
+      else {
+        var pos = 4
+        var blocks = 0
+        var rate: Option[Int] = None; var ch: Option[Int] = None
+        var bps: Option[Int] = None; var tot: Option[Long] = None
+        var status: String = null
+        var last = false
+        while (status == null && !last) {
+          if (pos + 4 > n) status = "truncated"
           else {
-            var pos = 4
-            var blocks = 0
-            var rate = noneI; var ch = noneI; var bps = noneI; var tot = none
-            var status: String = null
-            var last = false
-            while (status == null && !last) {
-              if (pos + 4 > n) status = "truncated"
-              else {
-                val hdr = b(pos) & 0xff
-                last = (hdr & 0x80) != 0
-                val tpe = hdr & 0x7f
-                val len = u24(pos + 1)
-                pos += 4
-                if (blocks == 0 && tpe != 0) status = "missing_streaminfo"
-                else if (blocks == 0 && len != 34) status = "malformed"
-                else if (pos + len > n) status = "truncated"
-                else {
-                  if (blocks == 0) {
-                    var packed = 0L
-                    (0 until 8).foreach(i => packed = (packed << 8) | (b(pos + 10 + i) & 0xffL))
-                    rate = Some((packed >>> 44).toInt)
-                    ch = Some(((packed >>> 41) & 0x7).toInt + 1)
-                    bps = Some(((packed >>> 36) & 0x1f).toInt + 1)
-                    tot = Some(packed & 0xFFFFFFFFFL)
-                  }
-                  pos += len; blocks += 1
-                }
+            val hdr = u8(b, pos)
+            last = (hdr & 0x80) != 0
+            val tpe = hdr & 0x7f
+            val len = u24be(b, pos + 1)
+            pos += 4
+            if (blocks == 0 && tpe != 0) status = "missing_streaminfo"
+            else if (blocks == 0 && len != 34) status = "malformed"
+            else if (pos + len > n) status = "truncated"
+            else {
+              if (blocks == 0) {
+                val packed = u64be(b, pos + 10)
+                rate = Some((packed >>> 44).toInt)
+                ch = Some(((packed >>> 41) & 0x7).toInt + 1)
+                bps = Some(((packed >>> 36) & 0x1f).toInt + 1)
+                tot = Some(packed & 0xFFFFFFFFFL)
               }
+              pos += len; blocks += 1
             }
-            if (status == null)
-              (id, "ok", Some(blocks), rate, ch, bps, tot, Some((n - pos).toLong), n)
-            else (id, status, noneI, rate, ch, bps, tot, none, n)
           }
         }
+        if (status == null)
+          ("ok", Some(blocks), rate, ch, bps, tot, Some((n - pos).toLong), n)
+        else (status, None, rate, ch, bps, tot, None, n)
       }
-      .toDF("doc_id", "status", "n_blocks", "sample_rate", "channels",
-        "bits_per_sample", "total_samples", "audio_bytes", "n_bytes")
-  }
+    }
 
-  def imageDims(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def be(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = 0
-          while (k < n) { v = (v << 8) | (b(i + k) & 0xffL); k += 1 }
-          v
-        }
-        def le(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = n - 1
-          while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-          v
-        }
-        def ascii(b: Array[Byte], i: Int, n: Int): String =
-          if (i + n <= b.length) new String(b, i, n, "US-ASCII") else ""
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var fmt = "unknown"; var wd: Option[Int] = None
-          var ht: Option[Int] = None; var st = "unknown"
-          if (n >= 8 && be(b, 0, 4) == 0x89504e47L && be(b, 4, 4) == 0x0d0a1a0aL) {
-            fmt = "png"
-            if (n >= 24 && ascii(b, 12, 4) == "IHDR") {
-              wd = Some(be(b, 16, 4).toInt); ht = Some(be(b, 20, 4).toInt); st = "ok"
-            } else st = "truncated"
-          } else if (ascii(b, 0, 6) == "GIF89a" || ascii(b, 0, 6) == "GIF87a") {
-            fmt = "gif"
-            if (n >= 10) {
-              wd = Some(le(b, 6, 2).toInt); ht = Some(le(b, 8, 2).toInt); st = "ok"
-            } else st = "truncated"
-          } else if (n >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-            fmt = "jpeg"; st = null
-            var i = 2
-            while (st == null) {
-              if (i >= n) st = "truncated"
-              else if ((b(i) & 0xff) != 0xff) st = "malformed"
+  def imageDims(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, format STRING, width INT, " +
+        "height INT, status STRING") {
+      def ascii(b: Array[Byte], i: Int, n: Int): String =
+        if (i + n <= b.length) new String(b, i, n, "US-ASCII") else ""
+      b =>
+        val n = b.length
+        var fmt = "unknown"; var wd: Option[Int] = None
+        var ht: Option[Int] = None; var st = "unknown"
+        if (n >= 8 && u32be(b, 0) == 0x89504e47L && u32be(b, 4) == 0x0d0a1a0aL) {
+          fmt = "png"
+          if (n >= 24 && ascii(b, 12, 4) == "IHDR") {
+            wd = Some(u32be(b, 16).toInt); ht = Some(u32be(b, 20).toInt); st = "ok"
+          } else st = "truncated"
+        } else if (ascii(b, 0, 6) == "GIF89a" || ascii(b, 0, 6) == "GIF87a") {
+          fmt = "gif"
+          if (n >= 10) {
+            wd = Some(u16le(b, 6)); ht = Some(u16le(b, 8)); st = "ok"
+          } else st = "truncated"
+        } else if (n >= 2 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) {
+          fmt = "jpeg"; st = null
+          var i = 2
+          while (st == null) {
+            if (i >= n) st = "truncated"
+            else if (u8(b, i) != 0xff) st = "malformed"
+            else {
+              var j = i
+              while (j < n && u8(b, j) == 0xff) j += 1 // fill bytes
+              if (j >= n) st = "truncated"
               else {
-                var j = i
-                while (j < n && (b(j) & 0xff) == 0xff) j += 1 // fill bytes
-                if (j >= n) st = "truncated"
+                val m = u8(b, j)
+                if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i = j + 1
+                else if (m == 0xd9 || m == 0xda) st = "malformed" // EOI/SOS, no SOF seen
+                else if (j + 3 > n) st = "truncated"
                 else {
-                  val m = b(j) & 0xff
-                  if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i = j + 1
-                  else if (m == 0xd9 || m == 0xda) st = "malformed" // EOI/SOS, no SOF seen
-                  else if (j + 3 > n) st = "truncated"
-                  else {
-                    val len = be(b, j + 1, 2).toInt
-                    if (len < 2) st = "malformed"
-                    else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-                      if (j + 8 > n) st = "truncated"
-                      else {
-                        ht = Some(be(b, j + 4, 2).toInt)
-                        wd = Some(be(b, j + 6, 2).toInt)
-                        st = "ok"
-                      }
-                    } else i = j + 1 + len // skip by declared length
-                  }
+                  val len = u16be(b, j + 1)
+                  if (len < 2) st = "malformed"
+                  else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
+                    if (j + 8 > n) st = "truncated"
+                    else {
+                      ht = Some(u16be(b, j + 4))
+                      wd = Some(u16be(b, j + 6))
+                      st = "ok"
+                    }
+                  } else i = j + 1 + len // skip by declared length
                 }
               }
             }
           }
-          (id, fmt, wd, ht, st)
         }
-      }
-      .toDF("doc_id", "format", "width", "height", "status")
-  }
+        (fmt, wd, ht, st)
+    }
 
   /** Content-defined chunking (CDC) — the storage-dedup primitive the
     * fixed-window family ([[paragraphDedup]]'s /8 word windows,
@@ -8813,86 +8508,79 @@ object TrainingOps extends Serializable {
     * Decoded bytes feed a rolling md5 only — never materialized as a
     * row (the m9 rule). Typed mapPartitions, MAP-ONLY, zero shuffle.
     */
-  def chunkedDecode(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(b: Array[Byte]): String = {
-          val sb = new StringBuilder(32)
-          b.foreach(x => sb.append(f"${x & 0xff}%02x"))
-          sb.toString
+  def chunkedDecode(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, n_chunks INT, body_len BIGINT, " +
+        "body_md5 STRING, n_trailers INT, status STRING") {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      def hex(b: Array[Byte]): String = {
+        val sb = new StringBuilder(32)
+        b.foreach(x => sb.append(f"${x & 0xff}%02x"))
+        sb.toString
+      }
+      b =>
+        val n = b.length
+        md.reset()
+        var off = 0
+        var nChunks = 0
+        var bodyLen = 0L
+        var trailers = 0
+        var status: String = null
+        def lineEnd(from: Int): Int = {
+          var i = from
+          while (i + 1 < n && !((b(i) & 0xff) == 0x0d && (b(i + 1) & 0xff) == 0x0a)) i += 1
+          if (i + 1 < n) i else -1
         }
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          md.reset()
-          var off = 0
-          var nChunks = 0
-          var bodyLen = 0L
-          var trailers = 0
-          var status: String = null
-          def lineEnd(from: Int): Int = {
-            var i = from
-            while (i + 1 < n && !((b(i) & 0xff) == 0x0d && (b(i + 1) & 0xff) == 0x0a)) i += 1
-            if (i + 1 < n) i else -1
-          }
-          while (status == null) {
-            val le = lineEnd(off)
-            if (le < 0) status = "truncated"
+        while (status == null) {
+          val le = lineEnd(off)
+          if (le < 0) status = "truncated"
+          else {
+            // cut the extension at ';'; hex-parse what precedes it
+            var semi = off
+            while (semi < le && b(semi) != ';') semi += 1
+            var sz = 0L
+            var ok = semi > off
+            var i = off
+            while (ok && i < semi) {
+              val c = b(i) & 0xff
+              val d =
+                if (c >= '0' && c <= '9') c - '0'
+                else if (c >= 'a' && c <= 'f') c - 'a' + 10
+                else if (c >= 'A' && c <= 'F') c - 'A' + 10
+                else -1
+              if (d < 0) ok = false else sz = sz * 16 + d
+              i += 1
+            }
+            if (!ok) status = "malformed"
             else {
-              // cut the extension at ';'; hex-parse what precedes it
-              var semi = off
-              while (semi < le && b(semi) != ';') semi += 1
-              var sz = 0L
-              var ok = semi > off
-              var i = off
-              while (ok && i < semi) {
-                val c = b(i) & 0xff
-                val d =
-                  if (c >= '0' && c <= '9') c - '0'
-                  else if (c >= 'a' && c <= 'f') c - 'a' + 10
-                  else if (c >= 'A' && c <= 'F') c - 'A' + 10
-                  else -1
-                if (d < 0) ok = false else sz = sz * 16 + d
-                i += 1
-              }
-              if (!ok) status = "malformed"
-              else {
-                off = le + 2
-                if (sz == 0L) {
-                  // trailer section: header lines until the empty line
-                  var done = false
-                  while (!done && status == null) {
-                    val te = lineEnd(off)
-                    if (te < 0) status = "truncated"
-                    else if (te == off) { done = true; status = "ok" }
-                    else { trailers += 1; off = te + 2 }
-                  }
-                } else if (off + sz + 2 > n) status = "truncated"
-                else {
-                  md.update(b, off, sz.toInt)
-                  bodyLen += sz
-                  nChunks += 1
-                  if ((b(off + sz.toInt) & 0xff) != 0x0d ||
-                    (b(off + sz.toInt + 1) & 0xff) != 0x0a) status = "malformed"
-                  else off = off + sz.toInt + 2
+              off = le + 2
+              if (sz == 0L) {
+                // trailer section: header lines until the empty line
+                var done = false
+                while (!done && status == null) {
+                  val te = lineEnd(off)
+                  if (te < 0) status = "truncated"
+                  else if (te == off) { done = true; status = "ok" }
+                  else { trailers += 1; off = te + 2 }
                 }
+              } else if (off + sz + 2 > n) status = "truncated"
+              else {
+                md.update(b, off, sz.toInt)
+                bodyLen += sz
+                nChunks += 1
+                if ((b(off + sz.toInt) & 0xff) != 0x0d ||
+                  (b(off + sz.toInt + 1) & 0xff) != 0x0a) status = "malformed"
+                else off = off + sz.toInt + 2
               }
             }
           }
-          val okRow = status == "ok"
-          (id,
-            if (okRow) Some(nChunks) else None,
-            if (okRow) Some(bodyLen) else None,
-            if (okRow) Some(hex(md.digest())) else { md.digest(); None },
-            if (okRow) Some(trailers) else None,
-            status)
         }
-      }
-      .toDF("doc_id", "n_chunks", "body_len", "body_md5", "n_trailers", "status")
-  }
+        val okRow = status == "ok"
+        (if (okRow) Some(nChunks) else None,
+          if (okRow) Some(bodyLen) else None,
+          if (okRow) Some(hex(md.digest())) else { md.digest(); None },
+          if (okRow) Some(trailers) else None,
+          status)
+    }
 
   /** Deterministic synthetic ISO-BMFF (MP4) bytes for [[mp4Headers]] —
     * test scaffolding in the [[syntheticWavPayload]] role. Kinds by
@@ -8915,24 +8603,21 @@ object TrainingOps extends Serializable {
     */
   def syntheticMp4Payload(id: Long): Array[Byte] = {
     def a(s: String) = s.getBytes("US-ASCII")
-    def be4(v: Long) = Array[Byte]((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be8(v: Long) = be4(v >>> 32) ++ be4(v & 0xffffffffL)
     def box(tpe: String, body: Array[Byte]): Array[Byte] =
-      be4(8L + body.length) ++ a(tpe) ++ body
+      be32(8L + body.length) ++ a(tpe) ++ body
     val kind = (id % 6).toInt
     val timescale = 600L * (1 + id % 4)
     val durV0 = 6000L + id % 5000
     val durV1 = 5000000000L + id % 1000 // needs the full 64 bits
     val brand = if (kind == 1) "mp42" else "isom"
-    val ftyp = box("ftyp", a(brand) ++ be4(0) ++ a("isomavc1"))
+    val ftyp = box("ftyp", a(brand) ++ be32(0) ++ a("isomavc1"))
     def mvhd(v: Int): Array[Byte] =
       if (v == 0)
-        box("mvhd", Array[Byte](0, 0, 0, 0) ++ be4(0) ++ be4(0) ++
-          be4(timescale) ++ be4(durV0))
+        box("mvhd", Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
+          be32(timescale) ++ be32(durV0))
       else
-        box("mvhd", Array[Byte](1, 0, 0, 0) ++ be8(0) ++ be8(0) ++
-          be4(timescale) ++ be8(durV1))
+        box("mvhd", Array[Byte](1, 0, 0, 0) ++ be64(0) ++ be64(0) ++
+          be32(timescale) ++ be64(durV1))
     def trak(i: Long): Array[Byte] =
       box("trak", box("free", a(s"t$i")))
     def moov(v: Int, nTrak: Int): Array[Byte] =
@@ -8943,13 +8628,13 @@ object TrainingOps extends Serializable {
       case 1 => ftyp ++ moov(1, 1) ++ box("mdat", mdatBody)
       case 2 => // largesize mdat, then moov: size field = 1, real 64-bit
         // size (16-byte header + body) follows the type
-        val large = be4(1L) ++ a("mdat") ++ be8(16L + mdatBody.length) ++ mdatBody
+        val large = be32(1L) ++ a("mdat") ++ be64(16L + mdatBody.length) ++ mdatBody
         ftyp ++ large ++ moov(0, 1)
       case 3 => // moov claims 9999 bytes the payload does not have
-        ftyp ++ be4(9999L) ++ a("moov") ++ mvhd(0)
+        ftyp ++ be32(9999L) ++ a("moov") ++ mvhd(0)
       case 4 => a(s"plain text payload $id")
       case _ => // size==0: mdat runs to EOF (last box)
-        ftyp ++ moov(0, 1) ++ be4(0L) ++ a("mdat") ++ mdatBody
+        ftyp ++ moov(0, 1) ++ be32(0L) ++ a("mdat") ++ mdatBody
     }
   }
 
@@ -8977,128 +8662,114 @@ object TrainingOps extends Serializable {
     * header) / `unknown` (first box is not `ftyp`). Typed
     * mapPartitions, MAP-ONLY, zero shuffle.
     */
-  def mp4Headers(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def be(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = 0
-          while (k < n) { v = (v << 8) | (b(i + k) & 0xffL); k += 1 }
-          v
-        }
-        def tag(b: Array[Byte], i: Int): String =
-          if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var brand: Option[String] = None
-          var timescale: Option[Long] = None
-          var duration: Option[Long] = None
-          var nTracks = 0
-          var sawMoov = false
-          var status: String = null
-          if (n < 8 || tag(b, 4) != "ftyp") status = "unknown"
-          else {
-            var off = 0
-            while (status == null && off < n) {
-              if (off + 8 > n) status = "truncated"
-              else {
-                var size = be(b, off, 4)
-                val tpe = tag(b, off + 4)
-                var hdr = 8
-                if (size == 1L) {
-                  if (off + 16 > n) { status = "truncated" }
-                  else { size = be(b, off + 8, 8); hdr = 16 }
-                } else if (size == 0L) size = (n - off).toLong
-                if (status == null) {
-                  if (size < hdr) status = "malformed"
-                  else if (off + size > n) status = "truncated"
-                  else {
-                    val end = off + size.toInt
-                    if (tpe == "ftyp") {
-                      if (off + hdr + 4 <= end) brand = Some(tag(b, off + hdr))
-                      else status = "truncated"
-                    } else if (tpe == "moov") {
-                      sawMoov = true
-                      var c = off + hdr
-                      while (status == null && c < end) {
-                        if (c + 8 > end) status = "truncated"
-                        else {
-                          var cs = be(b, c, 4)
-                          val ct = tag(b, c + 4)
-                          var ch = 8
-                          if (cs == 1L) {
-                            if (c + 16 > end) { status = "truncated" }
-                            else { cs = be(b, c + 8, 8); ch = 16 }
-                          } else if (cs == 0L) cs = (end - c).toLong
-                          if (status == null) {
-                            if (cs < ch) status = "malformed"
-                            else if (c + cs > end) status = "truncated"
-                            else {
-                              val body = c + ch
-                              if (ct == "mvhd") {
-                                val ver = if (body < end) b(body) & 0xff else -1
-                                if (ver == 0 && body + 20 <= end) {
-                                  timescale = Some(be(b, body + 12, 4))
-                                  duration = Some(be(b, body + 16, 4))
-                                } else if (ver == 1 && body + 32 <= end) {
-                                  timescale = Some(be(b, body + 20, 4))
-                                  duration = Some(be(b, body + 24, 8))
-                                } else status = "truncated"
-                              } else if (ct == "trak") nTracks += 1
-                              c += cs.toInt
-                            }
+  def mp4Headers(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.perFile(payloads, "doc_id BIGINT NOT NULL, brand STRING, timescale INT, " +
+        "duration_ms BIGINT, n_tracks INT, status STRING") {
+      def tag(b: Array[Byte], i: Int): String =
+        if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
+      b =>
+        val n = b.length
+        var brand: Option[String] = None
+        var timescale: Option[Long] = None
+        var duration: Option[Long] = None
+        var nTracks = 0
+        var sawMoov = false
+        var status: String = null
+        if (n < 8 || tag(b, 4) != "ftyp") status = "unknown"
+        else {
+          var off = 0
+          while (status == null && off < n) {
+            if (off + 8 > n) status = "truncated"
+            else {
+              var size = u32be(b, off)
+              val tpe = tag(b, off + 4)
+              var hdr = 8
+              if (size == 1L) {
+                if (off + 16 > n) { status = "truncated" }
+                else { size = u64be(b, off + 8); hdr = 16 }
+              } else if (size == 0L) size = (n - off).toLong
+              if (status == null) {
+                if (size < hdr) status = "malformed"
+                else if (off + size > n) status = "truncated"
+                else {
+                  val end = off + size.toInt
+                  if (tpe == "ftyp") {
+                    if (off + hdr + 4 <= end) brand = Some(tag(b, off + hdr))
+                    else status = "truncated"
+                  } else if (tpe == "moov") {
+                    sawMoov = true
+                    var c = off + hdr
+                    while (status == null && c < end) {
+                      if (c + 8 > end) status = "truncated"
+                      else {
+                        var cs = u32be(b, c)
+                        val ct = tag(b, c + 4)
+                        var ch = 8
+                        if (cs == 1L) {
+                          if (c + 16 > end) { status = "truncated" }
+                          else { cs = u64be(b, c + 8); ch = 16 }
+                        } else if (cs == 0L) cs = (end - c).toLong
+                        if (status == null) {
+                          if (cs < ch) status = "malformed"
+                          else if (c + cs > end) status = "truncated"
+                          else {
+                            val body = c + ch
+                            if (ct == "mvhd") {
+                              val ver = if (body < end) b(body) & 0xff else -1
+                              if (ver == 0 && body + 20 <= end) {
+                                timescale = Some(u32be(b, body + 12))
+                                duration = Some(u32be(b, body + 16))
+                              } else if (ver == 1 && body + 32 <= end) {
+                                timescale = Some(u32be(b, body + 20))
+                                duration = Some(u64be(b, body + 24))
+                              } else status = "truncated"
+                            } else if (ct == "trak") nTracks += 1
+                            c += cs.toInt
                           }
                         }
                       }
                     }
-                    if (status == null) off = end
                   }
+                  if (status == null) off = end
                 }
               }
             }
-            if (status == null)
-              status =
-                if (sawMoov && timescale.exists(_ > 0L) && duration.isDefined) "ok"
-                else "malformed"
           }
-          val ok = status == "ok"
-          val durMs =
-            if (ok) Some(1000L * duration.get / timescale.get) else None
-          (id, brand.orNull,
-            if (ok) timescale.map(_.toInt) else None,
-            durMs,
-            if (ok) Some(nTracks) else None,
-            status)
+          if (status == null)
+            status =
+              if (sawMoov && timescale.exists(_ > 0L) && duration.isDefined) "ok"
+              else "malformed"
         }
-      }
-      .toDF("doc_id", "brand", "timescale", "duration_ms", "n_tracks", "status")
-  }
+        val ok = status == "ok"
+        val durMs =
+          if (ok) Some(1000L * duration.get / timescale.get) else None
+        (brand,
+          if (ok) timescale.map(_.toInt) else None,
+          durMs,
+          if (ok) Some(nTracks) else None,
+          status)
+    }
 
   /** Deterministic ZIP payloads for [[zipEntries]] — six families keyed
     * by doc_id, each pinning one archive-grammar trap (see zipEntries).
     */
   def syntheticZipPayload(id: Long): Array[Byte] = {
     def a(s: String) = s.getBytes("US-ASCII")
-    def le2(v: Long) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le4(v: Long) = le2(v & 0xffff) ++ le2((v >> 16) & 0xffff)
-    def le8(v: Long) = le4(v & 0xffffffffL) ++ le4(v >>> 32)
     def cdEntry(name: String, method: Int, flags: Int, comp: Long,
                 uncomp: Long, extra: Array[Byte] = Array.empty): Array[Byte] =
-      le4(0x02014b50L) ++ le2(20) ++ le2(20) ++ le2(flags) ++ le2(method) ++
-        le2(0) ++ le2(0) ++ le4(0) ++ le4(comp) ++ le4(uncomp) ++
-        le2(name.length) ++ le2(extra.length) ++ le2(0) ++ le2(0) ++
-        le2(0) ++ le4(0) ++ le4(0) ++ a(name) ++ extra
+      le32(0x02014b50L) ++ le16(20) ++ le16(20) ++ le16(flags) ++ le16(method) ++
+        le16(0) ++ le16(0) ++ le32(0) ++ le32(comp) ++ le32(uncomp) ++
+        le16(name.length) ++ le16(extra.length) ++ le16(0) ++ le16(0) ++
+        le16(0) ++ le32(0) ++ le32(0) ++ a(name) ++ extra
     def eocd(n: Long, cdSize: Long, cdOff: Long,
              comment: Array[Byte] = Array.empty): Array[Byte] =
-      le4(0x06054b50L) ++ le2(0) ++ le2(0) ++ le2(n) ++ le2(n) ++
-        le4(cdSize) ++ le4(cdOff) ++ le2(comment.length) ++ comment
+      le32(0x06054b50L) ++ le16(0) ++ le16(0) ++ le16(n) ++ le16(n) ++
+        le32(cdSize) ++ le32(cdOff) ++ le16(comment.length) ++ comment
     def localHdr(name: String, method: Int, flags: Int, comp: Long,
                  uncomp: Long): Array[Byte] =
-      le4(0x04034b50L) ++ le2(20) ++ le2(flags) ++ le2(method) ++ le2(0) ++
-        le2(0) ++ le4(0) ++ le4(comp) ++ le4(uncomp) ++ le2(name.length) ++
-        le2(0) ++ a(name)
+      le32(0x04034b50L) ++ le16(20) ++ le16(flags) ++ le16(method) ++ le16(0) ++
+        le16(0) ++ le32(0) ++ le32(comp) ++ le32(uncomp) ++ le16(name.length) ++
+        le16(0) ++ a(name)
     (id % 6).toInt match {
       case 0 =>
         val n0 = 7 + id % 3
@@ -9113,7 +8784,7 @@ object TrainingOps extends Serializable {
         // does not cover the bytes remaining
         val filler = a("x" * (3 + id % 4).toInt)
         val cd = cdEntry(s"c${id % 9}.txt", 0, 0, 7 + id % 3, 7 + id % 3)
-        val decoy = le4(0x06054b50L) ++ Array.fill[Byte](18)(0xab.toByte)
+        val decoy = le32(0x06054b50L) ++ Array.fill[Byte](18)(0xab.toByte)
         filler ++ cd ++ eocd(1, cd.length, filler.length, decoy)
       case 2 =>
         // ZIP64: EOCD carries 0xFFFF/0xFFFFFFFF sentinels, the real
@@ -9121,14 +8792,14 @@ object TrainingOps extends Serializable {
         // locator; entry 0's uncompressed size is itself a sentinel
         // resolved from the 0x0001 extra field (> 4 GiB)
         val bigUncomp = 5000000000L + id % 9
-        val x64 = le2(0x0001) ++ le2(8) ++ le8(bigUncomp)
+        val x64 = le16(0x0001) ++ le16(8) ++ le64(bigUncomp)
         val filler = a("z" * (2 + id % 3).toInt)
         val cd = cdEntry(s"big${id % 9}.bin", 8, 0, 1000 + id % 7,
           0xffffffffL, x64) ++ cdEntry("s.txt", 0, 0, 3, 3)
-        val z64 = le4(0x06064b50L) ++ le8(44) ++ le2(45) ++ le2(45) ++
-          le4(0) ++ le4(0) ++ le8(2) ++ le8(2) ++ le8(cd.length) ++
-          le8(filler.length)
-        val loc = le4(0x07064b50L) ++ le4(0) ++ le8(filler.length + cd.length) ++ le4(1)
+        val z64 = le32(0x06064b50L) ++ le64(44) ++ le16(45) ++ le16(45) ++
+          le32(0) ++ le32(0) ++ le64(2) ++ le64(2) ++ le64(cd.length) ++
+          le64(filler.length)
+        val loc = le32(0x07064b50L) ++ le32(0) ++ le64(filler.length + cd.length) ++ le32(1)
         filler ++ cd ++ z64 ++ loc ++ eocd(0xffffL, cd.length, 0xffffffffL)
       case 3 =>
         // data-descriptor archive: local headers carry ZERO sizes (flag
@@ -9178,109 +8849,92 @@ object TrainingOps extends Serializable {
     * scan-side metadata discipline shared with m4/m6/m8/m11. Typed
     * mapPartitions, MAP-ONLY, zero shuffle.
     */
-  def zipEntries(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def le(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = n - 1
-          while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-          v
-        }
-        it.flatMap { case (id, b) =>
-          val len = b.length
-          var eocd = -1
-          var p = len - 22
-          val lo = math.max(0, len - 22 - 65535)
-          while (eocd < 0 && p >= lo) {
-            if (le(b, p, 4) == 0x06054b50L && le(b, p + 20, 2) == (len - (p + 22)).toLong)
-              eocd = p
-            else p -= 1
-          }
-          var status: String = null
-          var nTotal = 0L
-          var cdOff = 0L
-          val entries = Vector.newBuilder[(Int, String, Int, Long, Long)]
-          if (eocd < 0) status = "no_eocd"
+  def zipEntries(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "name STRING, method INT, comp_size BIGINT, uncomp_size BIGINT",
+        "status") { (b, rows) =>
+      val len = b.length
+      var eocd = -1
+      var p = len - 22
+      val lo = math.max(0, len - 22 - 65535)
+      while (eocd < 0 && p >= lo) {
+        if (u32le(b, p) == 0x06054b50L && u16le(b, p + 20) == (len - (p + 22)).toLong)
+          eocd = p
+        else p -= 1
+      }
+      var status: String = null
+      var nTotal = 0L
+      var cdOff = 0L
+      if (eocd < 0) status = "no_eocd"
+      else {
+        nTotal = u16le(b, eocd + 10)
+        cdOff = u32le(b, eocd + 16)
+        if (nTotal == 0xffffL || cdOff == 0xffffffffL) {
+          // ZIP64 sentinel: locator sits directly before the EOCD
+          val lp = eocd - 20
+          if (lp < 0 || u32le(b, lp) != 0x07064b50L) status = "malformed"
           else {
-            nTotal = le(b, eocd + 10, 2)
-            cdOff = le(b, eocd + 16, 4)
-            if (nTotal == 0xffffL || cdOff == 0xffffffffL) {
-              // ZIP64 sentinel: locator sits directly before the EOCD
-              val lp = eocd - 20
-              if (lp < 0 || le(b, lp, 4) != 0x07064b50L) status = "malformed"
+            val zoff = u64le(b, lp + 8)
+            if (zoff < 0 || zoff + 56 > len || u32le(b, zoff.toInt) != 0x06064b50L)
+              status = "malformed"
+            else {
+              nTotal = u64le(b, zoff.toInt + 32)
+              cdOff = u64le(b, zoff.toInt + 48)
+            }
+          }
+        }
+        if (status == null) {
+          var c = cdOff
+          var j = 0
+          while (status == null && j < nTotal) {
+            if (c + 46 > len || u32le(b, c.toInt) != 0x02014b50L)
+              status = "truncated"
+            else {
+              val ci = c.toInt
+              val method = u16le(b, ci + 10)
+              var comp = u32le(b, ci + 20)
+              var uncomp = u32le(b, ci + 24)
+              val nameLen = u16le(b, ci + 28)
+              val extraLen = u16le(b, ci + 30)
+              val cmtLen = u16le(b, ci + 32)
+              if (c + 46 + nameLen + extraLen + cmtLen > len) status = "truncated"
               else {
-                val zoff = le(b, lp + 8, 8)
-                if (zoff < 0 || zoff + 56 > len || le(b, zoff.toInt, 4) != 0x06064b50L)
-                  status = "malformed"
-                else {
-                  nTotal = le(b, zoff.toInt + 32, 8)
-                  cdOff = le(b, zoff.toInt + 48, 8)
-                }
-              }
-            }
-            if (status == null) {
-              var c = cdOff
-              var j = 0
-              while (status == null && j < nTotal) {
-                if (c + 46 > len || le(b, c.toInt, 4) != 0x02014b50L)
-                  status = "truncated"
-                else {
-                  val ci = c.toInt
-                  val method = le(b, ci + 10, 2).toInt
-                  var comp = le(b, ci + 20, 4)
-                  var uncomp = le(b, ci + 24, 4)
-                  val nameLen = le(b, ci + 28, 2).toInt
-                  val extraLen = le(b, ci + 30, 2).toInt
-                  val cmtLen = le(b, ci + 32, 2).toInt
-                  if (c + 46 + nameLen + extraLen + cmtLen > len) status = "truncated"
-                  else {
-                    val name = new String(b, ci + 46, nameLen, "US-ASCII")
-                    // sentinel sizes resolve from the ZIP64 extra field
-                    // (id 0x0001): values appear in order, only for the
-                    // fields that are sentinels in the fixed record
-                    if (comp == 0xffffffffL || uncomp == 0xffffffffL) {
-                      var x = ci + 46 + nameLen
-                      val xEnd = x + extraLen
-                      var found = false
-                      while (!found && x + 4 <= xEnd) {
-                        val hid = le(b, x, 2)
-                        val hsz = le(b, x + 2, 2).toInt
-                        if (hid == 0x0001L && x + 4 + hsz <= xEnd) {
-                          var q = x + 4
-                          if (uncomp == 0xffffffffL && q + 8 <= x + 4 + hsz) {
-                            uncomp = le(b, q, 8); q += 8
-                          }
-                          if (comp == 0xffffffffL && q + 8 <= x + 4 + hsz)
-                            comp = le(b, q, 8)
-                          found = true
-                        } else x += 4 + hsz
+                val name = new String(b, ci + 46, nameLen, "US-ASCII")
+                // sentinel sizes resolve from the ZIP64 extra field
+                // (id 0x0001): values appear in order, only for the
+                // fields that are sentinels in the fixed record
+                if (comp == 0xffffffffL || uncomp == 0xffffffffL) {
+                  var x = ci + 46 + nameLen
+                  val xEnd = x + extraLen
+                  var found = false
+                  while (!found && x + 4 <= xEnd) {
+                    val hid = u16le(b, x)
+                    val hsz = u16le(b, x + 2)
+                    if (hid == 0x0001L && x + 4 + hsz <= xEnd) {
+                      var q = x + 4
+                      if (uncomp == 0xffffffffL && q + 8 <= x + 4 + hsz) {
+                        uncomp = u64le(b, q); q += 8
                       }
-                      if (!found) status = "malformed"
-                    }
-                    if (status == null) {
-                      entries += ((j, name, method, comp, uncomp))
-                      c += 46 + nameLen + extraLen + cmtLen
-                      j += 1
-                    }
+                      if (comp == 0xffffffffL && q + 8 <= x + 4 + hsz)
+                        comp = u64le(b, q)
+                      found = true
+                    } else x += 4 + hsz
                   }
+                  if (!found) status = "malformed"
+                }
+                if (status == null) {
+                  rows += Array(j, name, method, comp, uncomp)
+                  c += 46 + nameLen + extraLen + cmtLen
+                  j += 1
                 }
               }
-              if (status == null) status = "ok"
             }
           }
-          val es = entries.result()
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[String],
-              None: Option[Int], None: Option[Long], None: Option[Long]))
-          else es.map { case (j, nm, m, cp, uc) =>
-            (id, status, Some(j), Some(nm), Some(m), Some(cp), Some(uc))
-          }
+          if (status == null) status = "ok"
         }
       }
-      .toDF("doc_id", "status", "idx", "name", "method", "comp_size", "uncomp_size")
-  }
+      Seq(status)
+    }
 
   /** Deterministic TAR archive payloads for [[tarEntries]], six families
     * by doc_id — each family pins one trap of the ustar/GNU format:
@@ -9391,109 +9045,97 @@ object TrainingOps extends Serializable {
     * outcomes yield one marker row (idx NULL) so every doc surfaces.
     * Typed mapPartitions riding the scan stage, MAP-ONLY, zero shuffle.
     */
-  def tarEntries(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def cstr(b: Array[Byte], off: Int, len: Int): String = {
-          var e = off; val lim = off + len
-          while (e < lim && b(e) != 0) e += 1
-          new String(b, off, e - off, "US-ASCII")
+  def tarEntries(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, idx INT, " +
+        "name STRING, typeflag STRING, size BIGINT", "status") {
+      def cstr(b: Array[Byte], off: Int, len: Int): String = {
+        var e = off; val lim = off + len
+        while (e < lim && b(e) != 0) e += 1
+        new String(b, off, e - off, "US-ASCII")
+      }
+      def octal(b: Array[Byte], off: Int, len: Int): Long = {
+        var i = off; val lim = off + len
+        while (i < lim && b(i) == ' '.toByte) i += 1
+        var v = 0L; var any = false
+        while (i < lim && b(i) >= '0'.toByte && b(i) <= '7'.toByte) {
+          v = (v << 3) + (b(i) - '0'.toByte); i += 1; any = true
         }
-        def octal(b: Array[Byte], off: Int, len: Int): Long = {
-          var i = off; val lim = off + len
-          while (i < lim && b(i) == ' '.toByte) i += 1
-          var v = 0L; var any = false
-          while (i < lim && b(i) >= '0'.toByte && b(i) <= '7'.toByte) {
-            v = (v << 3) + (b(i) - '0'.toByte); i += 1; any = true
-          }
-          if (any) v else -1L
+        if (any) v else -1L
+      }
+      def sizeField(b: Array[Byte], off: Int): Long =
+        if ((b(off) & 0x80) != 0) {
+          var v = b(off) & 0x7fL; var i = off + 1
+          while (i < off + 12) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
+          v
+        } else octal(b, off, 12)
+      def checksumOk(b: Array[Byte], off: Int): Boolean = {
+        val stored = octal(b, off + 148, 8)
+        var s = 0L; var i = 0
+        while (i < 512) {
+          s += (if (i >= 148 && i < 156) 32L else (b(off + i) & 0xffL))
+          i += 1
         }
-        def sizeField(b: Array[Byte], off: Int): Long =
-          if ((b(off) & 0x80) != 0) {
-            var v = b(off) & 0x7fL; var i = off + 1
-            while (i < off + 12) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-            v
-          } else octal(b, off, 12)
-        def checksumOk(b: Array[Byte], off: Int): Boolean = {
-          val stored = octal(b, off + 148, 8)
-          var s = 0L; var i = 0
-          while (i < 512) {
-            s += (if (i >= 148 && i < 156) 32L else (b(off + i) & 0xffL))
-            i += 1
-          }
-          stored >= 0 && s == stored
-        }
-        def zeroBlock(b: Array[Byte], off: Int): Boolean = {
-          var i = off
-          while (i < off + 512 && b(i) == 0) i += 1
-          i == off + 512
-        }
-        it.flatMap { case (id, b) =>
-          val len = b.length
-          var p = 0
-          var j = 0
-          var status: String = null
-          var pendingLong: String = null
-          val entries = Vector.newBuilder[(Int, String, String, Long)]
-          if (len < 512) status = "not_tar"
-          while (status == null) {
-            if (p + 512 > len) {
-              // clean EOF exactly on a block boundary after >=1 entry is
-              // a legal (terminator-less) end; anything else mid-header
-              // is truncation
-              status =
-                if (p == len && j > 0) "ok"
-                else if (j > 0) "truncated" else "not_tar"
-            } else if (zeroBlock(b, p)) {
-              status = "ok" // terminator (empty archives are legal tars)
-            } else if (!(b(p + 257) == 'u' && b(p + 258) == 's' &&
-                         b(p + 259) == 't' && b(p + 260) == 'a' &&
-                         b(p + 261) == 'r')) {
-              status = if (j == 0) "not_tar" else "malformed"
-            } else if (!checksumOk(b, p)) {
-              status = "bad_checksum"
-            } else {
-              val sz = sizeField(b, p + 124)
-              if (sz < 0) status = "malformed"
+        stored >= 0 && s == stored
+      }
+      def zeroBlock(b: Array[Byte], off: Int): Boolean = {
+        var i = off
+        while (i < off + 512 && b(i) == 0) i += 1
+        i == off + 512
+      }
+      (b, rows) =>
+        val len = b.length
+        var p = 0
+        var j = 0
+        var status: String = null
+        var pendingLong: String = null
+        if (len < 512) status = "not_tar"
+        while (status == null) {
+          if (p + 512 > len) {
+            // clean EOF exactly on a block boundary after >=1 entry is
+            // a legal (terminator-less) end; anything else mid-header
+            // is truncation
+            status =
+              if (p == len && j > 0) "ok"
+              else if (j > 0) "truncated" else "not_tar"
+          } else if (zeroBlock(b, p)) {
+            status = "ok" // terminator (empty archives are legal tars)
+          } else if (!(b(p + 257) == 'u' && b(p + 258) == 's' &&
+                       b(p + 259) == 't' && b(p + 260) == 'a' &&
+                       b(p + 261) == 'r')) {
+            status = if (j == 0) "not_tar" else "malformed"
+          } else if (!checksumOk(b, p)) {
+            status = "bad_checksum"
+          } else {
+            val sz = sizeField(b, p + 124)
+            if (sz < 0) status = "malformed"
+            else {
+              val blocks = ((sz + 511) / 512) * 512
+              if (p + 512 + blocks > len) status = "truncated"
               else {
-                val blocks = ((sz + 511) / 512) * 512
-                if (p + 512 + blocks > len) status = "truncated"
-                else {
-                  val tf = (b(p + 156) & 0xff).toChar
-                  if (tf == 'L') {
-                    // GNU longname: the data block holds the REAL name
-                    // of the next entry, NUL-terminated; consume it
-                    pendingLong = cstr(b, p + 512, sz.toInt)
-                  } else {
-                    val posix = b(p + 262) == 0 // "ustar\0" vs "ustar  "
-                    val base = cstr(b, p, 100)
-                    val pre = if (posix) cstr(b, p + 345, 155) else ""
-                    val name =
-                      if (pendingLong != null) pendingLong
-                      else if (pre.nonEmpty) pre + "/" + base
-                      else base
-                    pendingLong = null
-                    entries += ((j, name, tf.toString, sz))
-                    j += 1
-                  }
-                  p += 512 + blocks.toInt
+                val tf = (b(p + 156) & 0xff).toChar
+                if (tf == 'L') {
+                  // GNU longname: the data block holds the REAL name
+                  // of the next entry, NUL-terminated; consume it
+                  pendingLong = cstr(b, p + 512, sz.toInt)
+                } else {
+                  val posix = b(p + 262) == 0 // "ustar\0" vs "ustar  "
+                  val base = cstr(b, p, 100)
+                  val pre = if (posix) cstr(b, p + 345, 155) else ""
+                  val name =
+                    if (pendingLong != null) pendingLong
+                    else if (pre.nonEmpty) pre + "/" + base
+                    else base
+                  pendingLong = null
+                  rows += Array(j, name, tf.toString, sz)
+                  j += 1
                 }
+                p += 512 + blocks.toInt
               }
             }
           }
-          val es = entries.result()
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[String],
-              None: Option[String], None: Option[Long]))
-          else es.map { case (i2, nm, tf, sz) =>
-            (id, status, Some(i2), Some(nm), Some(tf), Some(sz))
-          }
         }
-      }
-      .toDF("doc_id", "status", "idx", "name", "typeflag", "size")
-  }
+        Seq(status)
+    }
 
   /** Deterministic TIFF payloads for [[tiffEntries]], six families by
     * doc_id — each pins one trap of the TIFF/EXIF IFD grammar:
@@ -9512,72 +9154,61 @@ object TrainingOps extends Serializable {
     * order.
     */
   def syntheticTiffPayload(id: Long): Array[Byte] = {
-    def w16(b: Array[Byte], off: Int, v: Int, be: Boolean): Unit =
-      if (be) { b(off) = (v >> 8).toByte; b(off + 1) = v.toByte }
-      else { b(off) = v.toByte; b(off + 1) = (v >> 8).toByte }
-    def w32(b: Array[Byte], off: Int, v: Long, be: Boolean): Unit =
-      if (be) {
-        b(off) = (v >> 24).toByte; b(off + 1) = (v >> 16).toByte
-        b(off + 2) = (v >> 8).toByte; b(off + 3) = v.toByte
-      } else {
-        b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-        b(off + 2) = (v >> 16).toByte; b(off + 3) = (v >> 24).toByte
-      }
     def mk(size: Int, be: Boolean): Array[Byte] = {
       val b = new Array[Byte](size)
       b(0) = (if (be) 'M' else 'I').toByte; b(1) = b(0)
-      w16(b, 2, 42, be); w32(b, 4, 8L, be); b
+      put(b, 2, 42, 2, be); put(b, 4, 8L, 4, be); b
     }
     // writes an entry header, returns the value-field offset
     def ent(b: Array[Byte], off: Int, tag: Int, typ: Int, cnt: Long,
             be: Boolean): Int = {
-      w16(b, off, tag, be); w16(b, off + 2, typ, be)
-      w32(b, off + 4, cnt, be); off + 8
+      put(b, off, tag, 2, be); put(b, off + 2, typ, 2, be)
+      put(b, off + 4, cnt, 4, be); off + 8
     }
     (id % 6).toInt match {
       case 0 =>
         val b = mk(58, be = false)
-        w16(b, 8, 3, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (640 + id % 100).toInt, false)
-        w16(b, ent(b, 22, 257, 3, 1, false), (480 + id % 100).toInt, false)
-        w32(b, ent(b, 34, 271, 2, 8, false), 50L, false)
-        w32(b, 46, 0L, false)
+        put(b, 8, 3, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (640 + id % 100).toInt, 2, false)
+        put(b, ent(b, 22, 257, 3, 1, false), (480 + id % 100).toInt, 2, false)
+        put(b, ent(b, 34, 271, 2, 8, false), 50L, 4, false)
+        put(b, 46, 0L, 4, false)
         val s = s"camera${id % 9}".getBytes("US-ASCII") // 7 chars + NUL pad
         System.arraycopy(s, 0, b, 50, s.length)
         b
       case 1 =>
         val b = mk(46, be = true)
-        w16(b, 8, 2, true)
-        w16(b, ent(b, 10, 256, 3, 1, true), (800 + id % 100).toInt, true)
-        w32(b, ent(b, 22, 282, 5, 1, true), 38L, true)
-        w32(b, 34, 0L, true)
-        w32(b, 38, 2L * (72 + id % 10), true) // numerator
-        w32(b, 42, 2L, true)                  // denominator
+        put(b, 8, 2, 2, true)
+        put(b, ent(b, 10, 256, 3, 1, true), (800 + id % 100).toInt, 2, true)
+        put(b, ent(b, 22, 282, 5, 1, true), 38L, 4, true)
+        put(b, 34, 0L, 4, true)
+        put(b, 38, 2L * (72 + id % 10), 4, true) // numerator
+        put(b, 42, 2L, 4, true)                  // denominator
         b
       case 2 =>
         val b = mk(74, be = false)
-        w16(b, 8, 2, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (1024 + id % 50).toInt, false)
-        w32(b, ent(b, 22, 34665, 4, 1, false), 38L, false) // EXIF pointer
-        w32(b, 34, 56L, false) // next IFD = IFD1
-        w16(b, 38, 1, false)   // EXIF sub-IFD
-        w16(b, ent(b, 40, 34855, 3, 1, false), (100 + (id % 8) * 25).toInt, false)
-        w32(b, 52, 0L, false)
-        w16(b, 56, 1, false)   // IFD1 (thumbnail)
-        w16(b, ent(b, 58, 259, 3, 1, false), 6, false)
-        w32(b, 70, 0L, false)
+        put(b, 8, 2, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (1024 + id % 50).toInt, 2, false)
+        put(b, ent(b, 22, 34665, 4, 1, false), 38L, 4, false) // EXIF pointer
+        put(b, 34, 56L, 4, false) // next IFD = IFD1
+        put(b, 38, 1, 2, false)   // EXIF sub-IFD
+        put(b, ent(b, 40, 34855, 3, 1, false), (100 + (id % 8) * 25).toInt, 2, false)
+        put(b, 52, 0L, 4, false)
+        put(b, 56, 1, 2, false)   // IFD1 (thumbnail)
+        put(b, ent(b, 58, 259, 3, 1, false), 6, 2, false)
+        put(b, 70, 0L, 4, false)
         b
       case 3 =>
         val b = mk(26, be = false)
-        w16(b, 8, 1, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (555 + id % 9).toInt, false)
-        w32(b, 22, 8L, false) // next-IFD cycles back to IFD0
+        put(b, 8, 1, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (555 + id % 9).toInt, 2, false)
+        put(b, 22, 8L, 4, false) // next-IFD cycles back to IFD0
         b
       case 4 => s"not a tiff $id".getBytes("US-ASCII")
       case _ =>
         val b = mk(22, be = false) // promises 2 entries, holds 1
-        w16(b, 8, 2, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (320 + id % 100).toInt, false)
+        put(b, 8, 2, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (320 + id % 100).toInt, 2, false)
         b
     }
   }
@@ -9610,124 +9241,101 @@ object TrainingOps extends Serializable {
     * the main chain is 0, 1, 2, ...; an EXIF sub-IFD is 100. Typed
     * mapPartitions riding the scan stage, MAP-ONLY, zero shuffle.
     */
-  def tiffEntries(spark: SparkSession, payloads: DataFrame): DataFrame = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, b) =>
-          val len = b.length
-          var status: String = null
-          val out = Vector.newBuilder[
-            (Int, Int, Int, Int, Long, Option[Long], Option[String])]
-          if (len < 8 ||
-              !((b(0) == 'I' && b(1) == 'I') || (b(0) == 'M' && b(1) == 'M')))
-            status = "not_tiff"
-          else {
-            val be = b(0) == 'M'
-            def u16(off: Int): Int =
-              if (be) ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-              else ((b(off + 1) & 0xff) << 8) | (b(off) & 0xff)
-            def u32(off: Int): Long =
-              if (be) ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-                ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-              else ((b(off + 3) & 0xffL) << 24) | ((b(off + 2) & 0xffL) << 16) |
-                ((b(off + 1) & 0xffL) << 8) | (b(off) & 0xffL)
-            if (u16(2) != 42) status = "not_tiff"
+  def tiffEntries(spark: SparkSession, payloads: DataFrame): DataFrame =
+    ByteWalk.elements(payloads, "doc_id BIGINT NOT NULL, status STRING, ifd INT, idx INT, " +
+        "tag INT, ftype INT, cnt BIGINT, value_num BIGINT, value_str STRING",
+        "status") { (b, rows) =>
+      val len = b.length
+      var status: String = null
+      if (len < 8 ||
+          !((b(0) == 'I' && b(1) == 'I') || (b(0) == 'M' && b(1) == 'M')))
+        status = "not_tiff"
+      else {
+        val be = b(0) == 'M'
+        if (u16(b, 2, be) != 42) status = "not_tiff"
+        else {
+          // parse one IFD at `off0` labeled `label`; returns
+          // (exifOffset, nextIfdOffset), 0 meaning absent
+          def parseIfd(off0: Long, label: Int): (Long, Long) = {
+            var exif = 0L; var next = 0L
+            if (off0 + 2 > len) { status = "truncated"; return (0L, 0L) }
+            val off = off0.toInt
+            val n = u16(b, off, be)
+            var emitted = 0; var i = 0; var done = false
+            while (i < n && !done) {
+              val e = off + 2 + i * 12
+              if (e + 12 > len) { status = "truncated"; done = true }
+              else {
+                val tag = u16(b, e, be); val typ = u16(b, e + 2, be)
+                val cnt = u32(b, e + 4, be)
+                val sz: Long = typ match {
+                  case 1 | 2 => 1L; case 3 => 2L; case 4 => 4L
+                  case 5 => 8L; case _ => 0L
+                }
+                val bl = cnt * sz
+                val vOff: Long = if (bl <= 4) (e + 8).toLong else u32(b, e + 8, be)
+                if (sz == 0L) {
+                  // unknown type: surfaced, value unreadable
+                  rows += Array(label, emitted, tag, typ, cnt, None, None)
+                  emitted += 1
+                } else if (vOff + bl > len) {
+                  status = "truncated"; done = true
+                } else if (tag == 34665 && typ == 4) {
+                  exif = u32(b, vOff.toInt, be) // consumed: pointer plumbing
+                } else {
+                  val v = vOff.toInt
+                  typ match {
+                    case 2 =>
+                      var sEnd = v; val lim = v + cnt.toInt
+                      while (sEnd < lim && b(sEnd) != 0) sEnd += 1
+                      rows += Array(label, emitted, tag, typ, cnt, None,
+                        Some(new String(b, v, sEnd - v, "US-ASCII")))
+                    case 1 =>
+                      rows += Array(label, emitted, tag, typ, cnt,
+                        Some(b(v) & 0xffL), None)
+                    case 3 =>
+                      rows += Array(label, emitted, tag, typ, cnt,
+                        Some(u16(b, v, be).toLong), None)
+                    case 4 =>
+                      rows += Array(label, emitted, tag, typ, cnt,
+                        Some(u32(b, v, be)), None)
+                    case _ => // 5: RATIONAL
+                      val den = u32(b, v + 4, be)
+                      rows += Array(label, emitted, tag, typ, cnt,
+                        if (den == 0) None else Some(u32(b, v, be) / den), None)
+                  }
+                  emitted += 1
+                }
+                i += 1
+              }
+            }
+            if (!done) {
+              val nOff = off + 2 + n * 12
+              if (nOff + 4 > len) status = "truncated"
+              else next = u32(b, nOff, be)
+            }
+            (exif, next)
+          }
+          var visited = Set.empty[Long]
+          var chain = 0
+          var cur = u32(b, 4, be)
+          while (cur != 0 && status == null) {
+            if (visited(cur)) status = "malformed"
             else {
-              // parse one IFD at `off0` labeled `label`; returns
-              // (exifOffset, nextIfdOffset), 0 meaning absent
-              def parseIfd(off0: Long, label: Int): (Long, Long) = {
-                var exif = 0L; var next = 0L
-                if (off0 + 2 > len) { status = "truncated"; return (0L, 0L) }
-                val off = off0.toInt
-                val n = u16(off)
-                var emitted = 0; var i = 0; var done = false
-                while (i < n && !done) {
-                  val e = off + 2 + i * 12
-                  if (e + 12 > len) { status = "truncated"; done = true }
-                  else {
-                    val tag = u16(e); val typ = u16(e + 2); val cnt = u32(e + 4)
-                    val sz: Long = typ match {
-                      case 1 | 2 => 1L; case 3 => 2L; case 4 => 4L
-                      case 5 => 8L; case _ => 0L
-                    }
-                    val bl = cnt * sz
-                    val vOff: Long = if (bl <= 4) (e + 8).toLong else u32(e + 8)
-                    if (sz == 0L) {
-                      // unknown type: surfaced, value unreadable
-                      out += ((label, emitted, tag, typ, cnt, None, None))
-                      emitted += 1
-                    } else if (vOff + bl > len) {
-                      status = "truncated"; done = true
-                    } else if (tag == 34665 && typ == 4) {
-                      exif = u32(vOff.toInt) // consumed: pointer plumbing
-                    } else {
-                      val v = vOff.toInt
-                      typ match {
-                        case 2 =>
-                          var sEnd = v; val lim = v + cnt.toInt
-                          while (sEnd < lim && b(sEnd) != 0) sEnd += 1
-                          out += ((label, emitted, tag, typ, cnt, None,
-                            Some(new String(b, v, sEnd - v, "US-ASCII"))))
-                        case 1 =>
-                          out += ((label, emitted, tag, typ, cnt,
-                            Some(b(v) & 0xffL), None))
-                        case 3 =>
-                          out += ((label, emitted, tag, typ, cnt,
-                            Some(u16(v).toLong), None))
-                        case 4 =>
-                          out += ((label, emitted, tag, typ, cnt,
-                            Some(u32(v)), None))
-                        case _ => // 5: RATIONAL
-                          val den = u32(v + 4)
-                          out += ((label, emitted, tag, typ, cnt,
-                            if (den == 0) None else Some(u32(v) / den), None))
-                      }
-                      emitted += 1
-                    }
-                    i += 1
-                  }
-                }
-                if (!done) {
-                  val nOff = off + 2 + n * 12
-                  if (nOff + 4 > len) status = "truncated"
-                  else next = u32(nOff)
-                }
-                (exif, next)
+              visited += cur
+              val (exif, next) = parseIfd(cur, chain)
+              if (status == null && exif != 0) {
+                if (visited(exif)) status = "malformed"
+                else { visited += exif; parseIfd(exif, 100) }
               }
-              var visited = Set.empty[Long]
-              var chain = 0
-              var cur = u32(4)
-              while (cur != 0 && status == null) {
-                if (visited(cur)) status = "malformed"
-                else {
-                  visited += cur
-                  val (exif, next) = parseIfd(cur, chain)
-                  if (status == null && exif != 0) {
-                    if (visited(exif)) status = "malformed"
-                    else { visited += exif; parseIfd(exif, 100) }
-                  }
-                  cur = next; chain += 1
-                }
-              }
-              if (status == null) status = "ok"
+              cur = next; chain += 1
             }
           }
-          val es = out.result()
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Int], None: Option[Long],
-              None: Option[Long], None: Option[String]))
-          else es.map { case (ifd, idx, tag, typ, cnt, vn, vs) =>
-            (id, status, Some(ifd), Some(idx), Some(tag), Some(typ),
-              Some(cnt), vn, vs)
-          }
+          if (status == null) status = "ok"
         }
       }
-      .toDF("doc_id", "status", "ifd", "idx", "tag", "ftype", "cnt",
-        "value_num", "value_str")
-  }
+      Seq(status)
+    }
 
   /** The blocklist pattern table for [[blocklistHits]]'s driver query —
     * deliberately a nested prefix/suffix family over the corpus

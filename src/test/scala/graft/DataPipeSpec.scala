@@ -2575,6 +2575,119 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .subsetOf(Set("ok", "truncated", "malformed")))
   }
 
+  test("payload walkers: one frame — recorded schemas, NULL walks as empty, one verdict row per doc") {
+    val sp = spark; import sp.implicits._
+    // every m-family payload walker with its output schema as recorded
+    // before the walkers moved onto ByteWalk: name, type and
+    // nullability per field, in order
+    val walkers: Seq[(String, (SparkSession, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame, String)] = Seq(
+      ("imageDims", TrainingOps.imageDims _,
+        "doc_id BIGINT NOT NULL,format STRING,width INT,height INT," +
+        "status STRING"),
+      ("charsetDetect", TrainingOps.charsetDetect _,
+        "doc_id BIGINT NOT NULL,bom STRING,declared STRING," +
+        "detected STRING,utf8_valid BOOLEAN NOT NULL"),
+      ("httpResponses", TrainingOps.httpResponses _,
+        "doc_id BIGINT NOT NULL,http_status INT,content_type STRING," +
+        "location STRING,status STRING,body_offset INT,body_len INT," +
+        "body_md5 STRING"),
+      ("wavHeaders", TrainingOps.wavHeaders _,
+        "doc_id BIGINT NOT NULL,channels INT,sample_rate INT,bits INT," +
+        "data_bytes BIGINT,duration_ms BIGINT,status STRING"),
+      ("mp4Headers", TrainingOps.mp4Headers _,
+        "doc_id BIGINT NOT NULL,brand STRING,timescale INT," +
+        "duration_ms BIGINT,n_tracks INT,status STRING"),
+      ("chunkedDecode", TrainingOps.chunkedDecode _,
+        "doc_id BIGINT NOT NULL,n_chunks INT,body_len BIGINT," +
+        "body_md5 STRING,n_trailers INT,status STRING"),
+      ("zipEntries", TrainingOps.zipEntries _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,name STRING," +
+        "method INT,comp_size BIGINT,uncomp_size BIGINT"),
+      ("tarEntries", TrainingOps.tarEntries _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,name STRING," +
+        "typeflag STRING,size BIGINT"),
+      ("tiffEntries", TrainingOps.tiffEntries _,
+        "doc_id BIGINT NOT NULL,status STRING,ifd INT,idx INT,tag INT," +
+        "ftype INT,cnt BIGINT,value_num BIGINT,value_str STRING"),
+      ("pngChunks", TrainingOps.pngChunks _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,c_off BIGINT," +
+        "ctype STRING,clen INT,crc_ok INT,critical INT"),
+      ("jpegSegments", TrainingOps.jpegSegments _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,m_off BIGINT," +
+        "marker STRING,seg_len INT,ecs_len INT"),
+      ("mp3Frames", TrainingOps.mp3Frames _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,f_off BIGINT," +
+        "kind STRING,br_kbps INT,sr_hz INT,pad INT,flen INT,crc INT"),
+      ("zstdFrames", TrainingOps.zstdFrames _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,z_off BIGINT," +
+        "kind STRING,btype STRING,bsize INT,last INT,fcs BIGINT"),
+      ("ebmlElements", TrainingOps.ebmlElements _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,e_off BIGINT," +
+        "level INT,id_hex STRING,esize BIGINT,hdr_len INT"),
+      ("oggPages", TrainingOps.oggPages _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,p_off BIGINT," +
+        "flags INT,granule BIGINT,serial BIGINT,seq BIGINT,n_segs INT," +
+        "body_len INT,n_packets INT,crc_ok INT"),
+      ("tfrecordRecords", TrainingOps.tfrecordRecords _,
+        "doc_id BIGINT NOT NULL,status STRING,idx INT,r_off BIGINT," +
+        "rec_len BIGINT,len_crc_ok INT,data_crc_ok INT," +
+        "payload_md5 STRING"),
+      ("parquetFooter", TrainingOps.parquetFooter _,
+        "doc_id BIGINT NOT NULL,status STRING,footer_len BIGINT," +
+        "footer_off BIGINT,n_bytes INT NOT NULL"),
+      ("gifBlocks", TrainingOps.gifBlocks _,
+        "doc_id BIGINT NOT NULL,status STRING,width INT,height INT," +
+        "frames INT,extensions INT,subblocks INT,n_bytes INT NOT NULL"),
+      ("flacBlocks", TrainingOps.flacBlocks _,
+        "doc_id BIGINT NOT NULL,status STRING,n_blocks INT," +
+        "sample_rate INT,channels INT,bits_per_sample INT," +
+        "total_samples BIGINT,audio_bytes BIGINT,n_bytes INT NOT NULL"),
+      ("protoFields", TrainingOps.protoFields _,
+        "doc_id BIGINT NOT NULL,status STRING,n_fields INT," +
+        "n_varint INT,n_len INT,n_fixed32 INT,n_fixed64 INT," +
+        "max_field_no BIGINT,n_bytes INT NOT NULL"),
+      ("webpChunks", TrainingOps.webpChunks _,
+        "doc_id BIGINT NOT NULL,status STRING,format STRING,width INT," +
+        "height INT,n_chunks INT,n_bytes INT NOT NULL"),
+      ("avroBlocks", TrainingOps.avroBlocks _,
+        "doc_id BIGINT NOT NULL,status STRING,codec STRING,idx INT," +
+        "b_off BIGINT,n_objects BIGINT,n_bytes BIGINT,sync_ok INT," +
+        "payload_md5 STRING"),
+      ("jsonlRecords", TrainingOps.jsonlRecords _,
+        "doc_id BIGINT NOT NULL,idx INT NOT NULL,l_off BIGINT NOT NULL," +
+        "l_len BIGINT NOT NULL,kind STRING,valid INT NOT NULL," +
+        "payload_md5 STRING"),
+      ("npyHeaders", TrainingOps.npyHeaders _,
+        "doc_id BIGINT NOT NULL,status STRING,version STRING," +
+        "descr STRING,fortran BOOLEAN,n_dims INT,n_elems BIGINT," +
+        "item_size INT,header_len BIGINT,data_len BIGINT"),
+      ("safetensorsHeaders", TrainingOps.safetensorsHeaders _,
+        "doc_id BIGINT NOT NULL,status STRING,name STRING,dtype STRING," +
+        "n_dims INT,n_elems BIGINT,item_size INT,off_begin BIGINT," +
+        "off_end BIGINT,header_len BIGINT,data_len BIGINT"))
+    assert(walkers.length == 25)
+    val input = Seq((1L, null: Array[Byte]), (2L, Array.emptyByteArray))
+      .toDF("doc_id", "payload")
+    for ((name, walk, ddl) <- walkers) {
+      val out = walk(sp, input)
+      assert(out.schema.toDDL == ddl, s"$name: schema drifted")
+      val rows = out.collect().groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.map(_.toSeq.tail).toSeq }
+      assert(rows.getOrElse(1L, Nil) == rows.getOrElse(2L, Nil),
+        s"$name: a NULL payload must walk exactly as an empty one")
+      if (name == "jsonlRecords") assert(rows.isEmpty) // no line, no row
+      else {
+        // charset's verdict column is `detected`; every other walker's is `status`
+        val verdict = out.schema.fieldIndex(if (name == "charsetDetect") "detected" else "status")
+        for (id <- Seq(1L, 2L)) {
+          assert(rows(id).length == 1, s"$name: one row per doc")
+          assert(rows(id).head(verdict - 1) != null, s"$name: NULL verdict")
+        }
+      }
+    }
+  }
+
   test("utf-8 validator == JVM strict decoder (differential, 500 random + mutated-valid cases)") {
     val sp = spark; import sp.implicits._
     def strictValid(b: Array[Byte]): Boolean =
@@ -5227,7 +5340,13 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (115L, hand("""{"a":{"dtype":"U8","shape":[07],"data_offsets":[0,7]}}""", 7)),
       // a zero-size tensor sharing its begin with a non-zero tensor is
       // a spec-valid gap-free cover regardless of tensor names
-      (116L, hand("""{"a":{"dtype":"U8","shape":[4],"data_offsets":[0,4]},"z":{"dtype":"U8","shape":[0],"data_offsets":[4,4]},"b":{"dtype":"U8","shape":[4],"data_offsets":[4,8]}}""", 8)))
+      (116L, hand("""{"a":{"dtype":"U8","shape":[4],"data_offsets":[0,4]},"z":{"dtype":"U8","shape":[0],"data_offsets":[4,4]},"b":{"dtype":"U8","shape":[4],"data_offsets":[4,8]}}""", 8)),
+      // a 19-digit dimension and offset still fit an int64: parsed, the
+      // tensor row emitted (the 3-byte buffer is short of its cover)
+      (117L, hand("""{"a":{"dtype":"U8","shape":[1000000000000000000],"data_offsets":[0,1000000000000000000]}}""", 3)),
+      // a grammar-valid 25-digit offset overflows int64: bad_schema,
+      // not bad_json
+      (118L, hand("""{"a":{"dtype":"U8","shape":[1],"data_offsets":[0,1000000000000000000000000]}}""", 1)))
       .toDF("doc_id", "payload")
     val er = TrainingOps.safetensorsHeaders(spark, extra).collect()
       .groupBy(_.getLong(0)).map { case (k, v) => k -> v }
@@ -5250,6 +5369,10 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(er(114L).head.getString(1) == "bad_json")
     assert(er(115L).head.getString(1) == "bad_json")
     assert(er(116L).length == 3 && er(116L).forall(_.getString(1) == "ok"))
+    val big = er(117L).head
+    assert(big.getString(1) == "short_data" && big.getString(2) == "a" &&
+      big.getLong(5) == 1000000000000000000L && big.getLong(8) == 1000000000000000000L)
+    assert(er(118L).head.getString(1) == "bad_schema" && er(118L).head.isNullAt(2))
   }
 
   test("safetensors headers: totality on random / length-prefixed / bit-flipped payloads, taxonomy closed") {
@@ -5313,6 +5436,19 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out((4L, "a")) == "missing_tensor")
     assert(out((9L, "a")) == "missing_shard")
     assert(out.size == 8)
+    // shard 5's rows carry mixed statuses: the failure must win the
+    // per-shard reduction (lexicographic min would pick 'ok'); shard 6's
+    // ok row has a NULL element count, which is a mismatch, never
+    // 'consistent'
+    val mixed = TrainingOps.tensorShardAudit(
+      Seq((5L, "ok", Option("a"), Option("F32"), Option(6L)),
+        (5L, "short_data", Option("b"), Option("F32"), Option(2L)),
+        (6L, "ok", Option("a"), Option("F32"), None: Option[Long]))
+        .toDF("doc_id", "status", "name", "dtype", "n_elems"),
+      Seq((5L, "a", "F32", 6L), (6L, "a", "F32", 6L))
+        .toDF("shard", "name", "exp_dtype", "exp_elems"))
+      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getString(7)).toMap
+    assert(mixed == Map((5L, "a") -> "unreadable_shard", (6L, "a") -> "shape_mismatch"))
     graft.spark.Caches.drain()
   }
 
