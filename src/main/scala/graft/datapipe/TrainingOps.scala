@@ -7412,14 +7412,15 @@ object TrainingOps extends Serializable {
     * status by severity (m31 stamps one status on every row of a shard,
     * but a caller's mixed rows must not mask a failure: any failure
     * beats `empty`, which beats `ok`) plus the ok-file tensor rows, then
-    * full-outer joined on (shard, name) with the p19/p20 NULL-side
-    * convention (absent ≠ zero). Verdict ladder (first match wins):
-    * missing_shard (manifest names a shard no file walk saw) >
-    * unreadable_shard (file present but its walk status is a failure —
-    * every expected tensor of that shard gets the rung, so a repair job
-    * sees the full blast radius; the legal zero-tensor `empty` file is
-    * READABLE and falls through to missing_tensor instead) >
-    * missing_tensor > unexpected_tensor >
+    * full-outer joined on (shard, name), then on shard with the status,
+    * the p19/p20 NULL-side convention (absent ≠ zero); a non-ok shard the
+    * manifest does not name gets one row with `name` NULL. Verdict ladder
+    * (first match wins): missing_shard (manifest names a shard no file
+    * walk saw) > unreadable_shard (walk status is a failure — every
+    * expected tensor of that shard gets the rung, so a repair job sees
+    * the full blast radius; the legal zero-tensor `empty` file is
+    * READABLE and falls through) > unexpected_shard (an `empty` file the
+    * manifest does not name) > missing_tensor > unexpected_tensor >
     * shape_mismatch (dtype or element-count disagreement, a NULL on
     * either side included) > consistent.
     *
@@ -7433,19 +7434,19 @@ object TrainingOps extends Serializable {
     // every shard executes twice in one job
     val hdr = headers
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).registered
-    // a failure (0) beats `empty` (1) beats `ok` (2); a NULL status
-    // ranks last, so, as under `min`, it never masks a real one
-    val severity = when(col("status").isNull, 3).when(col("status") === "ok", 2)
+    // a failure (0) beats `empty` (1) beats `ok` (2); a NULL status is
+    // dropped, so it never masks a real one (an all-NULL shard is unseen)
+    val severity = when(col("status") === "ok", 2)
       .when(col("status") === "empty", 1).otherwise(0)
-    val status = hdr.groupBy(col("doc_id").as("shard"))
+    val status = hdr.filter(col("status").isNotNull).groupBy(col("doc_id").as("shard"))
       .agg(min(struct(severity, col("status"))).getField("status").as("status"))
     val h = hdr.filter(col("status") === "ok")
       .select(col("doc_id").as("shard"), col("name"), col("dtype"),
         col("n_elems"))
     val e = expected.select(col("shard"), col("name"), col("exp_dtype"),
       col("exp_elems"))
-    h.join(e, Seq("shard", "name"), "full_outer")
-      .join(status, Seq("shard"), "left")
+    h.join(e, Seq("shard", "name"), "full_outer").withColumn("known", lit(true))
+      .join(status, Seq("shard"), "full_outer")
       .select(col("shard"), col("name"), col("dtype"), col("exp_dtype"),
         col("n_elems"), col("exp_elems"), col("status"),
         when(col("status").isNull, lit("missing_shard"))
@@ -7454,6 +7455,7 @@ object TrainingOps extends Serializable {
           // must not be told to quarantine a well-formed file
           .when(col("status") =!= "ok" && col("status") =!= "empty",
             lit("unreadable_shard"))
+          .when(col("known").isNull, lit("unexpected_shard"))
           .when(col("dtype").isNull, lit("missing_tensor"))
           .when(col("exp_dtype").isNull, lit("unexpected_tensor"))
           .when(!(col("dtype") <=> col("exp_dtype")) ||

@@ -1,13 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
 /** The extraction job spine (SURVEY.md par 3.1 "Spark equivalent"):
   *
   *   pages --size gate--> mapPartitions(kernel)   [map-only, in the scan stage]
-  *     --repartition(buckets*salt, salted url-hash)--> partition-local dedup
+  *     --repartition(bucket, salt)--> partition-local dedup
   *     --> bucketed write
   *
   * One shuffle total, and it carries EXTRACTED RESULTS (text + spans,
@@ -19,7 +19,9 @@ import graft.core._
   * derives from the url so re-crawls of the same url always co-locate.
   * Latest warc_ts wins (deterministic; re-crawled pages keep the newest
   * capture), via a spill-aware sortWithinPartitions rather than a
-  * hash-map, so a hot partition cannot OOM.
+  * hash-map, so a hot partition cannot OOM. The exchange names no
+  * partition count, so AQE coalesces its reduce side to the bytes
+  * shuffled; it merges only whole partitions, so re-crawls stay together.
   *
   * The kernel is a per-executor object (JVM lazy singleton = the
   * reference's double-checked-lock engine cache,
@@ -47,9 +49,8 @@ object ExtractPipeline {
     * bucket-level commit atomicity is preserved by the partitioned write
     * (north_rule: "salted repartition for skewed hosts").
     */
-  def saltedKey(conf: ExtractConf) =
-    concat_ws("#", col("bucket"),
-      pmod(xxhash64(col("url"), lit(0x5a17)), lit(conf.salt)))
+  def saltedKey(conf: ExtractConf, bucket: Column = col("bucket"), url: Column = col("url")): Seq[Column] =
+    Seq(bucket, pmod(xxhash64(url, lit(0x5a17)), lit(conf.salt)).cast("int"))
 
   /** Ingest prep: derive the commit bucket and apply the cheap Catalyst
     * size gate first (fail-fast ordering — the reference checks size
@@ -72,7 +73,6 @@ object ExtractPipeline {
     */
   def extractFrom(bucketed: DataFrame, conf: ExtractConf)(implicit spark: SparkSession): Dataset[ResultRow] = {
     import spark.implicits._
-    val numParts = math.max(conf.buckets, spark.sparkContext.defaultParallelism)
     val kernelOut = bucketed
       // warc_ts as raw epoch micros: decoding to java.sql.Timestamp costs
       // an allocation + calendar math per row for a value only compared
@@ -93,9 +93,7 @@ object ExtractPipeline {
         }
       }
     kernelOut
-      .repartition(numParts * conf.salt,
-        concat_ws("#", col("r.bucket"),
-          pmod(xxhash64(col("r.url"), lit(0x5a17)), lit(conf.salt))))
+      .repartition(saltedKey(conf, col("r.bucket"), col("r.url")): _*)
       // spill-aware clustering of re-crawls; ties broken by text so the
       // survivor is deterministic even for same-ts crawls
       .sortWithinPartitions(col("r.url"), col("ts").desc, col("r.text"))

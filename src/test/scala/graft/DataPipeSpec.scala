@@ -5449,6 +5449,18 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("shard", "name", "exp_dtype", "exp_elems"))
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getString(7)).toMap
     assert(mixed == Map((5L, "a") -> "unreadable_shard", (6L, "a") -> "shape_mismatch"))
+    // shards 7 and 8 are not in the manifest and not ok: each gets one
+    // row with name NULL (a failed walk is unreadable, an empty file is
+    // unexpected); shard 0 keeps its tensor row
+    val unknown = TrainingOps.tensorShardAudit(
+      Seq((0L, "ok", Option("a"), Option("F32"), Option(6L)),
+        (7L, "bad_json", None: Option[String], None: Option[String], None: Option[Long]),
+        (8L, "empty", None: Option[String], None: Option[String], None: Option[Long]))
+        .toDF("doc_id", "status", "name", "dtype", "n_elems"),
+      Seq((0L, "a", "F32", 6L)).toDF("shard", "name", "exp_dtype", "exp_elems"))
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getString(6)) -> r.getString(7)).toMap
+    assert(unknown == Map((0L, Some("a"), "ok") -> "consistent",
+      (7L, None, "bad_json") -> "unreadable_shard", (8L, None, "empty") -> "unexpected_shard"))
     graft.spark.Caches.drain()
   }
 

@@ -173,6 +173,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       ExtractMain.Args(input = sfDir, table = root, runId = "b",
         buckets = conf.buckets, salt = conf.salt, maxBytes = conf.maxBytes))
     assert(l1.nonEmpty && l2.isEmpty && rows2 == 0)
+    // AQE coalesces the salted exchange, so each bucket's rows reach the
+    // commit from one task: one data file per committed bucket
+    val files = l1.map { lg =>
+      Paths.get(LakehouseIO.dataDir(root).toUri.getPath, s"bucket=${lg.bucket}").toFile.listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    }
+    assert(files.forall(_ == 1), s"data files per bucket: ${files.mkString(",")}")
   }
 
   // ------------------------------------------------------------------- skew
@@ -182,7 +189,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val bucketed = ExtractPipeline.prepared(PagesGen.fromDocuments(spark, sfDir), conf)
     val parts = bucketed
-      .repartition(conf.buckets * conf.salt, ExtractPipeline.saltedKey(conf))
+      .repartition(conf.buckets * conf.salt, ExtractPipeline.saltedKey(conf): _*)
       .mapPartitions(it => Iterator.single(it.size))
       .collect()
     val nonEmpty = parts.filter(_ > 0)

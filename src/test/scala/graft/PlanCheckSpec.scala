@@ -314,6 +314,32 @@ class PlanCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"lineitem scan reads ${scanOf("lineitem").requiredSchema.fieldNames.mkString(",")}")
   }
 
+  test("extraction spine: one by-column salted exchange, coalesced by AQE at run time") {
+    // A counted repartition plans as REPARTITION_BY_NUM, which AQE never
+    // coalesces: every commit would run that fixed count of write tasks
+    // and files, a 20-document micro-batch included. By column, the
+    // reduce side shrinks to the bytes actually shuffled.
+    implicit val s: SparkSession = spark
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, AQEShuffleReadExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL
+    def spine() = graft.spark.ExtractPipeline.run(
+      graft.gen.PagesGen.fromDocuments(spark, sfDir), SparkEntry.conf)
+    val static = spine().queryExecution.executedPlan
+    assert(shuffles(static).map(_.shuffleOrigin) == Seq(REPARTITION_BY_COL),
+      s"spine: expected exactly one REPARTITION_BY_COL exchange:\n$static")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val ds = spine()
+      ds.collect()
+      val adaptive = ds.queryExecution.executedPlan
+      assert(adaptive.isInstanceOf[AdaptiveSparkPlanExec], s"spine: plan is not adaptive:\n$adaptive")
+      // the helper's collect descends into the finished query stages
+      val reads = new AdaptiveSparkPlanHelper {}.collect(adaptive) { case r: AQEShuffleReadExec => r }
+      assert(reads.length == 1 && reads.head.hasCoalescedPartition, s"spine: no coalesced read:\n$adaptive")
+      assert(reads.head.child.asInstanceOf[ShuffleQueryStageExec].shuffle.shuffleOrigin == REPARTITION_BY_COL)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "false")
+  }
+
   test("t22 bounded postings use the object-hash TypedImperativeAggregate path") {
     val p = planOf("t22_inverted_index")
     val oha = p.collect {
